@@ -1,8 +1,8 @@
 """Measure the COW append fast-path on a time-ordered-arrival CDC stream.
 
 The default bench workload (`benchgen arrival="shuffled"`) interleaves
-insert keys across the whole id range every batch — the adversarial
-shape where only the (off-by-default) scan tier could append. This
+insert keys across the whole id range every batch — the shape the
+zone maps cannot prove and the merge-proven two-stream tier covers. This
 harness runs the OTHER canonical CDC shape: inserts arriving in key
 order (auto-increment PKs / snowflake ids / event time;
 ``arrival="sorted"``), where the zone-map metadata tier proves
@@ -36,7 +36,6 @@ def _data_bytes(root: str) -> int:
 def run_leg(
     spark, fastpath: bool, n_events: int, n_batches: int, seed: int,
     inserts_only: bool = False, arrival: str = "sorted",
-    scan_ratio: float | None = None,
 ) -> dict:
     from image_report_spark.benchgen import write_bench_log
     from image_report_spark.config import EngineConfig
@@ -58,7 +57,6 @@ def run_leg(
             config=EngineConfig(
                 num_buckets=128, shuffle_partitions=64,
                 cow_append_fastpath=fastpath,
-                cow_append_scan_min_ratio=scan_ratio,
             ),
         )
         t0 = time.monotonic()
@@ -89,13 +87,7 @@ def main() -> None:
     # so the off-leg's O(N²) rewrite vs the on-leg's O(N) append shows up
     # directly in wall clock as the table outgrows the batch size
     inserts_only = "--inserts-only" in sys.argv
-    # --arrival shuffled + --scan-ratio R: the SCAN-tier experiment — on
-    # interleaved keys only the keys-only scan can append, so this settles
-    # whether cow_append_scan_min_ratio should default on
     arrival = "shuffled" if "--arrival-shuffled" in sys.argv else "sorted"
-    scan_ratio = None
-    if "--scan-ratio" in sys.argv:
-        scan_ratio = float(sys.argv[sys.argv.index("--scan-ratio") + 1])
     from bench import build_spark
 
     spark = build_spark(32)
@@ -110,12 +102,9 @@ def main() -> None:
             order = (True, False) if rep % 2 == 0 else (False, True)
             for fp in order:
                 leg = run_leg(spark, fp, n_events, n_batches, seed=7,
-                              inserts_only=inserts_only, arrival=arrival,
-                              scan_ratio=scan_ratio if fp else None)
+                              inserts_only=inserts_only, arrival=arrival)
                 leg["inserts_only"] = inserts_only
                 leg["arrival"] = arrival
-                if fp and scan_ratio is not None:
-                    leg["scan_ratio"] = scan_ratio
                 legs.append(leg)
                 print(json.dumps(leg), flush=True)
                 out.write(json.dumps(leg) + "\n")

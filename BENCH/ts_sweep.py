@@ -49,7 +49,7 @@ for seed, genkw, cfgkw in cases:
         e = CdcEngine.init(
             spark, os.path.join(root, f"t{seed}{name}"), os.path.join(root, f"c{seed}{name}"),
             config=EngineConfig(num_buckets=8, shuffle_partitions=8,
-                                cow_two_stream=ts, cow_two_stream_min_rows=0,
+                                cow_two_stream=ts,
                                 cow_two_stream_min_ratio=0.0,
                                 cow_two_stream_max_files=3,
                                 hot_key_threshold=40, **cfgkw),

@@ -96,11 +96,6 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
                     help="disable the COW append fast-path (insert-only "
                          "partitions with provably disjoint keys append a "
                          "new file instead of rewriting the partition)")
-    sp.add_argument("--append-scan-ratio", type=float, default=None,
-                    help="enable the fast-path's keys-only overlap SCAN "
-                         "tier when candidate incumbent rows are at least "
-                         "this multiple of the batch rows (default: off; "
-                         "the zero-cost zone-map tier is always on)")
 
     sp = sub.add_parser("compact")
     sp.add_argument("--table", required=True)
@@ -204,7 +199,6 @@ def main(argv: list[str] | None = None) -> int:
             grouped_resolve=args.grouped_resolve,
             write_mode=args.write_mode,
             cow_append_fastpath=not args.no_append_fastpath,
-            cow_append_scan_min_ratio=args.append_scan_ratio,
             mor_compact_delta_ratio=args.compact_delta_ratio,
             partstats_mode=args.partstats_mode,
         )

@@ -11,7 +11,6 @@ hashes — cheap ledger columns the engine computes and records per batch.
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass, field
 
 
@@ -148,12 +147,12 @@ class EngineConfig:
 
     #: copy-on-write APPEND fast-path. A touched partition whose batch
     #: slice is pure inserts (every event op == 'I') and whose keys have
-    #: ZERO overlap with the incumbent's keys (verified by a keys-only
-    #: columnar scan + semi-join — live rows AND tombstones both count as
-    #: overlap, so appended partitions keep the one-live-row-per-key
-    #: invariant) is APPENDED instead of rewritten: the batch's resolved
-    #: winners land in a new file, the incumbent files carry forward in
-    #: the manifest verbatim, and the partition's lineage stats combine
+    #: ZERO overlap with the incumbent's keys (live rows AND tombstones
+    #: both count as overlap, so appended partitions keep the
+    #: one-live-row-per-key invariant) is APPENDED instead of rewritten:
+    #: the batch's resolved winners land in a new file, the incumbent
+    #: files carry forward in the manifest verbatim, and the partition's
+    #: lineage stats combine
     #: exactly (the checksum is an order-independent ``bit_xor`` of
     #: per-row hashes, so ``old XOR new`` equals what a full rewrite
     #: would store; guarded by a per-entry checksum-column-set id so a
@@ -163,34 +162,18 @@ class EngineConfig:
     #: instead of N/2 times — at 100 TB that's the difference between a
     #: load that works and one that re-encodes the table every batch.
     #: Update/delete-containing buckets take the normal merge path with
-    #: zero added cost (the classification scan only runs on all-insert
-    #: buckets). False forces full rewrites (pre-round-5 behavior).
+    #: zero added cost. False forces full rewrites (pre-round-5 behavior).
     #:
     #: Two detection tiers:
-    #: * METADATA (always on with the fast-path): per-partition key
-    #:   [lo, hi] zone maps stored in the manifest vs the batch bucket's
-    #:   key range from the prepass — strictly disjoint ranges prove key
-    #:   disjointness with ZERO extra jobs. Monotonic insert keys
-    #:   (auto-increment ids, snowflakes, event time — the classic CDC
-    #:   insert pattern) append on metadata alone.
-    #: * SCAN (gated by ``cow_append_scan_min_ratio``): a keys-only
-    #:   columnar scan of the remaining candidates semi-joined with the
-    #:   batch's keys — catches interleaved-but-disjoint key sets the
-    #:   zone maps can't prove.
+    #: * METADATA: per-partition key [lo, hi] zone maps stored in the
+    #:   manifest vs the batch bucket's key range from the prepass —
+    #:   strictly disjoint ranges prove key disjointness with ZERO extra
+    #:   jobs. Monotonic insert keys (auto-increment ids, snowflakes,
+    #:   event time — the classic CDC insert pattern) append on metadata
+    #:   alone.
+    #: * MERGE-PROVEN (``cow_two_stream``): interleaved-but-disjoint key
+    #:   sets the zone maps can't prove are proven by the merge itself.
     cow_append_fastpath: bool = True
-
-    #: gate for the append fast-path's SCAN tier: the keys-only overlap
-    #: scan runs only when the candidates' incumbent rows (the rewrite
-    #: it would avoid) are at least this multiple of the batch rows
-    #: landing in them (the scan's cost scales with incumbent keys; the
-    #: saving scales with incumbent payload bytes). ``None`` (default)
-    #: disables the scan tier: it costs two extra Spark jobs per
-    #: insert-only batch, and the sandbox's congested windows have not
-    #: yet yielded a clean measurement proving it nets out at bench
-    #: shape (BENCH/BASELINE.md round 5 records the attempts); the
-    #: zero-cost metadata tier stays on regardless. Set ~2-4 on tables
-    #: with wide payloads and random-key insert streams.
-    cow_append_scan_min_ratio: float | None = None
 
     #: COW two-stream merge — the append fast-path's MERGE-PROVEN tier
     #: (guide §2.2: shuffle fewer bytes). A rewrite partition whose batch
@@ -201,7 +184,7 @@ class EngineConfig:
     #: winner file is provably key-disjoint from the incumbent, so it
     #: APPENDS and the incumbent files carry forward — the append
     #: fast-path outcome for the interleaved key ranges the zone-map tier
-    #: cannot prove and without the scan tier's two extra per-batch jobs.
+    #: cannot prove, with no extra per-batch job.
     #: Non-zero (an insert re-used an existing or tombstoned key) ⇒ one
     #: narrow keys semi-join pinpoints the overlapping partitions, which
     #: are rebuilt as written winners + a map-only broadcast anti-join
@@ -217,33 +200,8 @@ class EngineConfig:
     #: two-stream partition none of whose batch events win keeps its old
     #: files verbatim (metadata carry-forward — a stale re-insert flood
     #: rewrites nothing). Requires ``cow_append_fastpath`` (False must
-    #: keep forcing full rewrites, as documented there). The env override
-    #: ``SPARK_GRAFT_COW_TWO_STREAM=0`` exists for A/B measurement
-    #: against the fused path.
-    cow_two_stream: bool = field(
-        default_factory=lambda: os.environ.get("SPARK_GRAFT_COW_TWO_STREAM", "1")
-        != "0"
-    )
-
-    #: exact bucket→shuffle-partition placement for the fused COW merge
-    #: (operators/shards.py): repartition on a murmur3-preimage proxy of
-    #: ``pmod(p, n_shards)`` so every merge stage runs uniform waves of
-    #: exactly-placed tasks instead of the hash-collision + AQE-coalesced
-    #: 10–36 task shapes (guide §2.5). Placement only: same rows per
-    #: bucket, same window groups, same files (pinned in
-    #: tests/test_shards.py). DEFAULT OFF, measured: on warm local[32]
-    #: the AQE-sized exchange wins every order-alternated pair
-    #: (write+merge 14.0–14.9 s vs 15.6–18.1 s at 32/64/128 shards on
-    #: the 2 M × 8 bench workload) — staggered, size-aware tasks mask
-    #: this host's hypervisor steal better than synchronized uniform
-    #: waves, and extra tasks pay a fixed ~0.1 s deserialize cost.
-    #: ``SPARK_GRAFT_MERGE_SHARDS=1`` (or a shard count >1) opts in —
-    #: the shape to re-measure on a real cluster where shuffle blocks
-    #: cross a network and AQE coalescing targets MB-scale partitions.
-    merge_exact_shards: bool = field(
-        default_factory=lambda: os.environ.get("SPARK_GRAFT_MERGE_SHARDS", "0")
-        not in ("0", "")
-    )
+    #: keep forcing full rewrites, as documented there).
+    cow_two_stream: bool = True
 
     #: a partition is two-stream-eligible only while its incumbent file
     #: count is below this bound; at/above it the batch takes the fused
@@ -254,12 +212,6 @@ class EngineConfig:
     #: append-path concern — this tier self-bounds). 8 ≈ Iceberg-style
     #: "compact every few commits" amortization.
     cow_two_stream_max_files: int = 8
-
-    #: minimum total incumbent rows across the candidate partitions for
-    #: two-stream to engage. The clean insert case adds zero extra jobs,
-    #: so the default is 0 (always on); raise it to shield tiny tables
-    #: from the rare-overlap path's check + survivor jobs.
-    cow_two_stream_min_rows: int = 0
 
     #: per-partition engagement ratio: a partition is two-stream-eligible
     #: only when its incumbent rows are at least this multiple of the
@@ -348,9 +300,7 @@ class EngineConfig:
     #: append-path xor-combines never mix definitions (the per-entry
     #: ``ck_id`` additionally tags the mode). Checksums are an internal
     #: integrity contract; no external system consumes their values.
-    rowhash_mode: str = field(
-        default_factory=lambda: os.environ.get("SPARK_GRAFT_ROWHASH", "typed")
-    )
+    rowhash_mode: str = "typed"
 
     selected_metrics: set[str] = field(init=False, repr=False)
 
@@ -387,8 +337,6 @@ class EngineConfig:
             )
         if self.cow_two_stream_max_files < 1:
             raise ValueError("cow_two_stream_max_files must be >= 1")
-        if self.cow_two_stream_min_rows < 0:
-            raise ValueError("cow_two_stream_min_rows must be >= 0")
         if self.cow_two_stream_min_ratio < 0:
             raise ValueError("cow_two_stream_min_ratio must be >= 0")
         if self.num_buckets < 1:

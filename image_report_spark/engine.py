@@ -30,7 +30,6 @@ Everything is DataFrame ops + window functions + Arrow-vectorized pandas
 from __future__ import annotations
 
 import os
-import sys
 import time
 import zlib
 from concurrent.futures import ThreadPoolExecutor
@@ -56,7 +55,6 @@ from image_report_spark.functions.digests import (
 )
 from image_report_spark.operators.evolution import reconcile_schema
 from image_report_spark.operators.resolve import resolve_lww_grouped
-from image_report_spark.operators.shards import shard_expr_sql
 from image_report_spark.operators.skew import detect_hot_keys, salt_hot_keys
 from image_report_spark.plans.checkpoint import Checkpoint
 from image_report_spark.plans.icelite import IceliteTable, partition_expr, PART_COL
@@ -508,9 +506,9 @@ class CdcEngine:
                 # event time) append on metadata alone
                 F.min(F.when(~malformed, F.col("conv_id"))).alias("klo"),
                 F.max(F.when(~malformed, F.col("conv_id"))).alias("khi"),
-                # null merge keys: SQL equality never matches them (the scan
-                # tier would miss the overlap) yet the merge window groups
-                # them — buckets carrying any null key never fast-path
+                # null merge keys: SQL equality never matches them (a keys
+                # semi-join would miss the overlap) yet the merge window
+                # groups them — buckets carrying any null key never fast-path
                 F.sum(
                     F.when(
                         ~malformed
@@ -529,21 +527,18 @@ class CdcEngine:
         prepass_rows: list | None = None,
     ) -> BatchReport:
         t0 = time.monotonic()
-        _timing = os.environ.get("IRS_TIMING") == "1"
         _last = [t0]
         cfg = self.config
         rpt = BatchReport(batch_id=batch_id)
 
         # per-phase durations land in the ledger as a selectable metric
         # (graft of the reference's per-section duration_sec attributes,
-        # ir:218-221,347-353); IRS_TIMING=1 additionally echoes to stderr
+        # ir:218-221,347-353)
         def _tick(phase: str) -> None:
             now = time.monotonic()
             rpt.phase_ms[phase] = rpt.phase_ms.get(phase, 0) + int(
                 (now - _last[0]) * 1000
             )
-            if _timing:
-                print(f"# b{batch_id} {phase}: {now - _last[0]:.2f}s", file=sys.stderr)
             _last[0] = now
         snap = self.table.snapshot()
         logical = self.table.logical_schema(snap)
@@ -677,122 +672,35 @@ class CdcEngine:
                 if hot_buckets
                 else F.lit(0)
             )
-            # COW append fast-path: partitions whose batch slice is pure
-            # inserts with zero key overlap against the incumbent are
-            # APPENDED — their incumbents never enter the union (no read,
-            # no re-sort, no re-encode); manifest stats xor-combine below.
-            # The overlap check is a keys-only columnar scan (3 narrow
-            # columns) of candidate partitions semi-joined with the
-            # batch's keys; update/delete buckets skip it entirely.
+            # COW append fast-path, METADATA tier: a partition whose batch
+            # slice is pure inserts and whose key range (from the prepass)
+            # is strictly disjoint from the entry's stored [key_lo, key_hi]
+            # zone map is APPENDED with zero extra jobs — its incumbent
+            # never enters the union (no read, no re-sort, no re-encode);
+            # manifest stats xor-combine below. Monotonic insert keys
+            # append here; interleaved-but-disjoint keys are proven by the
+            # merge itself (the two-stream tier below).
             ck_id = _checksum_cols_id(checksum_cols, rowhash_mode)
             append_parts: set[int] = set()
             if cfg.cow_append_fastpath:
-                insert_only = {
-                    int(r[PART_COL])
-                    for r in bucket_rows
-                    if int(r["noni"] or 0) == 0
-                    and int(r["nullk"] or 0) == 0
-                    and int(r["n"]) - int(r["bad"] or 0) > 0
-                }
-                cand = [
-                    p
-                    for p in touched
-                    if p in insert_only
-                    and (e := old_entries.get(p)) is not None
-                    and e.get("files")
-                    and not e.get("delta_files")
-                    and e.get("checksum") is not None
-                    and e.get("ck_id") == ck_id
-                ]
-                # tier 1 — METADATA: the batch bucket's key range (from the
-                # prepass) vs the entry's stored zone map. Strictly disjoint
-                # conv_id ranges ⇒ keys disjoint ⇒ append, zero extra jobs.
-                bucket_range = {
-                    int(r[PART_COL]): (r["klo"], r["khi"]) for r in bucket_rows
-                }
-                for p in list(cand):
-                    e = old_entries[p]
-                    lo, hi = e.get("key_lo"), e.get("key_hi")
-                    blo, bhi = bucket_range.get(p, (None, None))
+                for r in bucket_rows:
+                    e = old_entries.get(int(r[PART_COL]))
                     if (
-                        lo is not None
-                        and hi is not None
-                        and blo is not None
-                        and bhi is not None
-                        and (bhi < lo or blo > hi)
+                        int(r["noni"] or 0) == 0
+                        and int(r["nullk"] or 0) == 0
+                        and int(r["n"]) - int(r["bad"] or 0) > 0
+                        and e is not None
+                        and e.get("files")
+                        and not e.get("delta_files")
+                        and e.get("checksum") is not None
+                        and e.get("ck_id") == ck_id
+                        and e.get("key_lo") is not None
+                        and e.get("key_hi") is not None
+                        and r["klo"] is not None
+                        and r["khi"] is not None
+                        and (r["khi"] < e["key_lo"] or r["klo"] > e["key_hi"])
                     ):
-                        append_parts.add(p)
-                        cand.remove(p)
-                # tier 2 — SCAN: remaining candidates get the keys-only
-                # columnar scan + semi-join (range overlap is NOT key
-                # overlap: interleaved-but-distinct keys still append
-                # here). Ratio-gated: only worth two extra jobs when the
-                # avoided rewrite is a large multiple of the appended rows.
-                scan_ratio = cfg.cow_append_scan_min_ratio
-                if scan_ratio is None:
-                    cand = []
-                elif cand:
-                    inc_rows = sum(
-                        int(old_entries[p]["row_count"]) for p in cand
-                    )
-                    cand_rows = sum(
-                        int(r["n"]) - int(r["bad"] or 0)
-                        for r in bucket_rows
-                        if int(r[PART_COL]) in set(cand)
-                    )
-                    if inc_rows < scan_ratio * max(cand_rows, 1):
-                        cand = []
-                if cand:
-                    from image_report_spark.plans.icelite import physical_schema
-
-                    phys = physical_schema(evolved)
-                    key_fields = {PART_COL, "conv_id", "turn_idx"}
-                    narrow = StructType(
-                        [f for f in phys.fields if f.name in key_fields]
-                    )
-                    cand_set = set(cand)
-                    cand_files = [
-                        os.path.join(self.table.root, f)
-                        for p in cand
-                        for f in old_entries[p]["files"]
-                    ]
-                    # ALL incumbent rows count as overlap — including
-                    # tombstones, so an appended partition never holds two
-                    # physical rows for one key
-                    inc_keys = self.spark.read.schema(narrow).parquet(*cand_files)
-                    # key source is the PRE-dedup `good` frame, not `events`:
-                    # recomputing the boundary/anti-join lineage here would
-                    # cost an extra shuffle + checkpoint read, and a replayed
-                    # event's key exists in the incumbent by definition — it
-                    # classifies its bucket as a rewrite, which is exactly
-                    # where replay detection needs the incumbent rows anyway.
-                    # No distinct(): a semi-join probe side needs no dedup.
-                    bkeys = (
-                        good.withColumn(PART_COL, partition_expr(num_buckets))
-                        .filter(F.col(PART_COL).isin(cand))
-                        .select(PART_COL, "conv_id", "turn_idx")
-                    )
-                    n_cand_events = sum(
-                        int(r["n"]) - int(r["bad"] or 0)
-                        for r in bucket_rows
-                        if int(r[PART_COL]) in cand_set
-                    )
-                    # same broadcast size gate as the MOR classification:
-                    # bulk loads degrade to a shuffled semi-join instead of
-                    # blowing the broadcast limit
-                    if n_cand_events <= cfg.mor_broadcast_key_limit:
-                        bkeys = F.broadcast(bkeys)
-                    matched = {
-                        int(r[PART_COL])
-                        for r in inc_keys.join(
-                            bkeys, [PART_COL, "conv_id", "turn_idx"], "left_semi"
-                        )
-                        .select(PART_COL)
-                        .distinct()
-                        .collect()
-                    }
-                    append_parts |= cand_set - matched
-                    _tick("classify")
+                        append_parts.add(int(r[PART_COL]))
                 rpt.partitions_appended = len(append_parts)
             rewrite_parts = [p for p in touched if p not in append_parts]
             # COW two-stream split (guide §2.2, shuffle fewer bytes — see
@@ -837,12 +745,7 @@ class CdcEngine:
                     int(bucket_info[p]["n"]) - int(bucket_info[p]["bad"] or 0)
                     for p in cand_ts
                 )
-                n_ts_inc = sum(int(old_entries[p]["row_count"]) for p in cand_ts)
-                if (
-                    cand_ts
-                    and n_ts_events <= cfg.mor_broadcast_key_limit
-                    and n_ts_inc >= cfg.cow_two_stream_min_rows
-                ):
+                if n_ts_events <= cfg.mor_broadcast_key_limit:
                     ts_parts = cand_ts
             ts_set = set(ts_parts)
             fused_parts = [p for p in rewrite_parts if p not in ts_set]
@@ -890,41 +793,12 @@ class CdcEngine:
             # subset-satisfaction rule and buy a second Exchange
             # (asserted in tests/test_plans.py)
             u = incumbent.unionByName(evt).withColumn("_salt", salt)
-            use_shards = cfg.merge_exact_shards and not hot_buckets
-            if use_shards:
-                # exact bucket→partition placement (operators/shards.py):
-                # bucket p lands in shuffle partition p mod n_shards, so the
-                # merge stage is one full-width wave of uniform tasks —
-                # width from defaultParallelism at runtime, capped by
-                # num_buckets (the table's own scale knob), never a local
-                # core constant. The explicit count keeps AQE from re-
-                # cutting the stage to a size-based task count (measured:
-                # 10–36 tasks on 32 cores with collision skew).
-                override = int(os.environ.get("SPARK_GRAFT_MERGE_SHARDS", "0"))
-                n_shards = max(
-                    1,
-                    min(
-                        num_buckets,
-                        # wave-count A/B override: >1 forces that shard count
-                        override
-                        if override > 1
-                        else self.spark.sparkContext.defaultParallelism,
-                    ),
-                )
-                u = u.selectExpr(
-                    "*", f"{shard_expr_sql(PART_COL, n_shards)} AS _shard"
-                ).repartition(n_shards, F.col("_shard"))
-            else:
-                # salted hot buckets keep the AQE-sized exchange: the salt
-                # already spreads the hot bucket, and the shard proxy would
-                # need (bucket, salt)-pair placement to beat it
-                repart_cols = [F.col(PART_COL)] + (
-                    [F.col("_salt")] if hot_buckets else []
-                )
-                # no explicit partition count: AQE sizes/coalesces the
-                # exchange; parallelism comes from #buckets × salt, so
-                # num_buckets (not shuffle.partitions) is the scale knob
-                u = u.repartition(*repart_cols)
+            # no explicit partition count: AQE sizes/coalesces the exchange;
+            # parallelism comes from #buckets × salt, so num_buckets (not
+            # shuffle.partitions) is the scale knob
+            u = u.repartition(
+                F.col(PART_COL), *([F.col("_salt")] if hot_buckets else [])
+            )
             # ONE window sort serves everything: within a key, rows sharing
             # an LSN (exact replays — byte-identical; an idempotent re-apply
             # pairs the event with its incumbent) sort adjacently, so replay
@@ -936,12 +810,7 @@ class CdcEngine:
             # (built as SQL text — one driver round-trip for the whole
             # window block instead of one per Column; parses to the same
             # WindowExec, pinned by the single-exchange plan test)
-            # `_shard` is a pure function of `_p`, so prepending it to the
-            # window partition keys changes no group; it is there solely so
-            # hashpartitioning(_shard) satisfies the window's clustering
-            # (the subset rule) without a second Exchange
-            shard_pfx = "_shard, " if use_shards else ""
-            part_spec = f"PARTITION BY {shard_pfx}{PART_COL}, _salt, conv_id, turn_idx"
+            part_spec = f"PARTITION BY {PART_COL}, _salt, conv_id, turn_idx"
             order_spec = (
                 f"{part_spec} ORDER BY ts DESC NULLS LAST, "
                 "_lsn DESC NULLS LAST, _src ASC"  # exact tie → incumbent wins
@@ -1035,17 +904,12 @@ class CdcEngine:
                 cfg.partstats_mode == "stored"
                 and 0 < len(touched) <= cfg.partstats_observe_limit
             )
-            # `_shard` rides to the writer like `_salt` (constant per file →
-            # RLE'd to ~nothing, invisible to the schema-projected reads):
-            # dropping it would truncate the window's known output ordering
-            # at its leading key and force a second full sort per batch
-            extra_cols = ["_salt"] + (["_shard"] if use_shards else [])
             if cfg.partstats_mode == "reverify":
-                to_write = merged.select(*(phys_cols + extra_cols))
+                to_write = merged.select(*(phys_cols + ["_salt"]))
             else:
                 to_write = merged.withColumn(
                     "_h", _live_row_hash(merged, checksum_cols, rowhash_mode)
-                ).select(*(phys_cols + extra_cols + ["_h"]))
+                ).select(*(phys_cols + ["_salt", "_h"]))
             if use_pobs:
                 pobs = Observation(f"pstats-{batch_id}")
                 # ONE named_struct expression (single py4j call, parsed
@@ -1800,15 +1664,15 @@ class CdcEngine:
         # otherwise replay_verify reports ok=False after any schema evolution
         # even when content is identical.
         live_snap = self.table.snapshot()
+        fsnap = fresh.table.snapshot()
         live_ck = live_snap.get("checksum_columns")
         if live_ck is not None:
-            fsnap = fresh.table.snapshot()
             fsnap["checksum_columns"] = list(live_ck)
-            # the hash definition must match too, or content-identical
-            # tables report digest mismatch (same reasoning as the column
-            # set; absent field = canonical, so copy the absence as well)
-            fsnap["rowhash_mode"] = live_snap.get("rowhash_mode") or "canonical"
-            fresh.table._write_snapshot(fsnap)
+        # the hash definition must match too, or content-identical tables
+        # report digest mismatch — also for a live table without frozen
+        # checksum_columns (absent field = canonical, so copy the absence)
+        fsnap["rowhash_mode"] = live_snap.get("rowhash_mode") or "canonical"
+        fresh.table._write_snapshot(fsnap)
         fresh.run(log_dir)
         a, b = self.read(), fresh.read()
         cols = sorted(set(a.columns) & set(b.columns))

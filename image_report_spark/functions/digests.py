@@ -46,9 +46,13 @@ def row_digest(df: DataFrame, cols: list[str]) -> Column:
     return F.xxhash64(F.concat_ws(SEP, *canonical_cols(df, cols)))
 
 
-#: typed NULL sentinels for ``typed_row_digest`` — values no real row can
-#: carry (LONG_MIN microseconds is the year −290308; the string sentinel is
-#: the same control-character form the canonical digest uses)
+#: typed NULL sentinels for ``typed_row_digest``. They are representable
+#: values, so a row that really holds LONG_MIN / INT_MIN in a column hashes
+#: like a NULL there — an accepted collision for an internal checksum
+#: (LONG_MIN microseconds is the year −290308). Byte and short columns are
+#: widened to int first, so INT_MIN lies outside their range and never
+#: collides. The string sentinel is the control-character form the
+#: canonical digest uses.
 _LONG_MIN = -(1 << 63)
 _INT_MIN = -(1 << 31)
 
@@ -75,7 +79,10 @@ def typed_cols(df: DataFrame, cols: list[str]) -> list[Column]:
         elif dt == "bigint":
             out.append(F.coalesce(col, F.lit(_LONG_MIN)))
         elif dt in ("int", "smallint", "tinyint"):
-            out.append(F.coalesce(col, F.lit(_INT_MIN).cast(dt)))
+            # xxhash64 hashes byte/short values as int, so the widening
+            # leaves non-null hashes unchanged and keeps the int sentinel
+            # in range (casting it down would overflow under ANSI mode)
+            out.append(F.coalesce(col.cast("int"), F.lit(_INT_MIN)))
         elif dt == "string":
             out.append(F.coalesce(col, F.lit(NULL)))
         else:

@@ -282,8 +282,7 @@ class IceliteTable:
         # snappy/lz4 bytes (the round-5 codec A/B), so the
         # bandwidth/storage argument for zstd holds at either scale.
         self.spark.sparkContext._jsc.hadoopConfiguration().set(
-            "parquet.compression.codec.zstd.level",
-            os.environ.get("SPARK_GRAFT_ZSTD_LEVEL", "1"),
+            "parquet.compression.codec.zstd.level", "1"
         )
         out_df = df_physical.withColumn("p", F.col(PART_COL))
         if not pre_partitioned:
@@ -294,13 +293,7 @@ class IceliteTable:
         # the extra 4-byte column in the files is RLE'd to nothing and
         # ignored by schema-projected reads
         if sort_cols is None:
-            # `_shard` (exact merge placement, operators/shards.py) leads
-            # when present: the merge window's output ordering starts with
-            # it, so leading with it here is what lets the optimizer elide
-            # this sort; it is constant per bucket, so within-bucket (and
-            # therefore within-file) row order is unchanged
-            sort_cols = ["_shard"] if "_shard" in df_physical.columns else []
-            sort_cols += (
+            sort_cols = (
                 [PART_COL, "_salt", "conv_id", "turn_idx"]
                 if "_salt" in df_physical.columns
                 else [PART_COL, "conv_id", "turn_idx"]
@@ -316,10 +309,7 @@ class IceliteTable:
             # bandwidth-bound host, and at 100 TB of storage+I/O, bytes
             # are the resource. Spark's session default (snappy) was the
             # slowest of the four tested.
-            .option(
-                "compression",
-                os.environ.get("SPARK_GRAFT_DATA_CODEC", "zstd"),
-            )
+            .option("compression", "zstd")
             # dictionary encoding OFF by default for the payload columns:
             # transcript text/keys are near-unique, so the dictionary build
             # is a hash-probe per value that overflows its 1 MB page and
@@ -327,26 +317,17 @@ class IceliteTable:
             # nothing. Measured (3 order-alternated pairs, 2 M × 8 bench):
             # apply 19.3 s → 16.9 s median and 210.1 → 196.7 MB written.
             # The genuinely low-cardinality columns keep their dictionary
-            # via parquet's per-column keys. SPARK_GRAFT_PARQUET_DICT=true
-            # restores the global default for re-measurement.
-            .option(
-                "parquet.enable.dictionary",
-                os.environ.get("SPARK_GRAFT_PARQUET_DICT", "false"),
-            )
+            # via parquet's per-column keys.
+            .option("parquet.enable.dictionary", "false")
             .option("parquet.enable.dictionary#role", "true")
             .option("parquet.enable.dictionary#tool", "true")
             .option("parquet.enable.dictionary#_op", "true")
-            # per-page CRC32 (A/B via env): write-side bookkeeping nothing
-            # in the engine reads — no read path verifies page CRCs
-            # (parquet.page.verify-checksum.enabled defaults false) and the
-            # engine's own end-to-end integrity tier is the row-hash
-            # checksum + "reverify" mode. (parquet.size.statistics.enabled
-            # was also A/B'd: byte-identical files both ways on this
-            # workload — a no-op, so no knob for it.)
-            .option(
-                "parquet.page.write-checksum.enabled",
-                os.environ.get("SPARK_GRAFT_PAGE_CRC", "true"),
-            )
+            # per-page CRC32 stays on: turning it off measured a wash, and
+            # the CRCs let any parquet reader that enables
+            # parquet.page.verify-checksum.enabled detect corrupt pages
+            # (parquet.size.statistics.enabled was A/B'd too: byte-identical
+            # files both ways on this workload, so it is left at default)
+            .option("parquet.page.write-checksum.enabled", "true")
             .mode("overwrite")
             .parquet(staging)
         )

@@ -4,11 +4,11 @@ The scale argument: an insert-heavy stream (bulk load, event-log append,
 new-conversation traffic) under plain COW rewrites every touched
 partition every batch — a load of N batches re-encodes each row ~N/2
 times. The fast-path detects, per partition, "pure inserts + zero key
-overlap with the incumbent" (a keys-only scan + semi-join; tombstones
-count as overlap) and APPENDS: new file, incumbent files carried forward,
-lineage stats xor-combined (the partition checksum is an
-order-independent bit_xor of per-row hashes, so old ⊕ new is exactly the
-full-rewrite checksum).
+overlap with the incumbent" (zone maps, or the merge-proven two-stream
+tier for interleaved keys; tombstones count as overlap) and APPENDS: new
+file, incumbent files carried forward, lineage stats xor-combined (the
+partition checksum is an order-independent bit_xor of per-row hashes, so
+old ⊕ new is exactly the full-rewrite checksum).
 
 Correctness contract tested here:
 * digest + content + per-batch ledger equality against the fast-path-OFF
@@ -158,13 +158,14 @@ def test_reinsert_collision_forces_rewrite(spark, tmp_path):
     # b1 is ALL-I but re-inserts conv 0 turn 0 (later ts wins) + new convs
     _write_batch(log, 1, [_ins(100, 0, 0, "new0", ts_off_s=60)]
                  + [_ins(101 + i, 20 + i, 0, f"t{20+i}", ts_off_s=60) for i in range(8)])
-    # scan tier enabled: the colliding bucket's ranges overlap, so the
-    # zone maps can't decide — the scan must find the key MATCH and
-    # route the bucket to the rewrite path
-    on = _mk(spark, tmp_path, "on", True, cow_append_scan_min_ratio=0.0)
+    # the colliding bucket's ranges overlap, so the zone maps can't
+    # decide — the merge-proven tier must see the displaced key and route
+    # the bucket to the rewrite path
+    on = _mk(spark, tmp_path, "on", True, cow_two_stream_min_ratio=0.0)
     off = _mk(spark, tmp_path, "off", False)
     r_on = on.run(log)
     off.run(log)
+    assert r_on[1].partitions_two_stream > 0
     # some partitions appended, but NOT all: the conv-0 bucket was rewritten
     assert 0 < r_on[1].partitions_appended < r_on[1].partitions_touched
     got = _content(on)
@@ -175,20 +176,20 @@ def test_reinsert_collision_forces_rewrite(spark, tmp_path):
 
 def test_scan_tier_appends_interleaved_disjoint_keys(spark, tmp_path):
     """Key ranges overlap (evens then odds) so the metadata tier can't
-    prove disjointness — the keys-only scan tier must still discover that
+    prove disjointness — the merge-proven tier must still discover that
     the key SETS are disjoint and append."""
     log = str(tmp_path / "log")
     _write_batch(log, 0, [_ins(i, 2 * i, 0, f"e{i}") for i in range(16)])
     _write_batch(log, 1, [_ins(100 + i, 2 * i + 1, 0, f"o{i}", ts_off_s=60)
                           for i in range(16)])
-    on = _mk(spark, tmp_path, "on", True, cow_append_scan_min_ratio=0.0)
+    on = _mk(spark, tmp_path, "on", True, cow_two_stream_min_ratio=0.0)
     off = _mk(spark, tmp_path, "off", False)
     on.run(log, max_batches=1)
     b0_parts = {e["partition"] for e in on.table.snapshot()["manifest"]}
     r1 = on.run(log)[1]
     off.run(log)
     assert r1.partitions_appended > 0
-    assert "classify" in r1.phase_ms  # the scan tier ran
+    assert r1.partitions_two_stream > 0  # the merge-proven tier ran
     # every bucket with BOTH an incumbent and b1 rows appended (2 files);
     # incumbent-less buckets are plain new-partition writes
     snap = {e["partition"]: e for e in on.table.snapshot()["manifest"]}
@@ -207,10 +208,11 @@ def test_tombstone_counts_as_overlap(spark, tmp_path):
     # would carry two physical rows for one key)
     _write_batch(log, 2, [_ins(200, 0, 0, "resurrected", ts_off_s=120)]
                  + [_ins(201 + i, 30 + i, 0, f"t{30+i}", ts_off_s=120) for i in range(8)])
-    on = _mk(spark, tmp_path, "on", True, cow_append_scan_min_ratio=0.0)
+    on = _mk(spark, tmp_path, "on", True, cow_two_stream_min_ratio=0.0)
     off = _mk(spark, tmp_path, "off", False)
     r_on = on.run(log)
     off.run(log)
+    assert r_on[2].partitions_two_stream > 0
     assert r_on[2].partitions_appended < r_on[2].partitions_touched
     got = _content(on)
     winner = got[(got.conv_id == "c00000000") & (got.turn_idx == 0)]

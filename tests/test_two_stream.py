@@ -61,7 +61,6 @@ def _mk(spark, root, name: str, two_stream: bool, **cfg):
         str(root / f"cp-{name}"),
         config=EngineConfig(
             cow_two_stream=two_stream,
-            cow_two_stream_min_rows=0,
             **cfg,
         ),
     )
@@ -270,23 +269,6 @@ def test_interleaved_inserts_append_by_merge(spark, tmp_path):
             assert e["files"][: len(f0[p])] == f0[p], p
     # b2: the re-inserted key's partition was NOT appended (overlap)
     _assert_equiv(on, off, reports_on, reports_off)
-
-
-def test_min_rows_gate_disables_two_stream(spark, tmp_path):
-    log = str(tmp_path / "log")
-    _write_batch(log, 0, [_row(i, i, 0, ts_off_s=i) for i in range(16)])
-    _write_batch(log, 1, [_row(100, 3, 1, text="turn1", ts_off_s=999)])
-    eng = CdcEngine.init(
-        spark,
-        str(tmp_path / "tbl-gated"),
-        str(tmp_path / "cp-gated"),
-        config=EngineConfig(num_buckets=8, shuffle_partitions=8,
-                            cow_two_stream=True,
-                            cow_two_stream_min_ratio=0.0,
-                            cow_two_stream_min_rows=1_000_000),
-    )
-    reports = eng.run(log)
-    assert all(r.partitions_two_stream == 0 for r in reports)
 
 
 def test_default_ratio_gate_keeps_small_incumbents_fused(spark, tmp_path):
