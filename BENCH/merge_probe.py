@@ -82,7 +82,9 @@ def main() -> int:
         )
         good = raw.filter(~malformed)
         touched = list(range(num_buckets))
-        incumbent = eng._read_physical(touched, logical).withColumn("_src", F.lit(0))
+        incumbent = eng._read_physical(
+            {e["partition"]: e for e in snap["manifest"]}, touched, logical
+        ).withColumn("_src", F.lit(0))
         evt = (
             good.withColumn(PART_COL, partition_expr(num_buckets))
             .select(

@@ -93,14 +93,17 @@ class EngineConfig:
     """Tunables for the CDC apply path.
 
     Defaults are sized for the sandbox (``local[32]``); on a real cluster
-    ``num_buckets`` and ``shuffle_partitions`` scale with executor count.
+    ``num_buckets`` scales with executor count.
     """
 
     #: number of hash buckets the target table is partitioned into
     #: (partition column ``p = pmod(xxhash64(conv_id), num_buckets)``)
     num_buckets: int = 32
 
-    #: shuffle parallelism for merge/window stages
+    #: not read by the engine: the merge's exchange is sized by AQE and
+    #: its parallelism comes from ``num_buckets`` × salt; every other
+    #: stage uses the session's ``spark.sql.shuffle.partitions`` (the CLI
+    #: sets that from its ``--shuffle-partitions`` flag)
     shuffle_partitions: int = 32
 
     #: failure policy (graft of continue_on_error, reference ir:500-506):
@@ -155,9 +158,9 @@ class EngineConfig:
     #: lineage stats combine
     #: exactly (the checksum is an order-independent ``bit_xor`` of
     #: per-row hashes, so ``old XOR new`` equals what a full rewrite
-    #: would store; guarded by a per-entry checksum-column-set id so a
-    #: schema evolution can never combine hashes computed over different
-    #: column sets). Insert-heavy streams go from O(table-rewrite) per
+    #: would store; guarded by a per-entry id of the checksum columns and
+    #: their types so neither a schema evolution nor a type promotion can
+    #: combine hashes computed over different columns or types). Insert-heavy streams go from O(table-rewrite) per
     #: batch to O(batch): a bulk load of N batches writes each row once
     #: instead of N/2 times — at 100 TB that's the difference between a
     #: load that works and one that re-encodes the table every batch.
@@ -263,27 +266,6 @@ class EngineConfig:
     #: in both modes (tests/test_partstats.py).
     partstats_mode: str = "stored"
 
-    #: in "stored" mode, when a batch touches at most this many partitions
-    #: the per-partition stats ride the WRITE JOB ITSELF as conditional
-    #: ``observe()`` aggregates (4 per touched partition) — zero extra
-    #: Spark job, zero read-back bytes. Above the limit (wide tables with
-    #: thousands of buckets, where per-partition observe expressions would
-    #: bloat the plan) the narrow 4-column file read-back is used instead,
-    #: which stays O(partitions) with fixed-width bytes. 0 disables the
-    #: observe tier entirely.
-    partstats_observe_limit: int = 64
-
-    #: "stored"-mode read-back size gate: when a batch's freshly written
-    #: data files total at most this many bytes, the narrow stats
-    #: read-back runs DRIVER-side with arrow (a few MB of fixed-width
-    #: column chunks — the same magnitude of driver I/O as the per-commit
-    #: file renames and manifest JSON) instead of paying a Spark job's
-    #: fixed scheduling latency (~0.2-0.3 s/batch) to read it. Above the
-    #: limit — cluster-scale batches — the distributed read-back runs
-    #: unchanged. All tiers produce identical stats
-    #: (tests/test_partstats.py). 0 disables the driver tier.
-    partstats_driver_bytes_limit: int = 128 * 1024 * 1024
-
     #: per-row checksum hash definition for NEW tables, frozen into the
     #: snapshot at create (like ``checksum_columns``) so every tier —
     #: stored/observe/driver read-back, reverify, MOR compact, replay
@@ -329,8 +311,6 @@ class EngineConfig:
             raise ValueError(
                 f"partstats_mode must be stored|reverify, got {self.partstats_mode!r}"
             )
-        if self.partstats_observe_limit < 0:
-            raise ValueError("partstats_observe_limit must be >= 0")
         if self.rowhash_mode not in ("typed", "canonical"):
             raise ValueError(
                 f"rowhash_mode must be typed|canonical, got {self.rowhash_mode!r}"

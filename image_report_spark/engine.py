@@ -57,7 +57,12 @@ from image_report_spark.operators.evolution import reconcile_schema
 from image_report_spark.operators.resolve import resolve_lww_grouped
 from image_report_spark.operators.skew import detect_hot_keys, salt_hot_keys
 from image_report_spark.plans.checkpoint import Checkpoint
-from image_report_spark.plans.icelite import IceliteTable, partition_expr, PART_COL
+from image_report_spark.plans.icelite import (
+    PART_COL,
+    IceliteTable,
+    partition_expr,
+    physical_schema,
+)
 from image_report_spark.plans.sink import TableSink
 from image_report_spark.sources.changelog import ChangeLogSource
 
@@ -88,19 +93,51 @@ _PARTSTATS_SCHEMA = StructType(
 )
 
 
-def _checksum_cols_id(checksum_cols: list[str], rowhash_mode: str = "canonical") -> str:
-    """Short stable id of the checksum column SET (and hash definition) a
-    partition entry's ``checksum`` was computed over. The append fast-path
-    may only xor-combine an old entry's checksum with fresh per-row hashes
-    when both were computed over the same column set AND the same hash
-    definition — after an additive schema evolution on a table without
-    frozen ``checksum_columns`` the set changes, old entries stop
-    matching, and those partitions fall back to a full rewrite (which
-    re-hashes them under the new set and restores appendability). The
-    ``rowhash_mode`` tag extends the same guard across hash-definition
-    changes; canonical mode keeps the historical id format so manifests
-    written before the mode existed stay appendable."""
-    base = format(zlib.crc32("\x1f".join(checksum_cols).encode()), "08x")
+#: partition-stats tier 1 gate: when a "stored"-mode batch touches at most
+#: this many partitions, the per-partition stats ride the WRITE JOB ITSELF
+#: as conditional ``observe()`` aggregates (6 per touched partition) —
+#: zero extra Spark job, zero read-back bytes, and no persisted ``_h``.
+#: Above it (wide tables with thousands of buckets, where per-partition
+#: observe expressions would bloat the plan) the narrow fixed-width file
+#: read-back runs instead, which stays O(partitions). The tier earns its
+#: place in bytes, not time: with this gate at 0, perfbench's
+#: backlog_upsert (8 buckets, 4-vCPU VM) kept its throughput within noise
+#: but its write_amp rose from 1.98 to 3.02, because the read-back tier
+#: persists ``_h``, 8 incompressible bytes per row. The 64-vs-128
+#: boundary A/B is in BENCH/partstats_ab.jsonl (BENCH/BASELINE.md).
+PARTSTATS_OBSERVE_LIMIT = 64
+
+#: "stored"-mode read-back size gate: when a batch's freshly written data
+#: files total at most this many bytes, the narrow stats read-back runs
+#: DRIVER-side with arrow (a few MB of fixed-width column chunks — the same
+#: magnitude of driver I/O as the per-commit file renames and manifest
+#: JSON) instead of paying a Spark job's fixed scheduling latency
+#: (~0.2-0.3 s/batch) to read it. Above it — cluster-scale batches — the
+#: distributed read-back runs. All tiers produce identical stats
+#: (tests/test_partstats.py).
+PARTSTATS_DRIVER_BYTES_LIMIT = 128 * 1024 * 1024
+
+
+def _checksum_cols_id(
+    checksum_cols: list[str],
+    rowhash_mode: str = "canonical",
+    schema: StructType | None = None,
+) -> str:
+    """Short stable id of the checksum column SET, their types and the hash
+    definition a partition entry's ``checksum`` was computed over. The
+    append tiers may only xor-combine an old entry's checksum with fresh
+    per-row hashes when both were computed over the same columns, types
+    AND hash definition. After an additive schema evolution on a table
+    without frozen ``checksum_columns`` the set changes; after a type
+    promotion (int→bigint, float→double) the typed hash of every value
+    of that column changes, and float→double changes its canonical
+    string too. Either way old entries stop matching, and those
+    partitions fall back to one full rewrite (which re-hashes them under
+    the new definition and restores appendability). ``schema`` supplies
+    the column types; without it the id covers names and mode only."""
+    types = {f.name: f.dataType.simpleString() for f in schema.fields} if schema else {}
+    desc = [f"{c}:{types[c]}" if c in types else c for c in checksum_cols]
+    base = format(zlib.crc32("\x1f".join(desc).encode()), "08x")
     return base if rowhash_mode == "canonical" else f"{base}:{rowhash_mode}"
 
 
@@ -129,7 +166,7 @@ def _driver_partition_stats(root: str, files: dict[int, list[str]]) -> list:
     same unsigned-64 hex checksum, and UTF-8 byte order == code-point
     order, so python string min/max matches Spark's binary collation);
     pinned against the other tiers in tests/test_partstats.py. Bounded by
-    ``partstats_driver_bytes_limit``, so the driver reads a few MB of
+    ``PARTSTATS_DRIVER_BYTES_LIMIT``, so the driver reads a few MB of
     fixed-width column chunks — the same magnitude of driver I/O as the
     file renames and manifest JSON it already performs per commit —
     instead of paying a Spark job's fixed scheduling latency to do it."""
@@ -234,8 +271,6 @@ def _written_partition_stats(
     integrity check, the right paranoia for low-trust storage. Both
     modes produce identical checksums (pinned in tests/test_partstats.py).
     """
-    from image_report_spark.plans.icelite import physical_schema
-
     if mode == "stored" and driver_bytes_limit and files:
         total = sum(
             os.path.getsize(os.path.join(root, f))
@@ -305,6 +340,23 @@ class BatchReport:
     auto_compacted_partitions: int = 0
     op_histogram: dict = field(default_factory=dict)
     phase_ms: dict = field(default_factory=dict)
+
+    def __post_init__(self) -> None:
+        self._t0 = self._last = time.monotonic()
+
+    def tick(self, phase: str) -> None:
+        """Charge the time since the previous tick to ``phase``: per-phase
+        durations land in the ledger as a selectable metric (graft of the
+        reference's per-section duration_sec attributes,
+        ir:218-221,347-353)."""
+        now = time.monotonic()
+        self.phase_ms[phase] = self.phase_ms.get(phase, 0) + int(
+            (now - self._last) * 1000
+        )
+        self._last = now
+
+    def elapsed_ms(self) -> int:
+        return int((time.monotonic() - self._t0) * 1000)
 
     def ledger(self, selected: set[str]) -> dict:
         base = {
@@ -392,6 +444,262 @@ def build_mor_classification(
     if broadcast_keys:
         inc1 = F.broadcast(inc1)
     return dback.join(inc1, [PART_COL] + key_cols, "left")
+
+
+#: per-partition routes of a COW batch (``BatchPlan.route``)
+APPEND, TWO_STREAM, FUSED = "append", "two_stream", "fused"
+
+
+@dataclass
+class BatchPlan:
+    """Routing decision for one batch, made on the driver from the bucket
+    pre-pass and the manifest alone (``plan_batch``). MOR reads only
+    ``touched``, ``hot_buckets`` and ``valid``."""
+
+    #: buckets holding at least one valid event, ascending
+    touched: list[int]
+    #: buckets whose valid events exceed ``hot_key_threshold`` (salted)
+    hot_buckets: list[int]
+    #: valid (non-malformed) events per bucket
+    valid: dict[int, int]
+    #: touched bucket -> APPEND | TWO_STREAM | FUSED
+    route: dict[int, str]
+    #: partition stats ride the write job's ``observe()`` (tier 1)
+    observe_stats: bool
+
+    def parts(self, route: str) -> list[int]:
+        return [p for p in self.touched if self.route[p] == route]
+
+
+def _appendable(entry: dict | None, row, ck_id: str) -> bool:
+    """Eligibility shared by both append tiers: a pure-insert bucket slice
+    without null merge keys (SQL equality never matches them, yet the
+    merge window groups them) over a clean, checksummed entry whose
+    checksum was computed under the same ``ck_id``."""
+    return (
+        entry is not None
+        and bool(entry.get("files"))
+        and not entry.get("delta_files")
+        and entry.get("checksum") is not None
+        and entry.get("ck_id") == ck_id
+        and int(row["noni"] or 0) == 0
+        and int(row["nullk"] or 0) == 0
+    )
+
+
+def plan_batch(bucket_rows: list, old_entries: dict, cfg: EngineConfig, ck_id: str) -> BatchPlan:
+    """Route every touched partition of a COW batch; pure Python, no Spark.
+
+    * APPEND (zone-map METADATA tier): an appendable slice whose key range
+      is strictly disjoint from the entry's stored [key_lo, key_hi] zone
+      map appends with zero extra jobs — its incumbent never enters the
+      union (no read, no re-sort, no re-encode). Monotonic insert keys
+      append here.
+    * TWO_STREAM (merge-proven tier, ``cfg.cow_two_stream``): an
+      appendable slice with overlapping ranges sends only NARROW incumbent
+      rows through the merge, which itself proves key-disjointness (its
+      ``displaced`` counter). Gated by the file-count bound, the
+      incumbent/batch row ratio, and — over all such partitions — the
+      broadcast key limit of the survivor pass's anti-join.
+    * FUSED: everything else — update/delete buckets (their targets
+      overlap by construction, and the survivor-rewrite detour measured
+      slower than the fused shuffle at this payload width), null-key
+      buckets, stale ``ck_id`` entries and new partitions.
+    """
+    rows = {int(r[PART_COL]): r for r in bucket_rows}
+    valid = {p: int(r["n"]) - int(r["bad"] or 0) for p, r in rows.items()}
+    # an all-replay bucket still rewrites identically — harmless
+    touched = sorted(p for p, v in valid.items() if v > 0)
+    hot = [p for p, v in valid.items() if v > cfg.hot_key_threshold]
+    route = dict.fromkeys(touched, FUSED)
+    ts_cand = []
+    for p in touched:
+        r, e = rows[p], old_entries.get(p)
+        if not (cfg.cow_append_fastpath and _appendable(e, r, ck_id)):
+            continue
+        if (
+            e.get("key_lo") is not None
+            and e.get("key_hi") is not None
+            and (r["khi"] < e["key_lo"] or r["klo"] > e["key_hi"])
+        ):
+            route[p] = APPEND
+        elif (
+            cfg.cow_two_stream
+            and len(e["files"]) < cfg.cow_two_stream_max_files
+            and int(e["row_count"]) >= cfg.cow_two_stream_min_ratio * max(valid[p], 1)
+        ):
+            ts_cand.append(p)
+    if sum(valid[p] for p in ts_cand) <= cfg.mor_broadcast_key_limit:
+        route.update(dict.fromkeys(ts_cand, TWO_STREAM))
+    observe = cfg.partstats_mode == "stored" and 0 < len(touched) <= PARTSTATS_OBSERVE_LIMIT
+    return BatchPlan(touched, hot, valid, route, observe)
+
+
+def _salt_expr(hot_buckets: list[int], n_salt: int):
+    """Hot buckets spread over ``n_salt`` sub-keys by the merge-key hash;
+    every other row (and every row of a cold batch) gets salt 0."""
+    if not hot_buckets:
+        return F.lit(0)
+    return F.when(
+        F.col(PART_COL).isin(hot_buckets),
+        F.pmod(F.xxhash64(F.col("conv_id"), F.col("turn_idx")), F.lit(n_salt)).cast("int"),
+    ).otherwise(F.lit(0))
+
+
+def _event_rows(events: DataFrame, num_buckets: int, payload_cols: list[str], *extra: str) -> DataFrame:
+    """Batch events in the table's physical row shape (bucket, payload,
+    ``_lsn``, ``_op``), plus ``extra`` SQL expressions. One selectExpr
+    instead of withColumn+select: the merge construction repeats per
+    batch, so driver round-trips are a per-batch tax (the SQL text parses
+    to partition_expr's pmod/xxhash64/cast)."""
+    return events.selectExpr(
+        f"cast(pmod(xxhash64(conv_id), {num_buckets}) as int) AS {PART_COL}",
+        *[f"`{c}`" for c in payload_cols],
+        "lsn AS _lsn",
+        "op AS _op",
+        *extra,
+    )
+
+
+def build_merge_ranking(
+    rows: DataFrame,
+    hot_buckets: list[int],
+    n_salt: int,
+    incumbent: bool = False,
+    inc_any: bool = False,
+) -> DataFrame:
+    """The merge's ONE shuffle and ONE window sort, shared by COW and MOR.
+
+    Rows repartition on (bucket, salt); within a key, rows sharing an LSN
+    (exact replays — byte-identical; an idempotent re-apply pairs the
+    event with its incumbent) sort adjacently, so replay detection
+    (``_replay``) is a lag() in the SAME (partition, order) spec as the
+    last-writer-wins ``_rn`` — a single WindowExec, a single sort (graft
+    of the NMS duplicate suppression, utils.py:270-319). ``incumbent``:
+    ``rows`` is a union of incumbent (``_src`` 0) and batch (``_src`` 1)
+    rows — exact ties go to the incumbent, and ``_inc_live`` flags keys
+    with a live incumbent row. ``inc_any`` adds ``_inc_any``, "did ANY
+    incumbent row (live OR tombstone) share this key", for the
+    merge-proven append: tombstones must count as overlap so an appended
+    partition never holds two physical rows for one key. The per-key
+    max() aggregates need only the clustering prefix, so they ride the
+    same sort. Built as SQL text: one driver round-trip for the whole
+    window block; the single-Exchange plans are pinned in
+    tests/test_plans.py.
+    """
+    # repartition on _salt only when it's a real column: a lit(0) salt
+    # constant-folds OUT of the window's required clustering but NOT out of
+    # hashpartitioning, which would defeat the subset-satisfaction rule and
+    # buy a second Exchange. No explicit partition count: AQE sizes the
+    # exchange; parallelism comes from #buckets × salt.
+    u = rows.withColumn("_salt", _salt_expr(hot_buckets, n_salt)).repartition(
+        F.col(PART_COL), *([F.col("_salt")] if hot_buckets else [])
+    )
+    part = f"PARTITION BY {PART_COL}, _salt, conv_id, turn_idx"
+    order = f"{part} ORDER BY ts DESC NULLS LAST, _lsn DESC NULLS LAST"
+    if incumbent:
+        order += ", _src ASC"  # exact tie → incumbent wins
+    exprs = [
+        f"row_number() OVER ({order}) AS _rn",
+        f"if(lag(_lsn) OVER ({order}) <=> _lsn, 1, 0) AS _replay",
+    ]
+    if incumbent:
+        exprs.append(f"max(if(_src = 0 AND _op <> 'D', 1, 0)) OVER ({part}) AS _inc_live")
+    if inc_any:
+        exprs.append(f"max(if(_src = 0, 1, 0)) OVER ({part}) AS _inc_any")
+    return u.selectExpr("*", *exprs)
+
+
+def _observe_partition_stats(df: DataFrame, parts: list[int], name: str):
+    """Per-partition lineage aggregates (count, live, max LSN, bit_xor
+    checksum, key zone map) riding ``df``'s own job as ONE named_struct
+    observation (single py4j call, parsed JVM-side) — 6 aggregates per
+    partition as Column objects would add ~100s of py4j round-trips per
+    batch to the plan phase. Returns the observed frame and the
+    Observation; ``_observed_partition_stats`` folds the results."""
+    obs = Observation(name)
+    entries = ", ".join(
+        f"'n_{p}', sum(if({PART_COL} = {p}, 1, 0)), "
+        f"'l_{p}', sum(if({PART_COL} = {p} and _op <> 'D', 1, 0)), "
+        f"'m_{p}', max(if({PART_COL} = {p}, _lsn, null)), "
+        f"'x_{p}', bit_xor(if({PART_COL} = {p}, _h, null)), "
+        f"'a_{p}', min(if({PART_COL} = {p}, conv_id, null)), "
+        f"'b_{p}', max(if({PART_COL} = {p}, conv_id, null))"
+        for p in parts
+    )
+    return df.observe(obs, F.expr(f"named_struct({entries})").alias("pstats")), obs
+
+
+def _observed_partition_stats(observations: list, parts: list[int]) -> list[dict]:
+    """One stats row per partition in ``parts`` (the ``_written_partition_stats``
+    shape) from the observations of every job that wrote its files: counts
+    add, max/min compose, and bit_xor checksums xor-combine
+    (order-independent by construction)."""
+    vals = [o.get["pstats"].asDict() for o in observations]
+    out = []
+    for p in parts:
+        def got(fld: str) -> list:
+            k = f"{fld}_{p}"
+            return [v[k] for v in vals if v.get(k) is not None]
+
+        x = 0
+        for h in got("x"):
+            x ^= h
+        out.append(
+            {
+                PART_COL: p,
+                "row_count": sum(got("n")),
+                "live_rows": sum(got("l")),
+                "last_applied_lsn": max(got("m"), default=None),
+                # match F.lpad(F.hex(bigint)): unsigned 64-bit, uppercase,
+                # zero-padded to 16
+                "checksum": format(x & 0xFFFFFFFFFFFFFFFF, "016X"),
+                "key_lo": min(got("a"), default=None),
+                "key_hi": max(got("b"), default=None),
+            }
+        )
+    return out
+
+
+def _manifest_entry(stats, files: list[str], ck_id: str, old: dict | None = None) -> dict:
+    """Manifest entry of a partition whose freshly written ``files`` carry
+    lineage ``stats`` (a ``_written_partition_stats`` row). With ``old``
+    (both append tiers) the incumbent files carry forward and the stats
+    combine: counts add, checksums xor-combine (order-independent bit_xor
+    over live-row hashes — old ⊕ new is EXACTLY what a full rewrite of the
+    disjoint-key union would have stored, ck_id-guarded by
+    ``_appendable``), and the zone map takes the envelope of both sides
+    (None = unknown poisons it)."""
+    lal = stats["last_applied_lsn"]
+    entry = {
+        "files": files,
+        "row_count": int(stats["row_count"]),
+        "live_rows": int(stats["live_rows"]),
+        "checksum": stats["checksum"],
+        "last_applied_lsn": int(lal) if lal is not None else None,
+        "key_lo": stats["key_lo"],
+        "key_hi": stats["key_hi"],
+        "ck_id": ck_id,
+    }
+    if old is None:
+        return entry
+    olo, ohi, nlo, nhi = old.get("key_lo"), old.get("key_hi"), entry["key_lo"], entry["key_hi"]
+    lsns = (old.get("last_applied_lsn"), entry["last_applied_lsn"])
+    return {
+        **entry,
+        "files": list(old["files"]) + files,
+        "row_count": int(old["row_count"]) + entry["row_count"],
+        "live_rows": int(old["live_rows"]) + entry["live_rows"],
+        "checksum": format(int(old["checksum"], 16) ^ int(entry["checksum"], 16), "016X"),
+        "last_applied_lsn": max((v for v in lsns if v is not None), default=None),
+        "key_lo": min(olo, nlo) if olo is not None and nlo is not None else None,
+        "key_hi": max(ohi, nhi) if ohi is not None and nhi is not None else None,
+    }
+
+
+def _manifest_digest(entries: dict) -> str:
+    """Table digest over a full manifest (partition -> entry)."""
+    return table_digest([(p, e["live_rows"], e["checksum"]) for p, e in entries.items()])
 
 
 class CdcEngine:
@@ -526,20 +834,8 @@ class CdcEngine:
         batch_id: int,
         prepass_rows: list | None = None,
     ) -> BatchReport:
-        t0 = time.monotonic()
-        _last = [t0]
         cfg = self.config
         rpt = BatchReport(batch_id=batch_id)
-
-        # per-phase durations land in the ledger as a selectable metric
-        # (graft of the reference's per-section duration_sec attributes,
-        # ir:218-221,347-353)
-        def _tick(phase: str) -> None:
-            now = time.monotonic()
-            rpt.phase_ms[phase] = rpt.phase_ms.get(phase, 0) + int(
-                (now - _last[0]) * 1000
-            )
-            _last[0] = now
         snap = self.table.snapshot()
         logical = self.table.logical_schema(snap)
         num_buckets = self.table.num_buckets(snap)
@@ -557,9 +853,8 @@ class CdcEngine:
             if prepass_rows is None
             else prepass_rows
         )
-        _tick("prepass")
+        rpt.tick("prepass")
         rpt.events_read = sum(int(r["n"]) for r in bucket_rows)
-        bad = changes_raw.filter(malformed)
         rpt.quarantined = sum(int(r["bad"] or 0) for r in bucket_rows)
         if rpt.quarantined:
             if cfg.on_error == "fail":
@@ -567,16 +862,15 @@ class CdcEngine:
                     f"batch {batch_id}: {rpt.quarantined} malformed events "
                     f"(on_error=fail) — no snapshot committed"
                 )
-            self._write_quarantine(bad, batch_id)
-        good = changes_raw.filter(~malformed)
+            self._write_quarantine(changes_raw.filter(malformed), batch_id)
 
         # 2. additive schema evolution (Arrow schema reconciliation)
-        aligned, evolved = reconcile_schema(good, logical)
+        aligned, evolved = reconcile_schema(changes_raw.filter(~malformed), logical)
         payload_cols = [f.name for f in evolved.fields]
 
         # 3. cross-batch exactly-once filters: boundary + bounded recent-LSN
         # anti-join (within-batch duplicate LSNs are folded into the merge
-        # windows below — no separate dropDuplicates shuffle)
+        # window — no separate dropDuplicates shuffle)
         events = aligned
         boundary = self.checkpoint.boundary_lsn(batch_id)
         if boundary >= 0:
@@ -584,58 +878,43 @@ class CdcEngine:
         recent = self.checkpoint.recent_lsns_df(batch_id)
         if recent is not None:
             events = events.join(recent, "lsn", "left_anti")
+
+        old_entries = {e["partition"]: e for e in snap["manifest"]}
+        ck_id = _checksum_cols_id(checksum_cols, rowhash_mode, evolved)
+        plan = plan_batch(bucket_rows, old_entries, cfg, ck_id)
+        rpt.partitions_touched = len(plan.touched)
+        rpt.rows_before = sum(e["live_rows"] for e in old_entries.values())
+
         # the default fused path consumes `events` exactly once (the union),
-        # so no cache; grouped / quarantine-missing modes scan it repeatedly
-        # keep a separate handle to the frame that was actually persisted:
-        # grouped/quarantine modes rebind `events` to derived frames below,
-        # and unpersisting a derived frame is a no-op (the cache would leak
+        # so no cache; grouped / quarantine-missing modes scan it repeatedly.
+        # Keep a separate handle to the frame that was actually persisted:
+        # those modes rebind `events` to derived frames below, and
+        # unpersisting a derived frame is a no-op (the cache would leak
         # across batches in a long run)
         events_pinned = None
-        lsn_pool = None
         if cfg.grouped_resolve or cfg.update_missing == "quarantine":
             events_pinned = events = events.persist()
+        # the dedup-window LSN write runs on this pool, overlapping the
+        # batch's write job (see _commit)
+        lsn_pool = ThreadPoolExecutor(max_workers=1)
         try:
-            old_entries = {e["partition"]: e for e in snap["manifest"]}
-            rpt.rows_before = sum(e["live_rows"] for e in old_entries.values())
-
-            # touched/hot partitions from the fused pre-pass (valid rows only;
-            # an all-replay bucket still rewrites identically — harmless)
-            touched = sorted(
-                int(r[PART_COL]) for r in bucket_rows if int(r["n"]) - int(r["bad"] or 0) > 0
-            )
-            hot_buckets = [
-                int(r[PART_COL])
-                for r in bucket_rows
-                if int(r["n"]) - int(r["bad"] or 0) > cfg.hot_key_threshold
-            ]
-            rpt.partitions_touched = len(touched)
-
-            if not touched:
+            if not plan.touched:
                 # empty-batch short-circuit (graft of empty-input guards,
                 # analysis.py:31-33): still commit a marker so resume sees it
                 rpt.deduped = rpt.events_read - rpt.quarantined
                 rpt.rows_after = rpt.rows_before
-                sid = self.table.commit(
-                    {}, evolved, batch_id, rpt.ledger(cfg.selected_metrics),
-                    snap.get("table_digest"),
-                )
-                rpt.snapshot_id = sid
-                rpt.table_digest = snap.get("table_digest")
-                rpt.wall_ms = int((time.monotonic() - t0) * 1000)
-                self.checkpoint.commit_batch(
-                    batch_id, rpt.ledger(cfg.selected_metrics), sid,
-                    events.select("lsn"), -1,
+                self._commit(
+                    rpt, {}, evolved, snap.get("table_digest"), events.select("lsn")
                 )
                 return rpt
 
-            pre_dropped_superseded = 0
-            pre_dropped_dups = 0
             if cfg.update_missing == "quarantine":
                 events, n_missing = self._quarantine_missing_updates(
                     events, num_buckets, batch_id
                 )
                 rpt.quarantined += n_missing
 
+            pre = None
             if cfg.grouped_resolve:
                 # applyInPandas per-conversation ordered apply (BASELINE.json:6)
                 # — pre-resolves within the batch; the fused merge below then
@@ -645,604 +924,371 @@ class CdcEngine:
                     F.count_distinct(F.col("lsn")).alias("nd"),
                 ).first()
                 hot = detect_hot_keys(events, threshold=cfg.hot_key_threshold)
-                resolved = resolve_lww_grouped(
+                events = resolve_lww_grouped(
                     salt_hot_keys(events, hot, n_salt=cfg.skew_salt)
                 ).drop("_salt")
-                pre_dropped_dups = int(pre["n"]) - int(pre["nd"])
-                pre_dropped_superseded = -pre_dropped_dups  # adjusted below
-                events = resolved
 
             if cfg.write_mode == "mor":
                 return self._mor_tail(
-                    events, evolved, payload_cols, num_buckets, hot_buckets,
-                    touched, old_entries, batch_id, rpt, _tick, t0,
+                    events, evolved, payload_cols, num_buckets, plan,
+                    old_entries, rpt, lsn_pool,
                 )
 
-            # 4+5. FUSED resolve + COW merge: one wide shuffle on
-            # (bucket, salt); both dedup windows, the LWW ranking, the
-            # per-key liveness aggregate and the final write all run inside
-            # that partitioning (HashPartitioning on a subset of each
-            # window's clustering keys — Catalyst inserts sorts, never
-            # another exchange), so the data moves across the network once.
-            salt = (
-                F.when(
-                    F.col(PART_COL).isin(hot_buckets),
-                    F.pmod(F.xxhash64(F.col("conv_id"), F.col("turn_idx")), F.lit(cfg.skew_salt)).cast("int"),
-                ).otherwise(F.lit(0))
-                if hot_buckets
-                else F.lit(0)
+            # 4-6. execute: the COW merge runs once, inside the file write
+            part_rows, files, append_parts, stats, lsn_fut = self._cow_execute(
+                events, plan, old_entries, evolved, payload_cols, num_buckets,
+                checksum_cols, rowhash_mode, rpt, lsn_pool,
             )
-            # COW append fast-path, METADATA tier: a partition whose batch
-            # slice is pure inserts and whose key range (from the prepass)
-            # is strictly disjoint from the entry's stored [key_lo, key_hi]
-            # zone map is APPENDED with zero extra jobs — its incumbent
-            # never enters the union (no read, no re-sort, no re-encode);
-            # manifest stats xor-combine below. Monotonic insert keys
-            # append here; interleaved-but-disjoint keys are proven by the
-            # merge itself (the two-stream tier below).
-            ck_id = _checksum_cols_id(checksum_cols, rowhash_mode)
-            append_parts: set[int] = set()
-            if cfg.cow_append_fastpath:
-                for r in bucket_rows:
-                    e = old_entries.get(int(r[PART_COL]))
-                    if (
-                        int(r["noni"] or 0) == 0
-                        and int(r["nullk"] or 0) == 0
-                        and int(r["n"]) - int(r["bad"] or 0) > 0
-                        and e is not None
-                        and e.get("files")
-                        and not e.get("delta_files")
-                        and e.get("checksum") is not None
-                        and e.get("ck_id") == ck_id
-                        and e.get("key_lo") is not None
-                        and e.get("key_hi") is not None
-                        and r["klo"] is not None
-                        and r["khi"] is not None
-                        and (r["khi"] < e["key_lo"] or r["klo"] > e["key_hi"])
-                    ):
-                        append_parts.add(int(r[PART_COL]))
-                rpt.partitions_appended = len(append_parts)
-            rewrite_parts = [p for p in touched if p not in append_parts]
-            # COW two-stream split (guide §2.2, shuffle fewer bytes — see
-            # EngineConfig.cow_two_stream): a rewrite partition whose batch
-            # slice is PURE INSERTS contributes only NARROW incumbent rows
-            # (merge keys + ts/lsn/op) to the merge shuffle, and the merge
-            # itself then proves key-disjointness (observed `displaced`
-            # counter): if no insert won over an incumbent row, the winner
-            # file APPENDS and the incumbent files carry forward — the
-            # append fast-path outcome for interleaved key ranges the
-            # zone-map tier cannot prove, at zero extra jobs. Buckets with
-            # update/delete events stay fused (their targets overlap by
-            # construction, and the measured survivor-rewrite detour costs
-            # more than the fused shuffle it avoids at this payload width),
-            # as do buckets whose batch slice carries null merge keys (SQL
-            # join equality would miss the null-key groups the window
-            # resolves), partitions at the file-count bound (the fused
-            # rewrite coalesces them back to one file) and pre-ck_id
-            # manifests.
-            bucket_info = {int(r[PART_COL]): r for r in bucket_rows}
-            ts_parts: list[int] = []
-            if cfg.cow_two_stream and cfg.cow_append_fastpath and rewrite_parts:
-                cand_ts = [
-                    p
-                    for p in rewrite_parts
-                    if (e := old_entries.get(p)) is not None
-                    and e.get("files")
-                    and len(e["files"]) < cfg.cow_two_stream_max_files
-                    and e.get("checksum") is not None
-                    and e.get("ck_id") == ck_id
-                    and int(bucket_info[p]["nullk"] or 0) == 0
-                    and int(bucket_info[p]["noni"] or 0) == 0
-                    and int(e["row_count"])
-                    >= cfg.cow_two_stream_min_ratio
-                    * max(
-                        int(bucket_info[p]["n"])
-                        - int(bucket_info[p]["bad"] or 0),
-                        1,
-                    )
-                ]
-                n_ts_events = sum(
-                    int(bucket_info[p]["n"]) - int(bucket_info[p]["bad"] or 0)
-                    for p in cand_ts
-                )
-                if n_ts_events <= cfg.mor_broadcast_key_limit:
-                    ts_parts = cand_ts
-            ts_set = set(ts_parts)
-            fused_parts = [p for p in rewrite_parts if p not in ts_set]
-            rpt.partitions_two_stream = len(ts_parts)
-            incumbent = self._read_physical(fused_parts, evolved).withColumn(
-                "_src", F.lit(0)
+            # 7. account: ledger, manifest, then snapshot + checkpoint marker.
+            # Appended partitions KEEP their old live rows (incumbent files
+            # carry forward), so only the partitions the merge rewrote or
+            # read narrow have their old live counts displaced by its
+            # live_after
+            self._count_cow(
+                rpt, stats, pre,
+                sum(
+                    old_entries[p]["live_rows"]
+                    for p in plan.touched
+                    if plan.route[p] != APPEND and p in old_entries
+                ),
             )
-            if ts_parts:
-                # narrow branch: the resolve window needs only the merge
-                # keys and the LWW order columns; null literals on the rest
-                # prune the payload column chunks out of the parquet scan
-                field_types = {f.name: f.dataType for f in evolved.fields}
-                key_or_order = {"conv_id", "turn_idx", "ts"}
-                narrow_inc = (
-                    self._read_physical(ts_parts, evolved)
-                    .select(
-                        F.col(PART_COL),
-                        *[
-                            F.col(c)
-                            if c in key_or_order
-                            else F.lit(None).cast(field_types[c]).alias(c)
-                            for c in payload_cols
-                        ],
-                        "_lsn",
-                        "_op",
-                    )
-                    .withColumn("_src", F.lit(0))
-                )
-                incumbent = incumbent.unionByName(narrow_inc)
-            # one selectExpr instead of withColumn+select+withColumn: the
-            # merge construction repeats per batch, so driver round-trips
-            # are a per-batch tax (the SQL text parses to the identical
-            # expressions — partition_expr's pmod/xxhash64/cast)
-            evt = events.selectExpr(
-                f"cast(pmod(xxhash64(conv_id), {num_buckets}) as int) AS {PART_COL}",
-                *[f"`{c}`" for c in payload_cols],
-                "lsn AS _lsn",
-                "op AS _op",
-                "1 AS _src",
-            )
-
-            # repartition on _salt only when it's a real column: a lit(0)
-            # salt constant-folds OUT of the window's required clustering
-            # but NOT out of hashpartitioning, which would defeat the
-            # subset-satisfaction rule and buy a second Exchange
-            # (asserted in tests/test_plans.py)
-            u = incumbent.unionByName(evt).withColumn("_salt", salt)
-            # no explicit partition count: AQE sizes/coalesces the exchange;
-            # parallelism comes from #buckets × salt, so num_buckets (not
-            # shuffle.partitions) is the scale knob
-            u = u.repartition(
-                F.col(PART_COL), *([F.col("_salt")] if hot_buckets else [])
-            )
-            # ONE window sort serves everything: within a key, rows sharing
-            # an LSN (exact replays — byte-identical; an idempotent re-apply
-            # pairs the event with its incumbent) sort adjacently, so replay
-            # detection is a lag() in the SAME (partition, order) spec as the
-            # LWW row_number — a single WindowExec, a single sort. The
-            # per-key liveness max() needs only the clustering prefix, so it
-            # rides the same sort too. (Graft of the NMS duplicate
-            # suppression, utils.py:270-319.)
-            # (built as SQL text — one driver round-trip for the whole
-            # window block instead of one per Column; parses to the same
-            # WindowExec, pinned by the single-exchange plan test)
-            part_spec = f"PARTITION BY {PART_COL}, _salt, conv_id, turn_idx"
-            order_spec = (
-                f"{part_spec} ORDER BY ts DESC NULLS LAST, "
-                "_lsn DESC NULLS LAST, _src ASC"  # exact tie → incumbent wins
-            )
-            win_exprs = [
-                f"row_number() OVER ({order_spec}) AS _rn",
-                f"if(lag(_lsn) OVER ({order_spec}) <=> _lsn, 1, 0) AS _replay",
-                f"max(if(_src = 0 AND _op <> 'D', 1, 0)) OVER ({part_spec}) AS _inc_live",
-            ]
-            if ts_parts:
-                # merge-proven append needs "did ANY incumbent row (live OR
-                # tombstone) share this key" — tombstones must count as
-                # overlap so an appended partition never holds two physical
-                # rows for one key. Same window frame, no extra sort.
-                win_exprs.append(
-                    f"max(if(_src = 0, 1, 0)) OVER ({part_spec}) AS _inc_any"
-                )
-            ranked = u.selectExpr("*", *win_exprs)
-            # deliberately NOT cached: caching wide string rows is a GC bomb
-            # (measured: 120 s GC in one 64-task stage); instead the pipeline
-            # runs exactly once — inside the file write — with ledger stats
-            # collected by observe() on that same job, and partition stats
-            # computed either by a second observation riding that same job
-            # (tier 1) or from a NARROW fixed-width read-back of the freshly
-            # written files (tier 2, which persists the pipeline-computed
-            # per-row hash `_h` alongside `_salt`; partstats_mode="reverify"
-            # instead re-hashes the on-disk payload bytes as a bit-level
-            # integrity check)
-            obs = Observation(f"batch-{batch_id}")
-            # one parsed SQL expression per aggregate (vs ~6 driver
-            # round-trips per Column build); `_src = 1 AND _rn = 1` is the
-            # "winning event row" predicate throughout
-            obs_exprs = [
-                "sum(if(_src = 1 AND _rn = 1, 1, 0)) AS applied",
-                "sum(if(_src = 1 AND _replay = 1, 1, 0)) AS dups",
-                "sum(if(_src = 1 AND _replay = 0 AND _rn > 1, 1, 0)) AS superseded",
-                "sum(if(_src = 1 AND _rn = 1 AND _op IN ('I', 'U') AND _inc_live = 0, 1, 0)) AS ins",
-                "sum(if(_src = 1 AND _rn = 1 AND _op IN ('I', 'U') AND _inc_live = 1, 1, 0)) AS upd",
-                "sum(if(_src = 1 AND _rn = 1 AND _op = 'D' AND _inc_live = 1, 1, 0)) AS `del`",
-                "sum(if(_rn = 1 AND _op <> 'D', 1, 0)) AS live_after",
-                "max(if(_src = 1, _lsn, null)) AS mx",
-                # op histogram folded into the SAME observation (3 more
-                # conditional sums on the one pipeline execution) — the old
-                # groupBy recompute re-ran the entire uncached merge when
-                # metrics=all
-                *[
-                    f"sum(if(_src = 1 AND _replay = 0 AND _op = '{o}', 1, 0)) AS op_{o}"
-                    for o in ("I", "U", "D")
-                ],
-            ]
-            if ts_parts:
-                # merge-proven append: count batch winners that displaced an
-                # existing incumbent key in a two-stream partition. Zero ⇒
-                # every two-stream winner file is key-disjoint from its
-                # incumbent and appends with no further jobs; non-zero ⇒ a
-                # narrow keys semi-join pinpoints which partitions overlap.
-                ids = ", ".join(str(p) for p in ts_parts)
-                obs_exprs.append(
-                    "sum(if(_src = 1 AND _rn = 1 AND _inc_any = 1 AND "
-                    f"{PART_COL} IN ({ids}), 1, 0)) AS displaced"
-                )
-            ranked_obs = ranked.observe(obs, *[F.expr(s) for s in obs_exprs])
-            keep = F.col("_rn") == 1
-            if ts_parts:
-                # two-stream partitions: this job writes only the batch's
-                # winning rows; narrow incumbent winners exist solely to
-                # decide per-key outcomes and feed the observation (their
-                # payload is carried by the survivor pass below)
-                keep = keep & (
-                    (F.col("_src") == 1) | ~F.col(PART_COL).isin(ts_parts)
-                )
-            merged = ranked_obs.filter(keep)
-
-            # 6. write files FIRST (the one and only pipeline execution;
-            # unreferenced until the snapshot commit below). `_salt` rides
-            # along so the window's output ordering satisfies the write sort
-            # (projecting it away would truncate the known ordering and
-            # force a second full sort)
-            phys_cols = [PART_COL] + payload_cols + ["_lsn", "_op"]
-            # partition-stats tier 1: when the touched set is small enough,
-            # the per-partition lineage aggregates (count / live / max LSN /
-            # bit_xor checksum) ride the WRITE JOB as a second observation —
-            # 4 conditional aggregates per touched partition, zero extra
-            # Spark job, zero read-back bytes, and the per-row hash `_h` is
-            # DROPPED before the write (an incompressible 8 bytes/row that
-            # only the tier-2 read-back would consume). Above the limit the
-            # narrow fixed-width file read-back (tier 2) keeps the plan size
-            # O(1) and persists `_h` for its own scan; "reverify" skips the
-            # pipeline hash entirely and re-hashes the on-disk payloads.
-            use_pobs = (
-                cfg.partstats_mode == "stored"
-                and 0 < len(touched) <= cfg.partstats_observe_limit
-            )
-            if cfg.partstats_mode == "reverify":
-                to_write = merged.select(*(phys_cols + ["_salt"]))
-            else:
-                to_write = merged.withColumn(
-                    "_h", _live_row_hash(merged, checksum_cols, rowhash_mode)
-                ).select(*(phys_cols + ["_salt", "_h"]))
-            if use_pobs:
-                pobs = Observation(f"pstats-{batch_id}")
-                # ONE named_struct expression (single py4j call, parsed
-                # JVM-side) — 4 aggregates per touched partition as Column
-                # objects would add ~100s of py4j round-trips per batch to
-                # the plan phase, the very driver overhead being removed
-                entries = ", ".join(
-                    f"'n_{p}', sum(if({PART_COL} = {p}, 1, 0)), "
-                    f"'l_{p}', sum(if({PART_COL} = {p} and _op <> 'D', 1, 0)), "
-                    f"'m_{p}', max(if({PART_COL} = {p}, _lsn, null)), "
-                    f"'x_{p}', bit_xor(if({PART_COL} = {p}, _h, null)), "
-                    f"'a_{p}', min(if({PART_COL} = {p}, conv_id, null)), "
-                    f"'b_{p}', max(if({PART_COL} = {p}, conv_id, null))"
-                    for p in touched
-                )
-                to_write = to_write.observe(
-                    pobs, F.expr(f"named_struct({entries})").alias("pstats")
-                ).drop("_h")
-            _tick("plan")
-            # the dedup-window LSN set is independent of the merge output,
-            # so its (job-overhead-dominated) Parquet write is submitted
-            # BEFORE the big write job and backfills idle cores during the
-            # merge's stragglers/tail (guide-§2.6 overlap; previously it
-            # only overlapped the short partition-stats read-back, leaving
-            # most of its wall on the critical path). The commit marker is
-            # still only written after BOTH complete — crash semantics
-            # unchanged: marker exists ⇒ dedup state is on disk.
-            lsn_pool = ThreadPoolExecutor(max_workers=1)
-            lsn_fut = lsn_pool.submit(
-                self.checkpoint.write_seen_lsns, batch_id, events.select("lsn")
-            )
-            files = self.table.write_partition_files(
-                to_write, batch_id, pre_partitioned=True
-            )
-            stats = obs.get
-            _tick("write+merge")
-
-            # two-stream survivor pass: incumbent rows of two-stream
-            # partitions whose key was NOT won by the batch are copied
-            # forward by a map-only scan + broadcast anti-join on the
-            # freshly written winners' keys — payload bytes are read once
-            # and written once, never shuffled or window-sorted. A
-            # two-stream partition with NO winner file is untouched by the
-            # batch (every event replayed/superseded): its old files and
-            # manifest entry carry forward verbatim, rewriting nothing.
-            pobs2 = None
-            ts_rewrite: list[int] = []
-            surv_parts: list[int] = []
-            if ts_parts:
-                ts_rewrite = [p for p in ts_parts if p in files]
-                rpt.partitions_carried = len(ts_parts) - len(ts_rewrite)
-                if ts_rewrite:
-                    from image_report_spark.plans.icelite import physical_schema
-
-                    phys = physical_schema(evolved)
-                    key_schema = StructType(
-                        [
-                            f
-                            for f in phys.fields
-                            if f.name in (PART_COL, "conv_id", "turn_idx")
-                        ]
-                    )
-
-                    def _won_keys(parts: list[int]):
-                        return self.spark.read.schema(key_schema).parquet(
-                            *[
-                                os.path.join(self.table.root, f)
-                                for p in parts
-                                for f in files[p]
-                            ]
-                        )
-
-                    # post-merge APPEND decision: a partition where no winner
-                    # key matches any incumbent key needs no survivor rewrite
-                    # at all — old files carry forward and the winner file
-                    # appends (stats xor-combine below, exactly the append
-                    # fast-path manifest math). The merge window already
-                    # resolved every key collision and its observation
-                    # counted them (`displaced`): zero ⇒ ALL two-stream
-                    # partitions append with no further jobs (the common
-                    # insert-stream case); non-zero ⇒ one narrow keys
-                    # semi-join pinpoints which partitions overlap (re-insert
-                    # of an existing or tombstoned key).
-                    append2: set[int] = set()
-                    if int(stats["displaced"] or 0) == 0:
-                        append2 = set(ts_rewrite)
-                    else:
-                        inc_keys = self.spark.read.schema(key_schema).parquet(
-                            *[
-                                os.path.join(self.table.root, f)
-                                for p in ts_rewrite
-                                for f in old_entries[p]["files"]
-                            ]
-                        )
-                        overlapped = {
-                            int(r[PART_COL])
-                            for r in inc_keys.join(
-                                F.broadcast(_won_keys(ts_rewrite)),
-                                [PART_COL, "conv_id", "turn_idx"],
-                                "left_semi",
-                            )
-                            .select(PART_COL)
-                            .distinct()
-                            .collect()
-                        }
-                        append2 = set(ts_rewrite) - overlapped
-                    append_parts |= append2
-                    rpt.partitions_appended += len(append2)
-                    surv_parts = [p for p in ts_rewrite if p not in append2]
-                    if surv_parts:
-                        surv = (
-                            self.spark.read.schema(phys)
-                            .parquet(
-                                *[
-                                    os.path.join(self.table.root, f)
-                                    for p in surv_parts
-                                    for f in old_entries[p]["files"]
-                                ]
-                            )
-                            .join(
-                                F.broadcast(_won_keys(surv_parts)),
-                                [PART_COL, "conv_id", "turn_idx"],
-                                "left_anti",
-                            )
-                        )
-                        if cfg.partstats_mode != "reverify":
-                            surv = surv.withColumn(
-                                "_h", _live_row_hash(surv, checksum_cols, rowhash_mode)
-                            )
-                        if use_pobs:
-                            pobs2 = Observation(f"pstats2-{batch_id}")
-                            entries2 = ", ".join(
-                                f"'n_{p}', sum(if({PART_COL} = {p}, 1, 0)), "
-                                f"'l_{p}', sum(if({PART_COL} = {p} and _op <> 'D', 1, 0)), "
-                                f"'m_{p}', max(if({PART_COL} = {p}, _lsn, null)), "
-                                f"'x_{p}', bit_xor(if({PART_COL} = {p}, _h, null)), "
-                                f"'a_{p}', min(if({PART_COL} = {p}, conv_id, null)), "
-                                f"'b_{p}', max(if({PART_COL} = {p}, conv_id, null))"
-                                for p in surv_parts
-                            )
-                            surv = surv.observe(
-                                pobs2,
-                                F.expr(f"named_struct({entries2})").alias("pstats"),
-                            )
-                        surv_files = self.table.write_partition_files(
-                            surv, batch_id, pre_partitioned=True
-                        )
-                        for p, fl in surv_files.items():
-                            files[p] = files.get(p, []) + fl
-                _tick("survivors")
-
-            # per-partition lineage: already collected by the write job's
-            # observation (tier 1), else a narrow scan of the written files
-            # ("stored" tier 2) or a full payload re-hash ("reverify")
-            if use_pobs:
-                pv = pobs.get["pstats"]
-                # two-stream partitions combine the write job's winner
-                # stats with the survivor pass's observation: counts add,
-                # max/min/max compose, and bit_xor checksums xor-combine
-                # (order-independent by construction)
-                pv2 = pobs2.get["pstats"] if pobs2 is not None else None
-                ts_rw_set = set(surv_parts)
-
-                def _pair(fld: str, p: int):
-                    a = pv[f"{fld}_{p}"]
-                    b = (
-                        pv2[f"{fld}_{p}"]
-                        if pv2 is not None and p in ts_rw_set
-                        else None
-                    )
-                    return a, b
-
-                part_rows = []
-                for p in touched:
-                    if p not in files:
-                        continue
-                    n1, n2 = _pair("n", p)
-                    l1, l2 = _pair("l", p)
-                    m1, m2 = _pair("m", p)
-                    x1, x2 = _pair("x", p)
-                    a1, a2 = _pair("a", p)
-                    b1, b2 = _pair("b", p)
-                    part_rows.append(
-                        {
-                            PART_COL: p,
-                            "row_count": int(n1 or 0) + int(n2 or 0),
-                            "live_rows": int(l1 or 0) + int(l2 or 0),
-                            "last_applied_lsn": max(
-                                (v for v in (m1, m2) if v is not None),
-                                default=None,
-                            ),
-                            # match F.lpad(F.hex(bigint)): unsigned 64-bit,
-                            # uppercase, zero-padded to 16
-                            "checksum": format(
-                                ((x1 or 0) ^ (x2 or 0)) & 0xFFFFFFFFFFFFFFFF,
-                                "016X",
-                            ),
-                            "key_lo": min(
-                                (v for v in (a1, a2) if v is not None),
-                                default=None,
-                            ),
-                            "key_hi": max(
-                                (v for v in (b1, b2) if v is not None),
-                                default=None,
-                            ),
-                        }
-                    )
-            else:
-                part_rows = _written_partition_stats(
-                    self.spark, self.table.root, files, evolved, checksum_cols,
-                    cfg.partstats_mode, cfg.partstats_driver_bytes_limit,
-                    rowhash_mode,
-                )
-            _tick("partstats")
-            rpt.applied = int(stats["applied"] or 0)
-            rpt.inserts = int(stats["ins"] or 0)
-            rpt.updates = int(stats["upd"] or 0)
-            rpt.deletes = int(stats["del"] or 0)
-            max_lsn = stats["mx"]
-            n_into_union = (
-                rpt.applied + int(stats["superseded"] or 0) + int(stats["dups"] or 0)
-            )
-            if cfg.grouped_resolve:
-                # grouped pre-resolve dropped (n_pre − n_resolved) events:
-                # duplicates-by-lsn first, the rest lost LWW in-batch
-                n_pre = int(pre["n"])
-                pre_dropped = n_pre - n_into_union
-                pre_dropped_superseded = pre_dropped - pre_dropped_dups
-                rpt.superseded = (
-                    int(stats["superseded"] or 0) + pre_dropped_superseded
-                )
-                rpt.deduped = (
-                    rpt.events_read - rpt.quarantined - n_pre
-                    + pre_dropped_dups + int(stats["dups"] or 0)
-                )
-            else:
-                rpt.superseded = int(stats["superseded"] or 0)
-                rpt.deduped = (
-                    rpt.events_read - rpt.quarantined - n_into_union
-                    + int(stats["dups"] or 0)
-                )
-            # appended partitions KEEP their old live rows (incumbent files
-            # carry forward), so only rewritten partitions' old live counts
-            # are displaced by the merge output's live_after
-            touched_old_live = sum(
-                old_entries[p]["live_rows"]
-                for p in rewrite_parts
-                if p in old_entries
-            )
-            rpt.rows_after = (
-                rpt.rows_before - touched_old_live + int(stats["live_after"] or 0)
-            )
-            if "op_histogram" in cfg.selected_metrics:
-                rpt.op_histogram = {
-                    o: int(stats[f"op_{o}"] or 0)
-                    for o in ("I", "U", "D")
-                    if int(stats[f"op_{o}"] or 0)
-                }
-
-            # 7. commit snapshot + checkpoint marker (in order)
             replaced = {}
             for r in part_rows:
                 p = int(r[PART_COL])
-                new_lal = (
-                    int(r["last_applied_lsn"])
-                    if r["last_applied_lsn"] is not None
-                    else None
-                )
-                if p in append_parts:
-                    # manifest-level append: old files + the new file(s);
-                    # counts add, checksums xor-combine (order-independent
-                    # bit_xor over live-row hashes — old ⊕ new is EXACTLY
-                    # what a full rewrite of the disjoint-key union would
-                    # have stored, ck_id-guarded above); the zone map takes
-                    # the envelope of both sides (None = unknown poisons it)
-                    old = old_entries[p]
-                    old_lal = old.get("last_applied_lsn")
-                    olo, ohi = old.get("key_lo"), old.get("key_hi")
-                    nlo, nhi = r["key_lo"], r["key_hi"]
-                    replaced[p] = {
-                        "files": list(old["files"]) + files.get(p, []),
-                        "row_count": int(old["row_count"]) + int(r["row_count"]),
-                        "live_rows": int(old["live_rows"]) + int(r["live_rows"]),
-                        "checksum": format(
-                            int(old["checksum"], 16) ^ int(r["checksum"], 16),
-                            "016X",
-                        ),
-                        "last_applied_lsn": max(
-                            (v for v in (old_lal, new_lal) if v is not None),
-                            default=None,
-                        ),
-                        "key_lo": min(olo, nlo) if olo is not None and nlo is not None else None,
-                        "key_hi": max(ohi, nhi) if ohi is not None and nhi is not None else None,
-                        "ck_id": ck_id,
-                    }
-                else:
-                    replaced[p] = {
-                        "files": files.get(p, []),
-                        "row_count": int(r["row_count"]),
-                        "live_rows": int(r["live_rows"]),
-                        "checksum": r["checksum"],
-                        "last_applied_lsn": new_lal,
-                        "key_lo": r["key_lo"],
-                        "key_hi": r["key_hi"],
-                        "ck_id": ck_id,
-                    }
-            # table digest over the NEW manifest (replaced + carried forward)
-            all_entries = dict(old_entries)
-            all_entries.update(replaced)
-            digest = table_digest(
-                [
-                    (p, e["live_rows"], e["checksum"])
-                    for p, e in all_entries.items()
-                ]
+                old = old_entries[p] if p in append_parts else None
+                replaced[p] = _manifest_entry(r, files.get(p, []), ck_id, old)
+            self._commit(
+                rpt, replaced, evolved,
+                _manifest_digest({**old_entries, **replaced}), lsn_fut, stats["mx"],
             )
-            rpt.table_digest = digest
-            rpt.wall_ms = int((time.monotonic() - t0) * 1000)
-            ledger = rpt.ledger(cfg.selected_metrics)
-            _tick("ledger")
-            sid = self.table.commit(replaced, evolved, batch_id, ledger, digest)
-            rpt.snapshot_id = sid
-            lsn_fut.result()  # dedup state durable before the marker
-            self.checkpoint.mark_committed(
-                batch_id, ledger, sid,
-                max_lsn if max_lsn is not None else -1,
-            )
-            _tick("commit+seen")
         finally:
-            if lsn_pool is not None:
-                lsn_pool.shutdown(wait=True)
+            lsn_pool.shutdown(wait=True)
             if events_pinned is not None:
                 events_pinned.unpersist()
         return rpt
+
+    def _cow_execute(
+        self,
+        events: DataFrame,
+        plan: BatchPlan,
+        old_entries: dict,
+        evolved: StructType,
+        payload_cols: list[str],
+        num_buckets: int,
+        checksum_cols: list[str],
+        rowhash_mode: str,
+        rpt: BatchReport,
+        lsn_pool: ThreadPoolExecutor,
+    ):
+        """Run the COW batch's jobs: the merge write, the two-stream
+        survivor pass and the partition-stats read-back. Returns the
+        per-partition stats rows, the written files, the partitions whose
+        old files carry forward (both append tiers), the merge
+        observation's values, and the in-flight seen-LSN write."""
+        cfg = self.config
+        batch_id = rpt.batch_id
+        ts_parts = plan.parts(TWO_STREAM)
+        to_write, obs, pobs = self._cow_merge(
+            events, plan, old_entries, evolved, payload_cols, num_buckets,
+            checksum_cols, rowhash_mode, batch_id,
+        )
+        rpt.tick("plan")
+        # the dedup-window LSN set is independent of the merge output, so
+        # its (job-overhead-dominated) Parquet write is submitted BEFORE the
+        # big write job and backfills idle cores during the merge's
+        # stragglers/tail (guide-§2.6 overlap)
+        lsn_fut = lsn_pool.submit(
+            self.checkpoint.write_seen_lsns, batch_id, events.select("lsn")
+        )
+        # write files FIRST (unreferenced until the snapshot commit)
+        files = self.table.write_partition_files(
+            to_write, batch_id, pre_partitioned=True
+        )
+        stats = obs.get
+        rpt.tick("write+merge")
+
+        append_parts = set(plan.parts(APPEND))
+        observations = [pobs] if pobs is not None else []
+        if ts_parts:
+            rpt.partitions_carried = sum(p not in files for p in ts_parts)
+            appended, pobs2 = self._two_stream_survivors(
+                ts_parts, files, int(stats["displaced"] or 0), old_entries,
+                evolved, checksum_cols, rowhash_mode, plan.observe_stats,
+                batch_id,
+            )
+            append_parts |= appended
+            observations += [pobs2] if pobs2 is not None else []
+            rpt.tick("survivors")
+        rpt.partitions_two_stream = len(ts_parts)
+        rpt.partitions_appended = len(append_parts)
+
+        # per-partition lineage: already collected by the write jobs'
+        # observations (tier 1), else a narrow scan of the written files
+        # ("stored" tier 2) or a full payload re-hash ("reverify")
+        if plan.observe_stats:
+            part_rows = _observed_partition_stats(
+                observations, [p for p in plan.touched if p in files]
+            )
+        else:
+            part_rows = _written_partition_stats(
+                self.spark, self.table.root, files, evolved, checksum_cols,
+                cfg.partstats_mode, PARTSTATS_DRIVER_BYTES_LIMIT, rowhash_mode,
+            )
+        rpt.tick("partstats")
+        return part_rows, files, append_parts, stats, lsn_fut
+
+    def _cow_merge(
+        self,
+        events: DataFrame,
+        plan: BatchPlan,
+        old_entries: dict,
+        evolved: StructType,
+        payload_cols: list[str],
+        num_buckets: int,
+        checksum_cols: list[str],
+        rowhash_mode: str,
+        batch_id: int,
+    ) -> tuple[DataFrame, Observation, Observation | None]:
+        """The COW merge pipeline, ready to write: incumbent ∪ events
+        through ``build_merge_ranking`` — one wide shuffle on
+        (bucket, salt); both dedup windows, the LWW ranking, the per-key
+        liveness aggregate and the final write all run inside that
+        partitioning (Catalyst inserts sorts, never another exchange), so
+        the data moves across the network once.
+
+        Deliberately NOT cached: caching wide string rows is a GC bomb
+        (measured: 120 s GC in one 64-task stage). The pipeline runs
+        exactly once, inside the file write, with the ledger collected by
+        the returned observation on that same job and partition stats
+        either by a second observation riding it (``plan.observe_stats``)
+        or from a narrow read-back of the written files, which persist the
+        pipeline-computed per-row hash ``_h`` for it.
+        ``partstats_mode="reverify"`` instead re-hashes the on-disk
+        payload bytes as a bit-level integrity check.
+
+        TWO_STREAM partitions contribute only NARROW incumbent rows; the
+        pipeline writes their batch winners only, and the survivor pass
+        (``_two_stream_survivors``) carries their incumbent payload.
+        """
+        cfg = self.config
+        ts_parts = plan.parts(TWO_STREAM)
+        incumbent = self._read_physical(
+            old_entries, plan.parts(FUSED), evolved
+        ).withColumn("_src", F.lit(0))
+        if ts_parts:
+            # narrow branch: the resolve window needs only the merge keys
+            # and the LWW order columns; null literals on the rest prune
+            # the payload column chunks out of the parquet scan
+            field_types = {f.name: f.dataType for f in evolved.fields}
+            key_or_order = {"conv_id", "turn_idx", "ts"}
+            narrow_inc = (
+                self._read_physical(old_entries, ts_parts, evolved)
+                .select(
+                    F.col(PART_COL),
+                    *[
+                        F.col(c)
+                        if c in key_or_order
+                        else F.lit(None).cast(field_types[c]).alias(c)
+                        for c in payload_cols
+                    ],
+                    "_lsn",
+                    "_op",
+                )
+                .withColumn("_src", F.lit(0))
+            )
+            incumbent = incumbent.unionByName(narrow_inc)
+        evt = _event_rows(events, num_buckets, payload_cols, "1 AS _src")
+        ranked = build_merge_ranking(
+            incumbent.unionByName(evt), plan.hot_buckets, cfg.skew_salt,
+            incumbent=True, inc_any=bool(ts_parts),
+        )
+        obs = Observation(f"batch-{batch_id}")
+        # one parsed SQL expression per aggregate (vs ~6 driver round-trips
+        # per Column build); `_src = 1 AND _rn = 1` is the "winning event
+        # row" predicate throughout
+        obs_exprs = [
+            "sum(if(_src = 1 AND _rn = 1, 1, 0)) AS applied",
+            "sum(if(_src = 1 AND _replay = 1, 1, 0)) AS dups",
+            "sum(if(_src = 1 AND _replay = 0 AND _rn > 1, 1, 0)) AS superseded",
+            "sum(if(_src = 1 AND _rn = 1 AND _op IN ('I', 'U') AND _inc_live = 0, 1, 0)) AS ins",
+            "sum(if(_src = 1 AND _rn = 1 AND _op IN ('I', 'U') AND _inc_live = 1, 1, 0)) AS upd",
+            "sum(if(_src = 1 AND _rn = 1 AND _op = 'D' AND _inc_live = 1, 1, 0)) AS `del`",
+            "sum(if(_rn = 1 AND _op <> 'D', 1, 0)) AS live_after",
+            "max(if(_src = 1, _lsn, null)) AS mx",
+            # op histogram folded into the SAME observation (3 more
+            # conditional sums on the one pipeline execution) — a groupBy
+            # recompute would re-run the entire uncached merge
+            *[
+                f"sum(if(_src = 1 AND _replay = 0 AND _op = '{o}', 1, 0)) AS op_{o}"
+                for o in ("I", "U", "D")
+            ],
+        ]
+        keep = F.col("_rn") == 1
+        if ts_parts:
+            # merge-proven append: count batch winners that displaced an
+            # existing incumbent key in a two-stream partition. Zero ⇒
+            # every two-stream winner file is key-disjoint from its
+            # incumbent and appends with no further jobs; non-zero ⇒ a
+            # narrow keys semi-join pinpoints which partitions overlap.
+            ids = ", ".join(str(p) for p in ts_parts)
+            obs_exprs.append(
+                "sum(if(_src = 1 AND _rn = 1 AND _inc_any = 1 AND "
+                f"{PART_COL} IN ({ids}), 1, 0)) AS displaced"
+            )
+            # two-stream partitions: write only the batch's winning rows;
+            # narrow incumbent winners exist solely to decide per-key
+            # outcomes and feed the observation
+            keep = keep & ((F.col("_src") == 1) | ~F.col(PART_COL).isin(ts_parts))
+        merged = ranked.observe(obs, *[F.expr(s) for s in obs_exprs]).filter(keep)
+        # `_salt` rides along so the window's output ordering satisfies the
+        # write sort (projecting it away would truncate the known ordering
+        # and force a second full sort)
+        phys_cols = [PART_COL] + payload_cols + ["_lsn", "_op", "_salt"]
+        if cfg.partstats_mode == "reverify":
+            return merged.select(*phys_cols), obs, None
+        to_write = merged.withColumn(
+            "_h", _live_row_hash(merged, checksum_cols, rowhash_mode)
+        ).select(*phys_cols, "_h")
+        if not plan.observe_stats:
+            return to_write, obs, None
+        # tier 1 drops `_h` before the write: an incompressible 8 bytes/row
+        # that only the read-back tier would consume
+        to_write, pobs = _observe_partition_stats(
+            to_write, plan.touched, f"pstats-{batch_id}"
+        )
+        return to_write.drop("_h"), obs, pobs
+
+    def _two_stream_survivors(
+        self,
+        ts_parts: list[int],
+        files: dict[int, list[str]],
+        displaced: int,
+        old_entries: dict,
+        evolved: StructType,
+        checksum_cols: list[str],
+        rowhash_mode: str,
+        observe: bool,
+        batch_id: int,
+    ) -> tuple[set[int], Observation | None]:
+        """Settle the two-stream partitions after the merge wrote their
+        winners. Returns the ones that APPEND, and the survivor write's
+        stats observation (None when nothing was observed).
+
+        A two-stream partition with NO winner file is untouched by the
+        batch (every event replayed/superseded): its entry carries forward
+        verbatim. Of the rest, a partition where no winner key matches any
+        incumbent key appends (old files carry forward, stats xor-combine).
+        The merge window already counted key collisions (``displaced``):
+        zero ⇒ ALL of them append with no further jobs (the common
+        insert-stream case); non-zero ⇒ one narrow keys semi-join
+        pinpoints which partitions overlap (re-insert of an existing or
+        tombstoned key). Overlapping partitions copy their surviving
+        incumbent rows forward by a map-only scan + broadcast anti-join
+        on the written winners' keys — payload bytes are read once and
+        written once, never shuffled or window-sorted — into ``files``.
+        """
+        rewrite = [p for p in ts_parts if p in files]
+        if not rewrite:
+            return set(), None
+        phys = physical_schema(evolved)
+        keys = [PART_COL, "conv_id", "turn_idx"]
+        key_schema = StructType([f for f in phys.fields if f.name in keys])
+
+        def won_keys(parts: list[int]) -> DataFrame:
+            return F.broadcast(self._scan(key_schema, [f for p in parts for f in files[p]]))
+
+        def old_files(parts: list[int]) -> list[str]:
+            return [f for p in parts for f in old_entries[p]["files"]]
+
+        if displaced == 0:
+            appended = set(rewrite)
+        else:
+            overlapped = (
+                self._scan(key_schema, old_files(rewrite))
+                .join(won_keys(rewrite), keys, "left_semi")
+                .select(PART_COL)
+                .distinct()
+                .collect()
+            )
+            appended = set(rewrite) - {int(r[PART_COL]) for r in overlapped}
+        surv_parts = [p for p in rewrite if p not in appended]
+        pobs = None
+        if surv_parts:
+            surv = self._scan(phys, old_files(surv_parts)).join(
+                won_keys(surv_parts), keys, "left_anti"
+            )
+            if self.config.partstats_mode != "reverify":
+                surv = surv.withColumn(
+                    "_h", _live_row_hash(surv, checksum_cols, rowhash_mode)
+                )
+            if observe:
+                surv, pobs = _observe_partition_stats(
+                    surv, surv_parts, f"pstats2-{batch_id}"
+                )
+            written = self.table.write_partition_files(
+                surv, batch_id, pre_partitioned=True
+            )
+            for p, fl in written.items():
+                files[p] = files.get(p, []) + fl
+        return appended, pobs
+
+    def _count_cow(self, rpt: BatchReport, stats, pre, replaced_old_live: int) -> None:
+        """Fill the COW ledger from the merge observation. ``pre`` is the
+        grouped pre-resolve's (n, nd) row: it dropped (n − events into the
+        union) events — duplicates-by-lsn first, the rest lost LWW
+        in-batch."""
+        applied, sup, dups = (
+            int(stats[k] or 0) for k in ("applied", "superseded", "dups")
+        )
+        n_into_union = applied + sup + dups
+        n_pre, pre_dups = n_into_union, 0
+        if pre is not None:
+            n_pre, pre_dups = int(pre["n"]), int(pre["n"]) - int(pre["nd"])
+        rpt.applied = applied
+        rpt.inserts = int(stats["ins"] or 0)
+        rpt.updates = int(stats["upd"] or 0)
+        rpt.deletes = int(stats["del"] or 0)
+        rpt.superseded = sup + n_pre - n_into_union - pre_dups
+        rpt.deduped = rpt.events_read - rpt.quarantined - n_pre + pre_dups + dups
+        rpt.rows_after = (
+            rpt.rows_before - replaced_old_live + int(stats["live_after"] or 0)
+        )
+        if "op_histogram" in self.config.selected_metrics:
+            rpt.op_histogram = {
+                o: int(stats[f"op_{o}"] or 0)
+                for o in ("I", "U", "D")
+                if int(stats[f"op_{o}"] or 0)
+            }
+
+    def _commit(
+        self,
+        rpt: BatchReport,
+        replaced: dict,
+        schema: StructType,
+        digest: str | None,
+        seen,
+        max_lsn: int | None = None,
+    ) -> None:
+        """Commit tail of every apply route, in crash-safe order: ledger,
+        table snapshot (atomic pointer swap), dedup state, checkpoint
+        marker — markers are written last and the merge is idempotent, so
+        a crash at any boundary resumes cleanly. ``seen`` is the in-flight
+        background seen-LSN write (a Future), or, for an empty batch with
+        no write to overlap, the LSN frame to write now."""
+        rpt.table_digest = digest
+        rpt.wall_ms = rpt.elapsed_ms()
+        ledger = rpt.ledger(self.config.selected_metrics)
+        rpt.tick("ledger")
+        sid = self.table.commit(replaced, schema, rpt.batch_id, ledger, digest)
+        rpt.snapshot_id = sid
+        if isinstance(seen, DataFrame):
+            self.checkpoint.commit_batch(rpt.batch_id, ledger, sid, seen, -1)
+        else:
+            seen.result()  # dedup state durable before the marker
+            self.checkpoint.mark_committed(
+                rpt.batch_id, ledger, sid, max_lsn if max_lsn is not None else -1
+            )
+        rpt.tick("commit+seen")
 
     # --------------------------------------------------------- merge-on-read
     def _mor_tail(
@@ -1251,13 +1297,10 @@ class CdcEngine:
         evolved: StructType,
         payload_cols: list[str],
         num_buckets: int,
-        hot_buckets: list[int],
-        touched: list[int],
+        plan: BatchPlan,
         old_entries: dict,
-        batch_id: int,
         rpt: BatchReport,
-        _tick,
-        t0: float,
+        lsn_pool: ThreadPoolExecutor,
     ) -> BatchReport:
         """Merge-on-read write path (``EngineConfig.write_mode='mor'``).
 
@@ -1282,44 +1325,12 @@ class CdcEngine:
         COW digest for the same log (asserted in tests/test_mor.py).
         """
         cfg = self.config
-        from image_report_spark.plans.icelite import physical_schema
-
-        salt = (
-            F.when(
-                F.col(PART_COL).isin(hot_buckets),
-                F.pmod(F.xxhash64(F.col("conv_id"), F.col("turn_idx")), F.lit(cfg.skew_salt)).cast("int"),
-            ).otherwise(F.lit(0))
-            if hot_buckets
-            else F.lit(0)
-        )
-        evt = (
-            events.withColumn(PART_COL, partition_expr(num_buckets))
-            .select(
-                F.col(PART_COL),
-                *[F.col(c) for c in payload_cols],
-                F.col("lsn").alias("_lsn"),
-                F.col("op").alias("_op"),
-            )
-            .withColumn("_salt", salt)
-        )
-        repart_cols = [F.col(PART_COL)] + ([F.col("_salt")] if hot_buckets else [])
-        # same single-sort window family as the COW merge, minus the
-        # incumbent union: LWW rank + same-LSN replay adjacency in one spec
-        keyw = Window.partitionBy(PART_COL, "_salt", "conv_id", "turn_idx")
-        order = keyw.orderBy(
-            F.col("ts").desc_nulls_last(), F.col("_lsn").desc_nulls_last()
+        batch_id = rpt.batch_id
+        ranked = build_merge_ranking(
+            _event_rows(events, num_buckets, payload_cols),
+            plan.hot_buckets, cfg.skew_salt,
         )
         obs = Observation(f"mor-batch-{batch_id}")
-        ranked = (
-            evt.repartition(*repart_cols)
-            .withColumn("_rn", F.row_number().over(order))
-            .withColumn(
-                "_replay",
-                F.when(
-                    F.lag("_lsn").over(order).eqNullSafe(F.col("_lsn")), 1
-                ).otherwise(0),
-            )
-        )
         ranked_obs = ranked.observe(
             obs,
             F.count(F.lit(1)).alias("n_in"),
@@ -1330,145 +1341,115 @@ class CdcEngine:
             F.max("_lsn").alias("mx"),
         )
         winners = ranked_obs.filter(F.col("_rn") == 1)
-        phys_cols = [PART_COL] + payload_cols + ["_lsn", "_op"]
-        _tick("plan")
+        phys_cols = [PART_COL] + payload_cols + ["_lsn", "_op", "_salt"]
+        rpt.tick("plan")
         # as in the COW path: the seen-LSN write is independent of the
         # delta write, so it backfills the write job's tail (guide §2.6)
-        lsn_pool = ThreadPoolExecutor(max_workers=1)
-        try:
-            lsn_fut = lsn_pool.submit(
-                self.checkpoint.write_seen_lsns, batch_id, events.select("lsn")
-            )
-            files = self.table.write_partition_files(
-                winners.select(*(phys_cols + ["_salt"])), batch_id,
-                pre_partitioned=True,
-            )
-            stats = obs.get
-            _tick("write+delta")
+        lsn_fut = lsn_pool.submit(
+            self.checkpoint.write_seen_lsns, batch_id, events.select("lsn")
+        )
+        files = self.table.write_partition_files(
+            winners.select(*phys_cols), batch_id, pre_partitioned=True
+        )
+        stats = obs.get
+        rpt.tick("write+delta")
 
-            # classification + per-partition delta stats: one narrow job
-            key_cols = ["conv_id", "turn_idx"]
-            narrow = [PART_COL] + key_cols + ["ts", "_lsn", "_op"]
-            written_paths = [
-                os.path.join(self.table.root, f) for fl in files.values() for f in fl
-            ]
-            dback = (
-                self.spark.read.schema(physical_schema(evolved))
-                .parquet(*written_paths)
-                .select(*narrow)
+        # classification + per-partition delta stats: one narrow job
+        key_cols = ["conv_id", "turn_idx"]
+        narrow = [PART_COL] + key_cols + ["ts", "_lsn", "_op"]
+        phys = physical_schema(evolved)
+        dback = self._scan(phys, [f for fl in files.values() for f in fl]).select(*narrow)
+        inc_files = []
+        for p in plan.touched:
+            e = old_entries.get(p)
+            if e:
+                inc_files.extend(e["files"])
+                inc_files.extend(e.get("delta_files") or [])
+        if inc_files:
+            # size-gate the broadcasts: the bucket pre-pass already
+            # counted the batch's valid events on the driver — an upper
+            # bound on its distinct key count, so the gate never
+            # broadcasts a frame bigger than it expects
+            j = build_mor_classification(
+                dback,
+                self._scan(phys, inc_files).select(*narrow),
+                key_cols,
+                broadcast_keys=sum(plan.valid.values()) <= cfg.mor_broadcast_key_limit,
             )
-            inc_files = []
-            for p in touched:
-                e = old_entries.get(p)
-                if e:
-                    inc_files.extend(e["files"])
-                    inc_files.extend(e.get("delta_files") or [])
-            if inc_files:
-                inc_scan = (
-                    self.spark.read.schema(physical_schema(evolved))
-                    .parquet(*[os.path.join(self.table.root, f) for f in inc_files])
-                    .select(*narrow)
-                )
-                # size-gate the broadcasts: the bucket pre-pass already
-                # counted the batch's valid events on the driver — an upper
-                # bound on its distinct key count, so the gate never
-                # broadcasts a frame bigger than it expects
-                valid_events = rpt.events_read - rpt.quarantined
-                j = build_mor_classification(
-                    dback,
-                    inc_scan,
-                    key_cols,
-                    broadcast_keys=valid_events <= cfg.mor_broadcast_key_limit,
-                )
-            else:
-                j = (
-                    dback.withColumn("_i_ts", F.lit(None).cast("timestamp"))
-                    .withColumn("_i_lsn", F.lit(None).cast("long"))
-                    .withColumn("_i_live", F.lit(None).cast("int"))
-                )
-            # the delta winner beats the incumbent exactly when it would
-            # have won the COW union window: ts desc nulls last, lsn desc,
-            # incumbent wins exact ties
-            has_inc = F.col("_i_lsn").isNotNull()
-            ts_gt = F.col("ts").isNotNull() & (
-                F.col("_i_ts").isNull() | (F.col("ts") > F.col("_i_ts"))
+        else:
+            j = (
+                dback.withColumn("_i_ts", F.lit(None).cast("timestamp"))
+                .withColumn("_i_lsn", F.lit(None).cast("long"))
+                .withColumn("_i_live", F.lit(None).cast("int"))
             )
-            beats = (
-                (~has_inc)
-                | ts_gt
-                | (F.col("ts").eqNullSafe(F.col("_i_ts")) & (F.col("_lsn") > F.col("_i_lsn")))
+        # the delta winner beats the incumbent exactly when it would
+        # have won the COW union window: ts desc nulls last, lsn desc,
+        # incumbent wins exact ties
+        has_inc = F.col("_i_lsn").isNotNull()
+        ts_gt = F.col("ts").isNotNull() & (
+            F.col("_i_ts").isNull() | (F.col("ts") > F.col("_i_ts"))
+        )
+        beats = (
+            (~has_inc)
+            | ts_gt
+            | (F.col("ts").eqNullSafe(F.col("_i_ts")) & (F.col("_lsn") > F.col("_i_lsn")))
+        )
+        replay_vb = has_inc & (F.col("_lsn") == F.col("_i_lsn"))
+        upsert = F.col("_op").isin("I", "U")
+        live = F.col("_i_live") == 1
+        c = lambda p: F.sum(F.when(p, 1).otherwise(0))  # noqa: E731
+        pstats = (
+            j.groupBy(PART_COL)
+            .agg(
+                F.count(F.lit(1)).alias("rows"),
+                F.max("_lsn").alias("max_lsn"),
+                c(beats).alias("applied"),
+                c(~beats & replay_vb).alias("dups_vb"),
+                c(~beats & ~replay_vb).alias("sup_vb"),
+                c(beats & upsert & ~live.eqNullSafe(F.lit(True))).alias("ins"),
+                c(beats & upsert & live).alias("upd"),
+                c(beats & (F.col("_op") == "D") & live).alias("del"),
             )
-            replay_vb = has_inc & (F.col("_lsn") == F.col("_i_lsn"))
-            upsert = F.col("_op").isin("I", "U")
-            live = F.col("_i_live") == 1
-            c = lambda p: F.sum(F.when(p, 1).otherwise(0))  # noqa: E731
-            pstats = (
-                j.groupBy(PART_COL)
-                .agg(
-                    F.count(F.lit(1)).alias("rows"),
-                    F.max("_lsn").alias("max_lsn"),
-                    c(beats).alias("applied"),
-                    c(~beats & replay_vb).alias("dups_vb"),
-                    c(~beats & ~replay_vb).alias("sup_vb"),
-                    c(beats & upsert & ~live.eqNullSafe(F.lit(True))).alias("ins"),
-                    c(beats & upsert & live).alias("upd"),
-                    c(beats & (F.col("_op") == "D") & live).alias("del"),
-                )
-                .collect()
-            )
-            _tick("classify")
+            .collect()
+        )
+        rpt.tick("classify")
 
-            def s(col: str) -> int:
-                return sum(int(r[col] or 0) for r in pstats)
+        def s(col: str) -> int:
+            return sum(int(r[col] or 0) for r in pstats)
 
-            rpt.applied = s("applied")
-            rpt.inserts = s("ins")
-            rpt.updates = s("upd")
-            rpt.deletes = s("del")
-            rpt.superseded = int(stats["sup_b"] or 0) + s("sup_vb")
-            rpt.deduped = (
-                rpt.events_read - rpt.quarantined - rpt.applied - rpt.superseded
-            )
-            rpt.rows_before = sum(e["live_rows"] for e in old_entries.values())
-            rpt.rows_after = rpt.rows_before + rpt.inserts - rpt.deletes
-            max_lsn = stats["mx"]
+        rpt.applied = s("applied")
+        rpt.inserts = s("ins")
+        rpt.updates = s("upd")
+        rpt.deletes = s("del")
+        rpt.superseded = int(stats["sup_b"] or 0) + s("sup_vb")
+        rpt.deduped = (
+            rpt.events_read - rpt.quarantined - rpt.applied - rpt.superseded
+        )
+        rpt.rows_after = rpt.rows_before + rpt.inserts - rpt.deletes
 
-            replaced = {}
-            for r in pstats:
-                p = int(r[PART_COL])
-                old = old_entries.get(p)
-                old_lal = old.get("last_applied_lsn") if old else None
-                new_lal = int(r["max_lsn"]) if r["max_lsn"] is not None else None
-                entry = {
-                    "files": list(old["files"]) if old else [],
-                    "delta_files": (list(old.get("delta_files") or []) if old else [])
-                    + files.get(p, []),
-                    "row_count": (int(old["row_count"]) if old else 0) + int(r["rows"]),
-                    "live_rows": (int(old["live_rows"]) if old else 0)
-                    + int(r["ins"] or 0)
-                    - int(r["del"] or 0),
-                    # checksum/digest undefined while deltas are pending;
-                    # compact() restores them (and the table digest)
-                    "checksum": None,
-                    "last_applied_lsn": max(
-                        (v for v in (old_lal, new_lal) if v is not None),
-                        default=None,
-                    ),
-                }
-                replaced[p] = entry
-            rpt.table_digest = None
-            rpt.wall_ms = int((time.monotonic() - t0) * 1000)
-            ledger = rpt.ledger(cfg.selected_metrics)
-            _tick("ledger")
-            sid = self.table.commit(replaced, evolved, batch_id, ledger, None)
-            rpt.snapshot_id = sid
-            lsn_fut.result()  # dedup state durable before the marker
-            self.checkpoint.mark_committed(
-                batch_id, ledger, sid, max_lsn if max_lsn is not None else -1
-            )
-            _tick("commit+seen")
-        finally:
-            lsn_pool.shutdown(wait=True)
+        replaced = {}
+        for r in pstats:
+            p = int(r[PART_COL])
+            old = old_entries.get(p)
+            old_lal = old.get("last_applied_lsn") if old else None
+            new_lal = int(r["max_lsn"]) if r["max_lsn"] is not None else None
+            replaced[p] = {
+                "files": list(old["files"]) if old else [],
+                "delta_files": (list(old.get("delta_files") or []) if old else [])
+                + files.get(p, []),
+                "row_count": (int(old["row_count"]) if old else 0) + int(r["rows"]),
+                "live_rows": (int(old["live_rows"]) if old else 0)
+                + int(r["ins"] or 0)
+                - int(r["del"] or 0),
+                # checksum/digest undefined while deltas are pending;
+                # compact() restores them (and the table digest)
+                "checksum": None,
+                "last_applied_lsn": max(
+                    (v for v in (old_lal, new_lal) if v is not None),
+                    default=None,
+                ),
+            }
+        self._commit(rpt, replaced, evolved, None, lsn_fut, stats["mx"])
 
         # auto-compaction policy: fold deltas back into base for any
         # TOUCHED partition whose accumulated delta bytes crossed
@@ -1494,7 +1475,7 @@ class CdcEngine:
             if crossed:
                 self.compact(partitions=sorted(crossed))
                 rpt.auto_compacted_partitions = len(crossed)
-                _tick("auto_compact")
+                rpt.tick("auto_compact")
         return rpt
 
     def compact(self, partitions: list[int] | None = None) -> dict:
@@ -1540,28 +1521,19 @@ class CdcEngine:
         )
         part_rows = _written_partition_stats(
             self.spark, self.table.root, files, logical, checksum_cols,
-            self.config.partstats_mode, self.config.partstats_driver_bytes_limit,
+            self.config.partstats_mode, PARTSTATS_DRIVER_BYTES_LIMIT,
             rowhash_mode,
         )
-        ck_id = _checksum_cols_id(checksum_cols, rowhash_mode)
-        replaced = {}
-        for r in part_rows:
-            p = int(r[PART_COL])
-            replaced[p] = {
-                "files": files.get(p, []),
+        # compacted entries are clean + freshly checksummed, so they are
+        # append-eligible for subsequent COW batches
+        ck_id = _checksum_cols_id(checksum_cols, rowhash_mode, logical)
+        replaced = {
+            int(r[PART_COL]): {
+                **_manifest_entry(r, files.get(int(r[PART_COL]), []), ck_id),
                 "delta_files": [],
-                "row_count": int(r["row_count"]),
-                "live_rows": int(r["live_rows"]),
-                "checksum": r["checksum"],
-                "last_applied_lsn": int(r["last_applied_lsn"])
-                if r["last_applied_lsn"] is not None
-                else None,
-                # compacted entries are clean + freshly checksummed, so they
-                # are append-fast-path-eligible for subsequent COW batches
-                "key_lo": r["key_lo"],
-                "key_hi": r["key_hi"],
-                "ck_id": ck_id,
             }
+            for r in part_rows
+        }
         # digest is defined again only once NO entry still has a pending
         # delta or an undefined checksum
         all_entries = {e["partition"]: e for e in snap["manifest"]}
@@ -1571,12 +1543,7 @@ class CdcEngine:
             e.get("checksum") is not None and not (e.get("delta_files") or [])
             for e in all_entries.values()
         ):
-            digest = table_digest(
-                [
-                    (p, e["live_rows"], e["checksum"])
-                    for p, e in all_entries.items()
-                ]
-            )
+            digest = _manifest_digest(all_entries)
         ledger = {"op": "compaction", "compacted_partitions": len(parts)}
         sid = self.table.commit(replaced, logical, None, ledger, digest)
         return {
@@ -1690,28 +1657,34 @@ class CdcEngine:
         }
 
     # -------------------------------------------------------------- internals
-    def _read_physical(self, partitions: list[int], logical: StructType) -> DataFrame:
-        """Touched-partition scan through the *evolved* schema projection."""
-        snap = self.table.snapshot()
-        from image_report_spark.plans.icelite import physical_schema
+    def _scan(self, schema: StructType, rel_paths: list[str]) -> DataFrame:
+        """Parquet scan of table-relative data files through ``schema``."""
+        return self.spark.read.schema(schema).parquet(
+            *[os.path.join(self.table.root, f) for f in rel_paths]
+        )
 
+    def _read_physical(
+        self, entries: dict, partitions: list[int], logical: StructType
+    ) -> DataFrame:
+        """Scan of ``partitions``' files (from the loaded manifest
+        ``entries``) through the *evolved* schema projection."""
         phys = physical_schema(logical)
         files = []
-        for e in snap["manifest"]:
-            if e["partition"] in partitions:
+        for p, e in entries.items():
+            if p in partitions:
                 if e.get("delta_files"):
                     # a COW merge's union window would mis-attribute
                     # incumbent liveness over unresolved delta rows —
                     # refuse rather than silently corrupt the ledger
                     raise RuntimeError(
-                        f"partition {e['partition']} has pending merge-on-read "
+                        f"partition {p} has pending merge-on-read "
                         "delta files; run compact() before applying "
                         "copy-on-write batches to this table"
                     )
-                files.extend(os.path.join(self.table.root, f) for f in e["files"])
+                files.extend(e["files"])
         if not files:
             return self.spark.createDataFrame([], phys)
-        return self.spark.read.schema(phys).parquet(*files)
+        return self._scan(phys, files)
 
     def _write_quarantine(self, bad: DataFrame, batch_id: int) -> None:
         reason = (

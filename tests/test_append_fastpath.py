@@ -18,8 +18,9 @@ Correctness contract tested here:
 * ANY key overlap — a re-insert via op 'I', or a tombstone for the key —
   forces the normal rewrite path for that partition;
 * the ck_id guard: after an additive schema evolution changes the
-  checksum column set, stale entries are not xor-combined (they take one
-  full rewrite, then regain appendability).
+  checksum column set, or a type promotion widens a checksum column,
+  stale entries are not xor-combined (they take one full rewrite, then
+  regain appendability).
 """
 
 from __future__ import annotations
@@ -31,20 +32,23 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from pyspark.sql.types import FloatType, IntegerType, StructField, StructType
+
 from image_report_spark.config import EngineConfig
-from image_report_spark.engine import CdcEngine
+from image_report_spark.engine import TRANSCRIPT_SCHEMA, CdcEngine
 from image_report_spark.fixtures import ChangeLogGenerator, apply_oracle
 
 TS0 = pd.Timestamp("2026-01-01T00:00:00")
 
 
-def _write_batch(log_dir: str, batch_id: int, rows: list[dict]) -> None:
+def _write_batch(log_dir: str, batch_id: int, rows: list[dict], **types) -> None:
     os.makedirs(log_dir, exist_ok=True)
     df = pd.DataFrame(rows)
     types = {
         "lsn": pa.int64(), "op": pa.string(), "conv_id": pa.string(),
         "turn_idx": pa.int32(), "role": pa.string(), "text": pa.string(),
         "tool": pa.string(), "ts": pa.timestamp("us"), "meta": pa.string(),
+        **types,
     }
     schema = pa.schema([(c, types[c]) for c in df.columns])
     pq.write_table(
@@ -60,11 +64,12 @@ def _ins(lsn, conv, turn, text, ts_off_s=0, **extra) -> dict:
     )
 
 
-def _mk(spark, root, name: str, fastpath: bool, **cfg):
+def _mk(spark, root, name: str, fastpath: bool, schema=TRANSCRIPT_SCHEMA, **cfg):
     return CdcEngine.init(
         spark,
         str(root / f"tbl-{name}"),
         str(root / f"cp-{name}"),
+        schema=schema,
         config=EngineConfig(
             num_buckets=8, shuffle_partitions=8,
             cow_append_fastpath=fastpath, **cfg,
@@ -269,6 +274,42 @@ def test_ck_id_guard_on_checksum_column_set_change(spark, tmp_path):
     off.run(log)
     assert r1.partitions_appended == 0   # stale ck_id → rewrite
     assert r2.partitions_appended > 0    # restored under the new set
+    _assert_equiv(on, off)
+
+
+@pytest.mark.parametrize("rowhash_mode", ["typed", "canonical"])
+@pytest.mark.parametrize("promotion", ["int_bigint", "float_double"])
+def test_type_promotion_then_append_matches_rewrite(
+    spark, tmp_path, promotion, rowhash_mode
+):
+    """A type promotion of a checksum column changes every row hash of
+    that column (and, for float→double, its canonical string), so an
+    entry hashed under the narrow type must not be xor-combined with rows
+    hashed under the wide one: the promoted batch rewrites, and the batch
+    after it appends again."""
+    log = str(tmp_path / "log")
+    if promotion == "int_bigint":
+        col, field, narrow, wide = "n", IntegerType(), pa.int32(), pa.int64()
+    else:
+        col, field, narrow, wide = "score", FloatType(), pa.float32(), pa.float64()
+    schema = StructType(list(TRANSCRIPT_SCHEMA.fields) + [StructField(col, field)])
+    for b, typ in enumerate((narrow, wide, wide)):
+        # 0.1 is inexact in binary, so a widened float is not the double
+        # a double column would have held
+        _write_batch(
+            log, b,
+            [_ins(100 * b + i, 16 * b + i, 0, f"t{b}-{i}", ts_off_s=60 * b,
+                  **{col: i if col == "n" else i + 0.1}) for i in range(16)],
+            **{col: typ},
+        )
+    on = _mk(spark, tmp_path, "on", True, schema, rowhash_mode=rowhash_mode)
+    off = _mk(spark, tmp_path, "off", False, schema, rowhash_mode=rowhash_mode)
+    r_on = on.run(log)
+    r_off = off.run(log)
+    for a, b in zip(r_on, r_off):
+        assert a.conservation_ok()
+        assert a.table_digest == b.table_digest, a.batch_id
+    assert r_on[2].partitions_appended > 0
     _assert_equiv(on, off)
 
 

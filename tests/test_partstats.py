@@ -7,8 +7,9 @@ order-independent checksum):
 
 * tier 1 (default): conditional ``observe()`` aggregates riding the write
   job itself — zero extra Spark job, zero read-back bytes;
-* tier 2 (``partstats_observe_limit=0`` or > limit touched partitions):
-  a narrow 4-fixed-width-column scan of the freshly written files;
+* tier 2 (more than ``engine.PARTSTATS_OBSERVE_LIMIT`` touched partitions;
+  the tests force it by patching the constant to 0): a narrow
+  fixed-width-column scan of the freshly written files;
 * ``partstats_mode="reverify"``: re-hash the on-disk payload bytes — the
   bit-level end-to-end write-integrity check (pre-round-5 behavior).
 
@@ -99,6 +100,10 @@ def _run(spark, tmp_path, name, **cfg):
     return eng, rpt, eng.table.snapshot()
 
 
+def _force_readback_tier(monkeypatch):
+    monkeypatch.setattr(engine_mod, "PARTSTATS_OBSERVE_LIMIT", 0)
+
+
 def _lineage(snap):
     return {
         e["partition"]: (
@@ -111,9 +116,10 @@ def _lineage(snap):
     }
 
 
-def test_all_three_tiers_identical(spark, tmp_path):
+def test_all_three_tiers_identical(spark, tmp_path, monkeypatch):
     _, r1, s1 = _run(spark, tmp_path, "observe")  # tier 1 (default)
-    _, r2, s2 = _run(spark, tmp_path, "narrow", partstats_observe_limit=0)
+    _force_readback_tier(monkeypatch)
+    _, r2, s2 = _run(spark, tmp_path, "narrow")
     _, r3, s3 = _run(spark, tmp_path, "reverify", partstats_mode="reverify")
     assert _lineage(s1) == _lineage(s2) == _lineage(s3)
     assert s1["table_digest"] == s2["table_digest"] == s3["table_digest"]
@@ -134,11 +140,12 @@ def test_observe_tier_skips_readback_and_narrow_uses_it(spark, tmp_path, monkeyp
     monkeypatch.setattr(engine_mod, "_written_partition_stats", spy)
     _run(spark, tmp_path, "observe")
     assert calls == []  # tier 1: stats rode the write job, no read-back
-    _run(spark, tmp_path, "narrow", partstats_observe_limit=0)
+    _force_readback_tier(monkeypatch)
+    _run(spark, tmp_path, "narrow")
     assert len(calls) == 1  # tier 2: exactly one read-back
 
 
-def test_row_hash_persisted_only_on_readback_tier(spark, tmp_path):
+def test_row_hash_persisted_only_on_readback_tier(spark, tmp_path, monkeypatch):
     """Tier 1 (observe) must NOT pay the ~8 incompressible bytes/row for a
     stored ``_h`` nobody reads back; tier 2 (narrow read-back) needs it in
     the files. Logical reads never surface the stats columns either way."""
@@ -147,23 +154,25 @@ def test_row_hash_persisted_only_on_readback_tier(spark, tmp_path):
     cols1 = spark.read.parquet(os.path.join(eng1.table.root, f1)).columns
     assert "_h" not in cols1 and "_salt" in cols1
 
-    eng2, _, snap2 = _run(spark, tmp_path, "narrow", partstats_observe_limit=0)
+    _force_readback_tier(monkeypatch)
+    eng2, _, snap2 = _run(spark, tmp_path, "narrow")
     f2 = next(e["files"][0] for e in snap2["manifest"] if e["files"])
     cols2 = spark.read.parquet(os.path.join(eng2.table.root, f2)).columns
     assert "_h" in cols2 and "_salt" in cols2
     assert "_h" not in eng2.read().columns
 
 
-def test_reverify_checksum_comes_from_disk_bytes(spark, tmp_path):
+def test_reverify_checksum_comes_from_disk_bytes(spark, tmp_path, monkeypatch):
     """reverify recomputes the hash from on-disk payloads: corrupt one
     written file's payload (rewrite the text values, keeping the stored
     per-row hashes ``_h`` as originally computed) and the reverify
     read-back must disagree with the committed checksum, while the stored
-    tier (trusting ``_h``) does not. Runs under the narrow tier
-    (partstats_observe_limit=0) — the only tier that persists ``_h``."""
+    tier (trusting ``_h``) does not. Runs under the narrow tier — the only
+    tier that persists ``_h``."""
     F = engine_mod.F
 
-    eng, _, snap = _run(spark, tmp_path, "narrow", partstats_observe_limit=0)
+    _force_readback_tier(monkeypatch)
+    eng, _, snap = _run(spark, tmp_path, "narrow")
     entry = next(e for e in snap["manifest"] if e["live_rows"] > 0)
     path = os.path.join(eng.table.root, entry["files"][0])
     df = spark.read.parquet(path)
@@ -236,7 +245,9 @@ def test_second_batch_and_reapply_stable_under_observe_tier(spark, tmp_path):
     assert rpt2.conservation_ok()
 
 
-def test_driver_tier_matches_spark_readback_with_null_keys(spark, tmp_path):
+def test_driver_tier_matches_spark_readback_with_null_keys(
+    spark, tmp_path, monkeypatch
+):
     """Null merge keys are legal and produce files whose conv_id column
     chunk can be all-null (no footer min/max) — the driver tier's
     footer-statistics shortcut must fall back to reading the column and
@@ -251,11 +262,12 @@ def test_driver_tier_matches_spark_readback_with_null_keys(spark, tmp_path):
         schema="lsn long, op string, conv_id string, turn_idx int, "
         "role string, text string, tool string, ts timestamp",
     )
+    _force_readback_tier(monkeypatch)
     eng = CdcEngine.init(
         spark,
         str(tmp_path / "nullk" / "tbl"),
         str(tmp_path / "nullk" / "cp"),
-        config=EngineConfig(num_buckets=4, partstats_observe_limit=0),
+        config=EngineConfig(num_buckets=4),
     )
     eng.apply_batch(ev, 0)
     snap = eng.table.snapshot()
@@ -276,14 +288,13 @@ def test_driver_tier_matches_spark_readback_with_null_keys(spark, tmp_path):
             assert a[f] == b[f], (a["_p"], f, a[f], b[f])
 
 
-def test_driver_tier_matches_spark_readback(spark, tmp_path):
-    """The driver-side arrow read-back (partstats_driver_bytes_limit)
+def test_driver_tier_matches_spark_readback(spark, tmp_path, monkeypatch):
+    """The driver-side arrow read-back (PARTSTATS_DRIVER_BYTES_LIMIT)
     produces byte-identical stats to the Spark-job read-back on the same
     files, including tombstone skip-nulls, unsigned hex checksums and the
     string zone map."""
-    eng, _, snap = _run(
-        spark, tmp_path, "narrow", partstats_observe_limit=0
-    )
+    _force_readback_tier(monkeypatch)
+    eng, _, snap = _run(spark, tmp_path, "narrow")
     logical = eng.table.logical_schema()
     cols = snap.get("checksum_columns") or [f.name for f in logical.fields]
     files = {

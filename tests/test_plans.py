@@ -30,50 +30,37 @@ def _executed_plan(df) -> str:
 
 
 def test_merge_pipeline_has_single_exchange(spark, tmp_path):
-    """Events ∪ incumbent → repartition → two windows → filter: ONE
-    Exchange; the windows run inside the repartition's clustering."""
-    from pyspark.sql import Window
-    from image_report_spark.plans.icelite import PART_COL, partition_expr
+    """Incumbent ∪ events → the engine's own merge ranking
+    (``build_merge_ranking``) → winner filter: ONE Exchange on the cold
+    path, the salted hot path and the two-stream ``_inc_any`` variant —
+    the windows run inside the repartition's clustering."""
+    from image_report_spark.engine import _event_rows, build_merge_ranking
 
     gen = ChangeLogGenerator(seed=50, n_convs=30, max_turns=5, n_batches=1)
     log = str(tmp_path / "log")
     gen.write_log(log)
     ev = spark.read.parquet(f"{log}/batch-00000.parquet")
-    evt = (
-        ev.withColumn(PART_COL, partition_expr(8))
-        .select(
-            PART_COL, "conv_id", "turn_idx", "role", "text", "tool", "ts",
-            F.col("lsn").alias("_lsn"), F.col("op").alias("_op"),
-        )
-        .withColumn("_src", F.lit(1))
-        .withColumn("_salt", F.lit(0))
+    payload = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
+    rows = _event_rows(ev, 8, payload, "0 AS _src").unionByName(
+        _event_rows(ev, 8, payload, "1 AS _src")
     )
-    # cold path: salt is lit(0) → repartition on the bucket alone (the
-    # engine does the same; a literal in hashpartitioning would defeat the
-    # window's clustering-subset satisfaction and buy a second Exchange)
-    u = evt.repartition(F.col(PART_COL))
-    keyw = Window.partitionBy(PART_COL, "_salt", "conv_id", "turn_idx")
-    order = keyw.orderBy(
-        F.col("ts").desc_nulls_last(), F.col("_lsn").desc_nulls_last(),
-        F.col("_src").asc(),
-    )
-    ranked = (
-        u.withColumn("_rn", F.row_number().over(order))
-        .withColumn(
-            "_replay",
-            F.when(F.lag("_lsn").over(order).eqNullSafe(F.col("_lsn")), 1).otherwise(0),
-        )
-        .withColumn(
-            "_inc_live",
-            F.max(F.when((F.col("_src") == 0) & (F.col("_op") != "D"), 1).otherwise(0)).over(keyw),
-        )
-        .filter(F.col("_rn") == 1)
-    )
-    plan = _explain(ranked)
-    # formatted explain lists each physical node once in the tree and once
-    # in the detail section — count distinct Exchange NODES
-    n_exchanges = len(set(re.findall(r"\(\d+\) Exchange", plan)))
-    assert n_exchanges == 1, plan  # the windows add sorts, never exchanges
+    # cold: salt is lit(0) → repartition on the bucket alone (a literal in
+    # hashpartitioning would defeat the window's clustering-subset
+    # satisfaction and buy a second Exchange); hot: salted buckets;
+    # two-stream: the extra `_inc_any` aggregate on the same frame
+    for hot, inc_any in (([], False), ([0, 3, 5], False), ([], True)):
+        ranked = build_merge_ranking(
+            rows, hot, 16, incumbent=True, inc_any=inc_any
+        ).filter(F.col("_rn") == 1)
+        assert ("_inc_any" in ranked.columns) == inc_any
+        plan = _explain(ranked)
+        # formatted explain lists each physical node once in the tree and
+        # once in the detail section — count distinct Exchange NODES
+        n_exchanges = len(set(re.findall(r"\(\d+\) Exchange", plan)))
+        assert n_exchanges == 1, (hot, inc_any, plan)
+        # only the hot path hashes on the salt
+        parts = [ln for ln in plan.splitlines() if "hashpartitioning(" in ln]
+        assert parts and all(("_salt" in ln) == bool(hot) for ln in parts), plan
 
 
 def test_pruned_read_lists_only_touched_files(spark, tmp_path):

@@ -39,6 +39,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+import image_report_spark.engine as engine_mod
 from image_report_spark.config import EngineConfig
 from image_report_spark.engine import CdcEngine
 from image_report_spark.fixtures import ChangeLogGenerator
@@ -97,16 +98,17 @@ def _assert_equiv(on, off, reports_on, reports_off):
 
 
 @pytest.mark.parametrize("observe_limit", [64, 0])
-def test_mixed_workload_matches_fused(spark, tmp_path, observe_limit):
+def test_mixed_workload_matches_fused(spark, tmp_path, monkeypatch, observe_limit):
     """Replays, late updates, LWW ties, deletes — both partstats tiers."""
+    monkeypatch.setattr(engine_mod, "PARTSTATS_OBSERVE_LIMIT", observe_limit)
     gen = ChangeLogGenerator(
         seed=11, n_convs=80, max_turns=8, n_batches=5,
         dup_frac=0.05, ooo_window=6, late_frac=0.10,
     )
     log = str(tmp_path / "log")
     gen.write_log(log)
-    on = _mk(spark, tmp_path, "on", True, partstats_observe_limit=observe_limit)
-    off = _mk(spark, tmp_path, "off", False, partstats_observe_limit=observe_limit)
+    on = _mk(spark, tmp_path, "on", True)
+    off = _mk(spark, tmp_path, "off", False)
     reports_on = on.run(log)
     reports_off = off.run(log)
     assert all(r.conservation_ok() for r in reports_on)
