@@ -90,7 +90,8 @@ def get_selected_metrics(spec: str | None) -> set[str]:
 
 @dataclass
 class EngineConfig:
-    """Tunables for the CDC apply path.
+    """The choices a caller makes about the CDC apply path. Tuning values
+    are constants in ``engine.py``, next to the code that reads them.
 
     Defaults are sized for the sandbox (``local[32]``); on a real cluster
     ``num_buckets`` scales with executor count.
@@ -118,21 +119,10 @@ class EngineConfig:
     #: metric selector spec (see get_selected_metrics)
     metrics: str = "basic"
 
-    #: change events per conv_id above which the key is considered hot and
-    #: salted before wide stages (salt = pmod(xxhash64(turn_idx), skew_salt))
-    hot_key_threshold: int = 100_000
-
-    #: number of salt values for hot keys
-    skew_salt: int = 16
-
     #: use the applyInPandas per-conversation ordered-apply resolver instead
     #: of the window-function resolver (semantically identical; the grouped
     #: path exists for stateful per-conversation extensions)
     grouped_resolve: bool = False
-
-    #: manifest format version (graft of the v2 16-bit-ceiling escape hatch,
-    #: reference docs/report-schema-v2.md:96-105)
-    format_version: int = 1
 
     #: physical merge strategy. "cow" (copy-on-write, default): a touched
     #: partition is fully rewritten each batch — reads stay scan-only, the
@@ -174,74 +164,12 @@ class EngineConfig:
     #:   jobs. Monotonic insert keys (auto-increment ids, snowflakes,
     #:   event time — the classic CDC insert pattern) append on metadata
     #:   alone.
-    #: * MERGE-PROVEN (``cow_two_stream``): interleaved-but-disjoint key
-    #:   sets the zone maps can't prove are proven by the merge itself.
+    #: * MERGE-PROVEN (the two-stream merge, ``engine.TWO_STREAM_*``):
+    #:   interleaved-but-disjoint key sets the zone maps can't prove are
+    #:   proven by the merge itself.
+    #:
+    #: False turns off both tiers.
     cow_append_fastpath: bool = True
-
-    #: COW two-stream merge — the append fast-path's MERGE-PROVEN tier
-    #: (guide §2.2: shuffle fewer bytes). A rewrite partition whose batch
-    #: slice is PURE INSERTS contributes only NARROW incumbent rows (merge
-    #: keys + ts/lsn/op; payload column chunks never leave the parquet
-    #: scan) to the resolve window, and the merge's own observation counts
-    #: winners that displaced an incumbent key. Zero displaced ⇒ the
-    #: winner file is provably key-disjoint from the incumbent, so it
-    #: APPENDS and the incumbent files carry forward — the append
-    #: fast-path outcome for the interleaved key ranges the zone-map tier
-    #: cannot prove, with no extra per-batch job.
-    #: Non-zero (an insert re-used an existing or tombstoned key) ⇒ one
-    #: narrow keys semi-join pinpoints the overlapping partitions, which
-    #: are rebuilt as written winners + a map-only broadcast anti-join
-    #: copy of the surviving incumbent rows (payload read once, written
-    #: once, never shuffled). Buckets with update/delete events take the
-    #: fused path unchanged: their targets overlap by construction, and
-    #: the survivor-rewrite detour measures SLOWER than the fused shuffle
-    #: at transcript payload widths (A/B in OPTIMIZATION_r06.md). Row
-    #: set, ledger and partition checksums are identical to the fused
-    #: path by construction — the whole narrow incumbent flows through
-    #: the same LWW window, so every stat observes the same rows (pinned
-    #: by the digest-equality tests in tests/test_two_stream.py). A
-    #: two-stream partition none of whose batch events win keeps its old
-    #: files verbatim (metadata carry-forward — a stale re-insert flood
-    #: rewrites nothing). Requires ``cow_append_fastpath`` (False must
-    #: keep forcing full rewrites, as documented there).
-    cow_two_stream: bool = True
-
-    #: a partition is two-stream-eligible only while its incumbent file
-    #: count is below this bound; at/above it the batch takes the fused
-    #: rewrite, which coalesces the partition back to one file. This is
-    #: the small-files backstop: each appended batch adds a file per
-    #: partition, so without the bound an endless interleaved-insert
-    #: stream would accumulate files monotonically (the round-5 verdict's
-    #: append-path concern — this tier self-bounds). 8 ≈ Iceberg-style
-    #: "compact every few commits" amortization.
-    cow_two_stream_max_files: int = 8
-
-    #: per-partition engagement ratio: a partition is two-stream-eligible
-    #: only when its incumbent rows are at least this multiple of the
-    #: batch rows landing in it. Appending necessarily produces one small
-    #: file per partition per batch; when the incumbent is only 1-4× the
-    #: batch (early bulk-load batches, small tables) the avoided rewrite
-    #: is worth less than the small-files tax every subsequent scan of
-    #: that partition pays — measured at bench shape (2 M × 8, 128
-    #: buckets): appends with ratio ≤ 4 cost +2-4 s per apply vs fused
-    #: (OPTIMIZATION_r06.md). At ratio ≥ 8 the rewrite is ≥ 8× the bytes
-    #: of the append and the trade flips — the long-running insert-stream
-    #: case (growing table, steady batch size) where each batch would
-    #: otherwise rewrite the whole partition. A data-shape breakeven, not
-    #: a core-count constant.
-    cow_two_stream_min_ratio: float = 8.0
-
-    #: MOR classification join strategy gate: when the batch's VALID event
-    #: count (an upper bound on its distinct key count, free from the
-    #: bucket pre-pass) is at or below this, the delta key set and the
-    #: pruned incumbent are broadcast (tiny batches classify with zero
-    #: wide shuffles); above it the classification falls back to a
-    #: shuffled semi-join + sort-merge join — a 10–100 M-event initial
-    #: load must degrade to a shuffle, not hit the 8 GB broadcast /
-    #: driver-memory wall. 2 M keys ≈ 100–150 MB broadcast of
-    #: (conv_id, turn_idx) rows — comfortably inside executor memory at
-    #: either scale.
-    mor_broadcast_key_limit: int = 2_000_000
 
     #: MOR auto-compaction policy: after a MOR batch commits, any touched
     #: partition whose accumulated delta bytes exceed this fraction of its
@@ -265,24 +193,6 @@ class EngineConfig:
     #: behavior; 15-25% of apply wall at sf0.1). Checksums are identical
     #: in both modes (tests/test_partstats.py).
     partstats_mode: str = "stored"
-
-    #: per-row checksum hash definition for NEW tables, frozen into the
-    #: snapshot at create (like ``checksum_columns``) so every tier —
-    #: stored/observe/driver read-back, reverify, MOR compact, replay
-    #: verify — hashes identically for the table's whole lifetime.
-    #: "typed" (default): xxhash64 over native typed columns with typed
-    #: NULL sentinels (functions/digests.py:typed_row_digest) — no per-row
-    #: cast-strings or concat buffer, removing ~200 B of garbage per
-    #: written row from a merge stage measured at 46-73% JVM GC time
-    #: (BENCH/merge_stage_profile.py, BENCH/rowhash_probe.py: the
-    #: canonical form costs 0.25-0.3 s per 2 M rows before GC
-    #: amplification). "canonical": the original string-canonicalized
-    #: form — pre-existing tables (no ``rowhash_mode`` in their snapshot)
-    #: always read as canonical, so their manifests remain valid and
-    #: append-path xor-combines never mix definitions (the per-entry
-    #: ``ck_id`` additionally tags the mode). Checksums are an internal
-    #: integrity contract; no external system consumes their values.
-    rowhash_mode: str = "typed"
 
     selected_metrics: set[str] = field(init=False, repr=False)
 
@@ -311,18 +221,8 @@ class EngineConfig:
             raise ValueError(
                 f"partstats_mode must be stored|reverify, got {self.partstats_mode!r}"
             )
-        if self.rowhash_mode not in ("typed", "canonical"):
-            raise ValueError(
-                f"rowhash_mode must be typed|canonical, got {self.rowhash_mode!r}"
-            )
-        if self.cow_two_stream_max_files < 1:
-            raise ValueError("cow_two_stream_max_files must be >= 1")
-        if self.cow_two_stream_min_ratio < 0:
-            raise ValueError("cow_two_stream_min_ratio must be >= 0")
         if self.num_buckets < 1:
             raise ValueError("num_buckets must be >= 1")
-        if self.mor_broadcast_key_limit < 0:
-            raise ValueError("mor_broadcast_key_limit must be >= 0")
         if self.mor_compact_delta_ratio is not None and not (
             self.mor_compact_delta_ratio > 0
         ):

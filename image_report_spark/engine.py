@@ -449,6 +449,84 @@ def build_mor_classification(
 #: per-partition routes of a COW batch (``BatchPlan.route``)
 APPEND, TWO_STREAM, FUSED = "append", "two_stream", "fused"
 
+#: hot threshold, read in two places. ``plan_batch`` counts a batch's
+#: valid events per BUCKET: a bucket above it is hot, and the merge window
+#: (``build_merge_ranking``) spreads its rows over ``SKEW_SALT`` sub-keys
+#: by ``pmod(xxhash64(conv_id, turn_idx), SKEW_SALT)``. The grouped
+#: pre-resolve (``grouped_resolve``) counts events per CONV_ID
+#: (``detect_hot_keys``): a conversation above it is salted by
+#: ``pmod(xxhash64(turn_idx), SKEW_SALT)`` (``salt_hot_keys``) before its
+#: applyInPandas groups. Either salt keeps every event of one key in one
+#: salted group, so per-key resolution is unchanged.
+HOT_EVENTS = 100_000
+
+#: number of salt values a hot bucket or hot conversation fans out over
+SKEW_SALT = 16
+
+# The merge-proven tier of the append fast-path (TWO_STREAM, guide §2.2:
+# shuffle fewer bytes). A rewrite partition whose batch slice is PURE
+# INSERTS contributes only NARROW incumbent rows (merge keys + ts/lsn/op;
+# payload column chunks never leave the parquet scan) to the resolve
+# window, and the merge's own observation counts winners that displaced
+# an incumbent key. Zero displaced ⇒ the winner file is provably
+# key-disjoint from the incumbent, so it APPENDS and the incumbent files
+# carry forward — the append fast-path outcome for the interleaved key
+# ranges the zone-map tier cannot prove, with no extra per-batch job.
+# Non-zero (an insert re-used an existing or tombstoned key) ⇒ one narrow
+# keys semi-join pinpoints the overlapping partitions, which are rebuilt
+# as written winners + a map-only broadcast anti-join copy of the
+# surviving incumbent rows (payload read once, written once, never
+# shuffled). Buckets with update/delete events take the fused path
+# unchanged: their targets overlap by construction, and the
+# survivor-rewrite detour measures SLOWER than the fused shuffle at
+# transcript payload widths (A/B in OPTIMIZATION_r06.md). Row set, ledger
+# and partition checksums are identical to the fused path by construction
+# — the whole narrow incumbent flows through the same LWW window, so every
+# stat observes the same rows (pinned by the digest-equality tests in
+# tests/test_two_stream.py). A two-stream partition none of whose batch
+# events win keeps its old files verbatim (metadata carry-forward — a
+# stale re-insert flood rewrites nothing). The tier is on whenever
+# ``cow_append_fastpath`` is; False there forces full rewrites.
+
+#: a partition is two-stream-eligible only while its incumbent file count
+#: is below this bound; at/above it the batch takes the fused rewrite,
+#: which coalesces the partition back to one file. This is the
+#: small-files backstop: each appended batch adds a file per partition, so
+#: without the bound an endless interleaved-insert stream would accumulate
+#: files monotonically (the round-5 verdict's append-path concern — this
+#: tier self-bounds). 8 ≈ Iceberg-style "compact every few commits"
+#: amortization.
+TWO_STREAM_MAX_FILES = 8
+
+#: per-partition engagement ratio: a partition is two-stream-eligible only
+#: when its incumbent rows are at least this multiple of the batch rows
+#: landing in it. Appending necessarily produces one small file per
+#: partition per batch; when the incumbent is only 1-4× the batch (early
+#: bulk-load batches, small tables) the avoided rewrite is worth less than
+#: the small-files tax every subsequent scan of that partition pays —
+#: measured at bench shape (2 M × 8, 128 buckets): appends with ratio ≤ 4
+#: cost +2-4 s per apply vs fused (OPTIMIZATION_r06.md). At ratio ≥ 8 the
+#: rewrite is ≥ 8× the bytes of the append and the trade flips — the
+#: long-running insert-stream case (growing table, steady batch size)
+#: where each batch would otherwise rewrite the whole partition. A
+#: data-shape breakeven, not a core-count constant.
+TWO_STREAM_MIN_RATIO = 8.0
+
+#: broadcast gate on a batch's VALID event count (an upper bound on its
+#: distinct key count, free from the bucket pre-pass), read by two joins.
+#: MOR classification (``build_mor_classification``): at or below it the
+#: delta key set and the pruned incumbent are broadcast (tiny batches
+#: classify with zero wide shuffles); above it the classification falls
+#: back to a shuffled semi-join + sort-merge join — a 10–100 M-event
+#: initial load must degrade to a shuffle, not hit the 8 GB broadcast /
+#: driver-memory wall. Two-stream survivors (``plan_batch``): the events
+#: of all two-stream candidates together must fit it, because the survivor
+#: pass broadcasts the written winners' keys into its anti-join; above it
+#: the candidates take the fused rewrite. 2 M keys ≈ 100–150 MB broadcast
+#: of (conv_id, turn_idx) rows — comfortably inside executor memory at
+#: either scale.
+BROADCAST_KEY_LIMIT = 2_000_000
+
 
 @dataclass
 class BatchPlan:
@@ -458,7 +536,7 @@ class BatchPlan:
 
     #: buckets holding at least one valid event, ascending
     touched: list[int]
-    #: buckets whose valid events exceed ``hot_key_threshold`` (salted)
+    #: buckets whose valid events exceed ``HOT_EVENTS`` (salted)
     hot_buckets: list[int]
     #: valid (non-malformed) events per bucket
     valid: dict[int, int]
@@ -495,12 +573,12 @@ def plan_batch(bucket_rows: list, old_entries: dict, cfg: EngineConfig, ck_id: s
       map appends with zero extra jobs — its incumbent never enters the
       union (no read, no re-sort, no re-encode). Monotonic insert keys
       append here.
-    * TWO_STREAM (merge-proven tier, ``cfg.cow_two_stream``): an
-      appendable slice with overlapping ranges sends only NARROW incumbent
-      rows through the merge, which itself proves key-disjointness (its
-      ``displaced`` counter). Gated by the file-count bound, the
-      incumbent/batch row ratio, and — over all such partitions — the
-      broadcast key limit of the survivor pass's anti-join.
+    * TWO_STREAM (merge-proven tier): an appendable slice with
+      overlapping ranges sends only NARROW incumbent rows through the
+      merge, which itself proves key-disjointness (its ``displaced``
+      counter). Gated by ``TWO_STREAM_MAX_FILES``,
+      ``TWO_STREAM_MIN_RATIO`` and — over all such partitions —
+      ``BROADCAST_KEY_LIMIT``, the survivor pass's anti-join broadcast.
     * FUSED: everything else — update/delete buckets (their targets
       overlap by construction, and the survivor-rewrite detour measured
       slower than the fused shuffle at this payload width), null-key
@@ -510,7 +588,7 @@ def plan_batch(bucket_rows: list, old_entries: dict, cfg: EngineConfig, ck_id: s
     valid = {p: int(r["n"]) - int(r["bad"] or 0) for p, r in rows.items()}
     # an all-replay bucket still rewrites identically — harmless
     touched = sorted(p for p, v in valid.items() if v > 0)
-    hot = [p for p, v in valid.items() if v > cfg.hot_key_threshold]
+    hot = [p for p, v in valid.items() if v > HOT_EVENTS]
     route = dict.fromkeys(touched, FUSED)
     ts_cand = []
     for p in touched:
@@ -524,12 +602,11 @@ def plan_batch(bucket_rows: list, old_entries: dict, cfg: EngineConfig, ck_id: s
         ):
             route[p] = APPEND
         elif (
-            cfg.cow_two_stream
-            and len(e["files"]) < cfg.cow_two_stream_max_files
-            and int(e["row_count"]) >= cfg.cow_two_stream_min_ratio * max(valid[p], 1)
+            len(e["files"]) < TWO_STREAM_MAX_FILES
+            and int(e["row_count"]) >= TWO_STREAM_MIN_RATIO * max(valid[p], 1)
         ):
             ts_cand.append(p)
-    if sum(valid[p] for p in ts_cand) <= cfg.mor_broadcast_key_limit:
+    if sum(valid[p] for p in ts_cand) <= BROADCAST_KEY_LIMIT:
         route.update(dict.fromkeys(ts_cand, TWO_STREAM))
     observe = cfg.partstats_mode == "stored" and 0 < len(touched) <= PARTSTATS_OBSERVE_LIMIT
     return BatchPlan(touched, hot, valid, route, observe)
@@ -661,6 +738,31 @@ def _observed_partition_stats(observations: list, parts: list[int]) -> list[dict
     return out
 
 
+def _stats_columns(
+    df: DataFrame,
+    checksum_cols: list[str],
+    rowhash_mode: str,
+    partstats_mode: str,
+    observe: list[int] | None = None,
+    name: str = "",
+) -> tuple[DataFrame, Observation | None]:
+    """Ready a frame that is about to be written for its partition stats.
+    Under ``"reverify"`` nothing is added: the stats re-hash the on-disk
+    payloads. Otherwise the per-row checksum hash ``_h`` is computed in
+    the pipeline, and either rides an ``observe()`` over the ``observe``
+    partitions and is dropped before the write, or, without ``observe``,
+    is persisted for the narrow read-back tiers. Dropping it matters:
+    ``_h`` is 8 incompressible bytes per row that only a read-back would
+    consume. Returns the frame to write and the observation, if any."""
+    if partstats_mode == "reverify":
+        return df, None
+    df = df.withColumn("_h", _live_row_hash(df, checksum_cols, rowhash_mode))
+    if not observe:
+        return df, None
+    df, obs = _observe_partition_stats(df, observe, name)
+    return df.drop("_h"), obs
+
+
 def _manifest_entry(stats, files: list[str], ck_id: str, old: dict | None = None) -> dict:
     """Manifest entry of a partition whose freshly written ``files`` carry
     lineage ``stats`` (a ``_written_partition_stats`` row). With ``old``
@@ -745,18 +847,29 @@ class CdcEngine:
                     "CREATE TABLE) before CdcEngine.init"
                 )
             IceliteTable.create(
-                spark,
-                table_root,
-                schema,
-                num_buckets=config.num_buckets,
-                format_version=config.format_version,
+                spark, table_root, schema, num_buckets=config.num_buckets
             )
             # checksum column set + hash definition are frozen at creation so
             # partition digests stay comparable across schema evolution
             # (evolved columns are verified by full-content replay diff, not
-            # by the rolling digest)
+            # by the rolling digest), and every tier — stored/observe/driver
+            # read-back, reverify, MOR compact, replay verify — hashes
+            # identically for the table's whole lifetime. New tables hash
+            # "typed": xxhash64 over native typed columns with typed NULL
+            # sentinels (functions/digests.py:typed_row_digest) — no
+            # per-row cast-strings or concat buffer, removing ~200 B of
+            # garbage per written row from a merge stage measured at 46-73%
+            # JVM GC time (BENCH/merge_stage_profile.py,
+            # BENCH/rowhash_probe.py: the canonical form costs 0.25-0.3 s
+            # per 2 M rows before GC amplification). "canonical", the
+            # original string-canonicalized form, stays readable: tables
+            # without ``rowhash_mode`` in their snapshot always read as
+            # canonical, so their manifests remain valid and append-path
+            # xor-combines never mix definitions (the per-entry ``ck_id``
+            # additionally tags the mode). Checksums are an internal
+            # integrity contract; no external system consumes their values.
             eng.table.set_checksum_columns([f.name for f in schema.fields])
-            eng.table.set_rowhash_mode(config.rowhash_mode)
+            eng.table.set_rowhash_mode("typed")
         return eng
 
     # ------------------------------------------------------------ the merge
@@ -910,7 +1023,7 @@ class CdcEngine:
 
             if cfg.update_missing == "quarantine":
                 events, n_missing = self._quarantine_missing_updates(
-                    events, num_buckets, batch_id
+                    events, plan.touched, batch_id
                 )
                 rpt.quarantined += n_missing
 
@@ -923,9 +1036,9 @@ class CdcEngine:
                     F.count(F.lit(1)).alias("n"),
                     F.count_distinct(F.col("lsn")).alias("nd"),
                 ).first()
-                hot = detect_hot_keys(events, threshold=cfg.hot_key_threshold)
+                hot = detect_hot_keys(events, threshold=HOT_EVENTS)
                 events = resolve_lww_grouped(
-                    salt_hot_keys(events, hot, n_salt=cfg.skew_salt)
+                    salt_hot_keys(events, hot, n_salt=SKEW_SALT)
                 ).drop("_salt")
 
             if cfg.write_mode == "mor":
@@ -1099,7 +1212,7 @@ class CdcEngine:
             incumbent = incumbent.unionByName(narrow_inc)
         evt = _event_rows(events, num_buckets, payload_cols, "1 AS _src")
         ranked = build_merge_ranking(
-            incumbent.unionByName(evt), plan.hot_buckets, cfg.skew_salt,
+            incumbent.unionByName(evt), plan.hot_buckets, SKEW_SALT,
             incumbent=True, inc_any=bool(ts_parts),
         )
         obs = Observation(f"batch-{batch_id}")
@@ -1144,19 +1257,12 @@ class CdcEngine:
         # write sort (projecting it away would truncate the known ordering
         # and force a second full sort)
         phys_cols = [PART_COL] + payload_cols + ["_lsn", "_op", "_salt"]
-        if cfg.partstats_mode == "reverify":
-            return merged.select(*phys_cols), obs, None
-        to_write = merged.withColumn(
-            "_h", _live_row_hash(merged, checksum_cols, rowhash_mode)
-        ).select(*phys_cols, "_h")
-        if not plan.observe_stats:
-            return to_write, obs, None
-        # tier 1 drops `_h` before the write: an incompressible 8 bytes/row
-        # that only the read-back tier would consume
-        to_write, pobs = _observe_partition_stats(
-            to_write, plan.touched, f"pstats-{batch_id}"
+        to_write, pobs = _stats_columns(
+            merged.select(*phys_cols), checksum_cols, rowhash_mode,
+            cfg.partstats_mode, plan.touched if plan.observe_stats else None,
+            f"pstats-{batch_id}",
         )
-        return to_write.drop("_h"), obs, pobs
+        return to_write, obs, pobs
 
     def _two_stream_survivors(
         self,
@@ -1214,17 +1320,13 @@ class CdcEngine:
         surv_parts = [p for p in rewrite if p not in appended]
         pobs = None
         if surv_parts:
-            surv = self._scan(phys, old_files(surv_parts)).join(
-                won_keys(surv_parts), keys, "left_anti"
+            surv, pobs = _stats_columns(
+                self._scan(phys, old_files(surv_parts)).join(
+                    won_keys(surv_parts), keys, "left_anti"
+                ),
+                checksum_cols, rowhash_mode, self.config.partstats_mode,
+                surv_parts if observe else None, f"pstats2-{batch_id}",
             )
-            if self.config.partstats_mode != "reverify":
-                surv = surv.withColumn(
-                    "_h", _live_row_hash(surv, checksum_cols, rowhash_mode)
-                )
-            if observe:
-                surv, pobs = _observe_partition_stats(
-                    surv, surv_parts, f"pstats2-{batch_id}"
-                )
             written = self.table.write_partition_files(
                 surv, batch_id, pre_partitioned=True
             )
@@ -1328,7 +1430,7 @@ class CdcEngine:
         batch_id = rpt.batch_id
         ranked = build_merge_ranking(
             _event_rows(events, num_buckets, payload_cols),
-            plan.hot_buckets, cfg.skew_salt,
+            plan.hot_buckets, SKEW_SALT,
         )
         obs = Observation(f"mor-batch-{batch_id}")
         ranked_obs = ranked.observe(
@@ -1374,7 +1476,7 @@ class CdcEngine:
                 dback,
                 self._scan(phys, inc_files).select(*narrow),
                 key_cols,
-                broadcast_keys=sum(plan.valid.values()) <= cfg.mor_broadcast_key_limit,
+                broadcast_keys=sum(plan.valid.values()) <= BROADCAST_KEY_LIMIT,
             )
         else:
             j = (
@@ -1507,14 +1609,11 @@ class CdcEngine:
                 "table_digest": snap.get("table_digest"),
             }
         parts = [e["partition"] for e in dirty]
-        resolved = self.table.read(partitions=parts, with_lineage=True)
-        if self.config.partstats_mode == "stored":
-            # persist the pipeline-computed row hash for the narrow stats
-            # read-back; reverify re-hashes the on-disk payloads instead,
-            # so don't pay 8 incompressible bytes/row for an unread column
-            resolved = resolved.withColumn(
-                "_h", _live_row_hash(resolved, checksum_cols, rowhash_mode)
-            )
+        # compaction keeps the read-back tier: no observation
+        resolved, _ = _stats_columns(
+            self.table.read(partitions=parts, with_lineage=True),
+            checksum_cols, rowhash_mode, self.config.partstats_mode,
+        )
         label = f"c{snap['snapshot_id']:05d}"
         files = self.table.write_partition_files(
             resolved, batch_id=snap["snapshot_id"], dir_label=label
@@ -1701,13 +1800,15 @@ class CdcEngine:
         )
 
     def _quarantine_missing_updates(
-        self, events: DataFrame, num_buckets: int, batch_id: int
+        self, events: DataFrame, touched: list[int], batch_id: int
     ) -> tuple[DataFrame, int]:
         """update_missing='quarantine': U events whose key has no live
-        incumbent and no same-batch insert are quarantined pre-resolution."""
+        incumbent and no same-batch insert are quarantined pre-resolution.
+        ``touched`` is the plan's touched buckets, a superset of the
+        buckets ``events`` still reach after the dedup filters; the extra
+        ones cannot match, because a key's bucket is a function of its
+        ``conv_id``."""
         key = ["conv_id", "turn_idx"]
-        with_p = events.withColumn(PART_COL, partition_expr(num_buckets))
-        touched = [r[0] for r in with_p.select(PART_COL).distinct().collect()]
         live_keys = (
             self.table.read(partitions=touched).select(*key).distinct()
         )

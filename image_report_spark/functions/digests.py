@@ -98,9 +98,10 @@ def typed_row_digest(df: DataFrame, cols: list[str]) -> Column:
     concat buffer (the canonical form allocates ~200 B of garbage per row,
     measured at 0.25–0.3 s per 2 M rows plus GC amplification across 32
     concurrent merge tasks — BENCH/rowhash_probe.py). Used as the engine's
-    default partition-checksum unit (``EngineConfig.rowhash_mode``); the
-    canonical form remains for pre-existing tables and for the golden
-    sha2 digest, whose values are externally comparable.
+    partition-checksum unit for every table ``CdcEngine.init`` creates
+    (the snapshot's ``rowhash_mode``); the canonical form remains for
+    pre-existing tables and for the golden sha2 digest, whose values are
+    externally comparable.
     """
     return F.xxhash64(*typed_cols(df, cols))
 

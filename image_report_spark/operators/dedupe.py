@@ -196,20 +196,6 @@ def hash_jaccard_pairs(
     )
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    candidate_pairs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    threshold: float = 0.8,
-) -> DataFrame:
-    """Verify candidate (id_a, id_b) pairs by exact n-gram Jaccard (over
-    hashed shingles — identical value modulo 64-bit collisions)."""
-    sh = with_shingle_hashes(df.select(id_col, text_col), text_col, n=n)
-    return hash_jaccard_pairs(candidate_pairs, sh, id_col, threshold)
-
-
 # -------------------------------------------------- bucket-pair primitives
 def within_bucket_pairs(
     df: DataFrame,
@@ -406,11 +392,6 @@ def with_shingle_hashes(
     )
 
 
-def shingle_hashes(col: Column, n: int = 3) -> Column:
-    """Inline variant (slower — prefer :func:`with_shingle_hashes`)."""
-    return F.transform(shingles(col, n), lambda s: F.pmod(F.xxhash64(s), F.lit(MINHASH_PRIME)))
-
-
 def minhash_from_hashes_jvm(hashes: Column, k: int = 32, seed: int = 13) -> Column:
     """Pure-JVM k-permutation MinHash (k interpreted HOF passes over the
     shingle array — higher-order functions get no codegen, so this costs
@@ -521,12 +502,6 @@ def _plan_size_bytes(df: DataFrame) -> int:
     return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
 
 
-def minhash_signature(col: Column, k: int = 32, seed: int = 13) -> Column:
-    """k-permutation MinHash over shingles (prefer building on
-    :func:`shingle_hashes` via a withColumn so the shingle pass runs once)."""
-    return minhash_from_hashes(shingle_hashes(col), k, seed)
-
-
 def minhash_signatures(
     df: DataFrame,
     text_col: str = "text",
@@ -610,20 +585,6 @@ def minhash_lsh_candidates(
         )
         .distinct()
     )
-
-
-def minhash_lsh_rep_edges(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 32,
-    bands: int = 8,
-    seed: int = 13,
-) -> DataFrame:
-    """Linear candidate edges: member → bucket representative per band
-    bucket (see :func:`bucket_rep_edges`)."""
-    banded = minhash_banded(df, text_col, id_col, k, bands, seed)
-    return bucket_rep_edges(banded, ["band", "band_hash"], id_col)
 
 
 def minhash_dedup(

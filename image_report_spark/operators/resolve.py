@@ -25,12 +25,6 @@ from pyspark.sql import functions as F
 KEY = ["conv_id", "turn_idx"]
 
 
-def dedup_exact_replays(df: DataFrame) -> DataFrame:
-    """Drop duplicate-``lsn`` events (exact replays are byte-identical, so
-    any survivor is correct — graft of path dedup, reference ir:552-557)."""
-    return df.dropDuplicates(["lsn"])
-
-
 def resolve_lww_window(df: DataFrame, extra_tiebreak: list[str] | None = None) -> DataFrame:
     """Keep, per key, the event with max ``(ts, lsn)``.
 

@@ -63,9 +63,6 @@ class Checkpoint:
         with open(self._batch_path(batch_id)) as f:
             return json.load(f)
 
-    def ledger_rows(self) -> list[dict]:
-        return [self.batch_record(b)["ledger"] for b in self.applied_batches()]
-
     # ------------------------------------------------------------ dedup state
     def boundary_lsn(self, batch_id: int) -> int:
         """Cumulative max LSN as of ``dedup_window_batches`` before

@@ -84,7 +84,6 @@ class IceliteTable:
         root: str,
         logical_schema: StructType,
         num_buckets: int = 32,
-        format_version: int = 1,
         merge_keys: list[str] | None = None,
         partition_column: str | None = None,
     ) -> "IceliteTable":
@@ -117,7 +116,9 @@ class IceliteTable:
         os.makedirs(t.meta_dir, exist_ok=True)
         os.makedirs(t.data_dir, exist_ok=True)
         snap = {
-            "format_version": format_version,
+            # manifest format version (graft of the v2 16-bit-ceiling
+            # escape hatch, reference docs/report-schema-v2.md:96-105)
+            "format_version": 1,
             "snapshot_id": 0,
             "parent_snapshot_id": None,
             "batch_id": None,
@@ -450,8 +451,6 @@ class IceliteTable:
         }
         if hwm:
             # per-partition high-water-mark filter via a small broadcast map
-            import json as _json  # noqa: F401
-
             from pyspark.sql.functions import broadcast
 
             hwm_df = self.spark.createDataFrame(
@@ -474,8 +473,9 @@ class IceliteTable:
 
     def set_rowhash_mode(self, mode: str) -> None:
         """Freeze the per-row checksum hash definition (see
-        ``EngineConfig.rowhash_mode``). Snapshots without the field read
-        as "canonical" — the definition that produced their manifests."""
+        ``CdcEngine.init``, which freezes "typed" into new tables).
+        Snapshots without the field read as "canonical" — the definition
+        that produced their manifests."""
         snap = self.snapshot()
         snap["rowhash_mode"] = mode
         self._write_snapshot(snap)

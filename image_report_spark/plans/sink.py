@@ -52,6 +52,7 @@ class TableSink(Protocol):
         batch_id: int,
         pre_partitioned: bool = False,
         sort_cols: list[str] | None = None,
+        dir_label: str | None = None,
     ) -> dict[int, list[str]]: ...
 
     def commit(
@@ -155,6 +156,7 @@ class IcebergSink:
         batch_id: int,
         pre_partitioned: bool = False,
         sort_cols: list[str] | None = None,
+        dir_label: str | None = None,
     ) -> dict[int, list[str]]:
         self._unimplemented("write_partition_files")
 

@@ -34,6 +34,7 @@ import pytest
 
 from pyspark.sql.types import FloatType, IntegerType, StructField, StructType
 
+import image_report_spark.engine as engine_mod
 from image_report_spark.config import EngineConfig
 from image_report_spark.engine import TRANSCRIPT_SCHEMA, CdcEngine
 from image_report_spark.fixtures import ChangeLogGenerator, apply_oracle
@@ -64,17 +65,20 @@ def _ins(lsn, conv, turn, text, ts_off_s=0, **extra) -> dict:
     )
 
 
-def _mk(spark, root, name: str, fastpath: bool, schema=TRANSCRIPT_SCHEMA, **cfg):
-    return CdcEngine.init(
+def _mk(spark, root, name: str, fastpath: bool, schema=TRANSCRIPT_SCHEMA,
+        rowhash_mode: str = "typed"):
+    eng = CdcEngine.init(
         spark,
         str(root / f"tbl-{name}"),
         str(root / f"cp-{name}"),
         schema=schema,
         config=EngineConfig(
-            num_buckets=8, shuffle_partitions=8,
-            cow_append_fastpath=fastpath, **cfg,
+            num_buckets=8, shuffle_partitions=8, cow_append_fastpath=fastpath,
         ),
     )
+    if rowhash_mode != "typed":
+        eng.table.set_rowhash_mode(rowhash_mode)
+    return eng
 
 
 def _content(eng) -> pd.DataFrame:
@@ -157,7 +161,7 @@ def test_insert_only_batches_append_and_match_rewrite(spark, tmp_path):
     _assert_equiv(on, off)
 
 
-def test_reinsert_collision_forces_rewrite(spark, tmp_path):
+def test_reinsert_collision_forces_rewrite(spark, tmp_path, monkeypatch):
     log = str(tmp_path / "log")
     _write_batch(log, 0, [_ins(i, i, 0, f"old{i}") for i in range(8)])
     # b1 is ALL-I but re-inserts conv 0 turn 0 (later ts wins) + new convs
@@ -166,7 +170,8 @@ def test_reinsert_collision_forces_rewrite(spark, tmp_path):
     # the colliding bucket's ranges overlap, so the zone maps can't
     # decide — the merge-proven tier must see the displaced key and route
     # the bucket to the rewrite path
-    on = _mk(spark, tmp_path, "on", True, cow_two_stream_min_ratio=0.0)
+    monkeypatch.setattr(engine_mod, "TWO_STREAM_MIN_RATIO", 0.0)
+    on = _mk(spark, tmp_path, "on", True)
     off = _mk(spark, tmp_path, "off", False)
     r_on = on.run(log)
     off.run(log)
@@ -179,7 +184,7 @@ def test_reinsert_collision_forces_rewrite(spark, tmp_path):
     _assert_equiv(on, off)
 
 
-def test_scan_tier_appends_interleaved_disjoint_keys(spark, tmp_path):
+def test_scan_tier_appends_interleaved_disjoint_keys(spark, tmp_path, monkeypatch):
     """Key ranges overlap (evens then odds) so the metadata tier can't
     prove disjointness — the merge-proven tier must still discover that
     the key SETS are disjoint and append."""
@@ -187,7 +192,8 @@ def test_scan_tier_appends_interleaved_disjoint_keys(spark, tmp_path):
     _write_batch(log, 0, [_ins(i, 2 * i, 0, f"e{i}") for i in range(16)])
     _write_batch(log, 1, [_ins(100 + i, 2 * i + 1, 0, f"o{i}", ts_off_s=60)
                           for i in range(16)])
-    on = _mk(spark, tmp_path, "on", True, cow_two_stream_min_ratio=0.0)
+    monkeypatch.setattr(engine_mod, "TWO_STREAM_MIN_RATIO", 0.0)
+    on = _mk(spark, tmp_path, "on", True)
     off = _mk(spark, tmp_path, "off", False)
     on.run(log, max_batches=1)
     b0_parts = {e["partition"] for e in on.table.snapshot()["manifest"]}
@@ -204,7 +210,7 @@ def test_scan_tier_appends_interleaved_disjoint_keys(spark, tmp_path):
     _assert_equiv(on, off)
 
 
-def test_tombstone_counts_as_overlap(spark, tmp_path):
+def test_tombstone_counts_as_overlap(spark, tmp_path, monkeypatch):
     log = str(tmp_path / "log")
     _write_batch(log, 0, [_ins(i, i, 0, f"old{i}") for i in range(8)])
     _write_batch(log, 1, [dict(_ins(100, 0, 0, None, ts_off_s=60), op="D")])
@@ -213,7 +219,8 @@ def test_tombstone_counts_as_overlap(spark, tmp_path):
     # would carry two physical rows for one key)
     _write_batch(log, 2, [_ins(200, 0, 0, "resurrected", ts_off_s=120)]
                  + [_ins(201 + i, 30 + i, 0, f"t{30+i}", ts_off_s=120) for i in range(8)])
-    on = _mk(spark, tmp_path, "on", True, cow_two_stream_min_ratio=0.0)
+    monkeypatch.setattr(engine_mod, "TWO_STREAM_MIN_RATIO", 0.0)
+    on = _mk(spark, tmp_path, "on", True)
     off = _mk(spark, tmp_path, "off", False)
     r_on = on.run(log)
     off.run(log)

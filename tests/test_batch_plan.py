@@ -47,10 +47,6 @@ def test_overlapping_zone_map_takes_two_stream():
     assert _route() == TWO_STREAM
 
 
-def test_overlapping_zone_map_without_two_stream_is_fused():
-    assert _route(cow_two_stream=False) == FUSED
-
-
 def test_unknown_zone_map_takes_two_stream():
     assert _route(_row(klo="c10", khi="c12"), _entry(lo=None)) == TWO_STREAM
 
@@ -82,9 +78,10 @@ def test_missing_dirty_or_unchecksummed_entry_is_fused(entry):
     assert plan.route[0] == FUSED
 
 
-def test_file_count_bound_is_fused():
-    assert _route(entry=_entry(files=7), cow_two_stream_max_files=8) == TWO_STREAM
-    assert _route(entry=_entry(files=8), cow_two_stream_max_files=8) == FUSED
+def test_file_count_bound_is_fused(monkeypatch):
+    monkeypatch.setattr(engine_mod, "TWO_STREAM_MAX_FILES", 8)
+    assert _route(entry=_entry(files=7)) == TWO_STREAM
+    assert _route(entry=_entry(files=8)) == FUSED
 
 
 def test_below_min_ratio_is_fused():
@@ -95,14 +92,16 @@ def test_below_min_ratio_is_fused():
     assert _route(_row(n=12, bad=2), _entry(row_count=80)) == TWO_STREAM
 
 
-def test_two_stream_events_above_broadcast_limit_are_fused():
+def test_two_stream_events_above_broadcast_limit_are_fused(monkeypatch):
     rows = [_row(p=0, n=10), _row(p=1, n=10), _row(p=2, klo="c10", khi="c12")]
     entries = {p: _entry() for p in (0, 1, 2)}
-    at = plan_batch(rows, entries, EngineConfig(mor_broadcast_key_limit=30), CK)
+    monkeypatch.setattr(engine_mod, "BROADCAST_KEY_LIMIT", 30)
+    at = plan_batch(rows, entries, EngineConfig(), CK)
     assert at.parts(TWO_STREAM) == [0, 1]
     # the limit covers ALL two-stream candidates together; appends are
     # not candidates and keep their route
-    over = plan_batch(rows, entries, EngineConfig(mor_broadcast_key_limit=19), CK)
+    monkeypatch.setattr(engine_mod, "BROADCAST_KEY_LIMIT", 19)
+    over = plan_batch(rows, entries, EngineConfig(), CK)
     assert over.parts(TWO_STREAM) == [] and over.parts(FUSED) == [0, 1]
     assert over.parts(APPEND) == [2]
 
@@ -111,8 +110,6 @@ def test_fastpath_off_forces_fused():
     disjoint = _row(klo="c10", khi="c12")
     assert _route(disjoint, cow_append_fastpath=False) == FUSED
     assert _route(cow_append_fastpath=False) == FUSED
-    # two-stream off keeps the metadata tier
-    assert _route(disjoint, cow_two_stream=False) == APPEND
 
 
 def test_touched_skips_all_malformed_buckets():
@@ -123,9 +120,10 @@ def test_touched_skips_all_malformed_buckets():
     assert plan.parts(FUSED) == [0, 1]
 
 
-def test_hot_bucket_threshold():
+def test_hot_bucket_threshold(monkeypatch):
     rows = [_row(p=0, n=100), _row(p=1, n=101), _row(p=2, n=105, bad=5)]
-    plan = plan_batch(rows, {}, EngineConfig(hot_key_threshold=100), CK)
+    monkeypatch.setattr(engine_mod, "HOT_EVENTS", 100)
+    plan = plan_batch(rows, {}, EngineConfig(), CK)
     assert plan.hot_buckets == [1]
 
 

@@ -1,6 +1,7 @@
 """Config-algebra tests — graft of the reference's selector identities
 (tests/test_hashing_config.py:43-64)."""
 
+import dataclasses
 import glob
 import os
 import re
@@ -65,6 +66,20 @@ def test_engine_config_validation():
     assert EngineConfig(metrics="all").selected_metrics == ALL_METRICS
 
 
+#: the choices a caller makes; tuning values live as constants beside the
+#: code that reads them (engine.py)
+_SETTABLE = {
+    "num_buckets", "shuffle_partitions", "on_error", "update_missing",
+    "metrics", "grouped_resolve", "write_mode", "cow_append_fastpath",
+    "mor_compact_delta_ratio", "partstats_mode",
+}
+
+
+def test_settable_fields_are_pinned():
+    got = {f.name for f in dataclasses.fields(EngineConfig) if f.init}
+    assert got == _SETTABLE
+
+
 #: environment variables that once overrode production defaults; none of
 #: them may change behaviour any more
 _RETIRED_ENV = {
@@ -85,7 +100,6 @@ def test_environment_does_not_change_defaults(spark, tmp_path, monkeypatch, caps
     for k, v in _RETIRED_ENV.items():
         monkeypatch.setenv(k, v)
     cfg = EngineConfig(num_buckets=4)
-    assert cfg.rowhash_mode == "typed" and cfg.cow_two_stream is True
     eng = CdcEngine.init(
         spark, str(tmp_path / "tbl"), str(tmp_path / "cp"), config=cfg
     )

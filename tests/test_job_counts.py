@@ -19,6 +19,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+import image_report_spark.engine as engine_mod
 from image_report_spark.config import EngineConfig
 from image_report_spark.engine import CdcEngine
 from image_report_spark.sources.changelog import ChangeLogSource
@@ -64,12 +65,12 @@ ROUTES = {
         [_row(100 + i, 16 + i, ts_off_s=60) for i in range(16)],
     ),
     "two_stream_zero_displaced": (
-        {"cow_two_stream_min_ratio": 0.0},
+        {},
         [_row(i, 2 * i) for i in range(16)],
         [_row(100 + i, 2 * i + 1, ts_off_s=60) for i in range(16)],
     ),
     "two_stream_survivors": (
-        {"cow_two_stream_min_ratio": 0.0},
+        {},
         [_row(i, 2 * i) for i in range(16)],
         [_row(100, 0, text="new0", ts_off_s=60)]
         + [_row(101 + i, 2 * i + 1, ts_off_s=60) for i in range(16)],
@@ -79,6 +80,20 @@ ROUTES = {
         [_row(i, i) for i in range(16)],
         [_row(100 + i, i, op="U", text="u", ts_off_s=60) for i in range(0, 16, 2)],
     ),
+    # the fused route plus the missing-key probe: one update of a key the
+    # table never held is quarantined
+    "quarantine_missing": (
+        {"update_missing": "quarantine"},
+        [_row(i, i) for i in range(16)],
+        [_row(100 + i, i, op="U", text="u", ts_off_s=60) for i in range(0, 16, 2)]
+        + [_row(200, 99, op="U", text="u", ts_off_s=60)],
+    ),
+}
+
+#: route -> engine constants patched for it
+CONSTANTS = {
+    "two_stream_zero_displaced": {"TWO_STREAM_MIN_RATIO": 0.0},
+    "two_stream_survivors": {"TWO_STREAM_MIN_RATIO": 0.0},
 }
 
 #: route -> (jobs for batch 0, jobs for batch 1)
@@ -88,12 +103,15 @@ EXPECTED_JOBS = {
     "two_stream_zero_displaced": (5, 7),
     "two_stream_survivors": (5, 12),
     "mor": (7, 13),
+    "quarantine_missing": (11, 25),
 }
 
 
 @pytest.mark.parametrize("route", sorted(ROUTES))
-def test_jobs_per_batch(spark, tmp_path, route):
+def test_jobs_per_batch(spark, tmp_path, monkeypatch, route):
     cfg, b0, b1 = ROUTES[route]
+    for name, value in CONSTANTS.get(route, {}).items():
+        monkeypatch.setattr(engine_mod, name, value)
     eng = CdcEngine.init(
         spark, str(tmp_path / "tbl"), str(tmp_path / "cp"),
         config=EngineConfig(num_buckets=8, **cfg),
@@ -118,4 +136,7 @@ def test_jobs_per_batch(spark, tmp_path, route):
     elif route == "two_stream_survivors":
         assert r1.partitions_two_stream > 0
         assert r1.partitions_appended < r1.partitions_touched
+    elif route == "quarantine_missing":
+        assert r1.quarantined == 1
+        assert r1.partitions_appended == r1.partitions_two_stream == 0
     assert tuple(counts) == EXPECTED_JOBS[route], counts

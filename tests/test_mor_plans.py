@@ -3,7 +3,7 @@
 Scale claims checked against Catalyst:
 * the MOR write pipeline (within-batch resolve → delta write) moves the
   batch across the network exactly once, like the COW merge;
-* the classification job is size-gated (EngineConfig.mor_broadcast_key_limit):
+* the classification job is size-gated (engine.BROADCAST_KEY_LIMIT):
   below the gate the keys-only incumbent scan is semi-joined against a
   BROADCAST of the delta's keys and broadcast back into the outer join
   (zero added Exchanges); above it BOTH joins run shuffled — a
@@ -23,6 +23,7 @@ from __future__ import annotations
 import pandas as pd
 import pytest
 
+import image_report_spark.engine as engine_mod
 from image_report_spark.config import EngineConfig
 from image_report_spark.engine import CdcEngine
 from image_report_spark.fixtures import ChangeLogGenerator
@@ -125,16 +126,18 @@ def test_mor_classification_shuffles_above_gate(spark, tmp_path):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
-def test_mor_shuffle_regime_equals_cow(spark, tmp_path):
-    """End-to-end with mor_broadcast_key_limit=0 (every batch takes the
+def test_mor_shuffle_regime_equals_cow(spark, tmp_path, monkeypatch):
+    """End-to-end with BROADCAST_KEY_LIMIT=0 (every MOR batch takes the
     shuffled classification path): ledger and final table still EXACTLY
     match copy-on-write, and compaction restores the COW digest."""
     gen = ChangeLogGenerator(n_convs=40, max_turns=5, n_batches=3, seed=31)
     log = str(tmp_path / "log")
     gen.write_log(log)
-    mor = _mk(spark, tmp_path, mor_broadcast_key_limit=0)
+    mor = _mk(spark, tmp_path)
     cow = _mk(spark, tmp_path, mode="cow")
-    mrpts = mor.run(log)
+    with monkeypatch.context() as m:
+        m.setattr(engine_mod, "BROADCAST_KEY_LIMIT", 0)
+        mrpts = mor.run(log)
     crpts = cow.run(log)
     for m, c in zip(mrpts, crpts):
         for f in ("applied", "deduped", "superseded", "inserts", "updates",

@@ -1,7 +1,7 @@
-"""The typed row-hash mode (EngineConfig.rowhash_mode, round-6 GC
-optimization): same table content as canonical mode, internally
-consistent digests, and the null-position property the typed sentinels
-exist for."""
+"""The typed row-hash mode (the snapshot's ``rowhash_mode``, frozen to
+"typed" by ``CdcEngine.init``; round-6 GC optimization): same table
+content as canonical mode, internally consistent digests, and the
+null-position property the typed sentinels exist for."""
 
 from __future__ import annotations
 
@@ -18,13 +18,15 @@ from image_report_spark.functions.digests import typed_row_digest
 from tests.test_partstats import T0, _events_df
 
 
-def _build(spark, tmp_path, name, **cfg):
+def _build(spark, tmp_path, name, rowhash_mode="typed", **cfg):
     eng = CdcEngine.init(
         spark,
         str(tmp_path / name / "tbl"),
         str(tmp_path / name / "cp"),
         config=EngineConfig(num_buckets=4, **cfg),
     )
+    if rowhash_mode != "typed":
+        eng.table.set_rowhash_mode(rowhash_mode)
     eng.apply_batch(_events_df(spark), 0)
     return eng
 
@@ -167,15 +169,13 @@ def test_replay_verify_propagates_mode_without_checksum_columns(spark, tmp_path)
     log = str(tmp_path / "log")
     gen.write_log(log)
     tbl, cp = str(tmp_path / "tbl"), str(tmp_path / "cp")
-    eng = CdcEngine.init(
-        spark, tbl, cp, config=EngineConfig(num_buckets=4, rowhash_mode="canonical")
-    )
+    eng = CdcEngine.init(spark, tbl, cp, config=EngineConfig(num_buckets=4))
+    eng.table.set_rowhash_mode("canonical")
     snap = eng.table.snapshot()
     del snap["checksum_columns"], snap["rowhash_mode"]
     eng.table._write_snapshot(snap)
     eng.run(log)
     eng = CdcEngine.init(spark, tbl, cp, config=EngineConfig(num_buckets=4))
-    assert eng.config.rowhash_mode == "typed"
     assert "checksum_columns" not in eng.table.snapshot()
     report = eng.replay_verify(log, str(tmp_path / "scratch"))
     assert report["ok"], report

@@ -5,11 +5,14 @@ injection, not a rewrite."""
 
 from __future__ import annotations
 
+import ast
 import inspect
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
+import image_report_spark.engine as engine_mod
 from image_report_spark.config import EngineConfig
 from image_report_spark.engine import CdcEngine
 from image_report_spark.plans.icelite import IceliteTable
@@ -36,6 +39,43 @@ def test_iceberg_stub_covers_the_protocol_and_refuses_cleanly(spark):
     # and construction refuses cleanly without the jar (this sandbox)
     with pytest.raises(RuntimeError, match="iceberg-spark-runtime"):
         IcebergSink(spark, "catalog.db.tbl")
+
+
+def _engine_sink_calls() -> list[tuple[str, int, list[str], int]]:
+    """(method, positional count, keywords, line) of every
+    ``self.table.<method>(...)`` call in engine.py."""
+    tree = ast.parse(Path(engine_mod.__file__).read_text())
+    calls = []
+    for node in ast.walk(tree):
+        f = getattr(node, "func", None)
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(f, ast.Attribute)
+            and isinstance(f.value, ast.Attribute)
+            and f.value.attr == "table"
+            and isinstance(f.value.value, ast.Name)
+            and f.value.value.id == "self"
+        ):
+            calls.append(
+                (f.attr, len(node.args), [k.arg for k in node.keywords], node.lineno)
+            )
+    return calls
+
+
+def test_protocol_binds_every_engine_call():
+    """Every call the engine makes on its sink is a TableSink method, and
+    the Protocol's signature (hence every backend's) accepts its
+    arguments — positional count and keywords alike."""
+    calls = _engine_sink_calls()
+    assert any(m == "write_partition_files" for m, *_ in calls)
+    for method, n_pos, kws, line in calls:
+        assert hasattr(TableSink, method), f"engine.py:{line} calls {method}"
+        for backend in (TableSink, IcebergSink, IceliteTable):
+            sig = inspect.signature(getattr(backend, method))
+            try:
+                sig.bind(None, *[None] * n_pos, **dict.fromkeys(kws))
+            except TypeError as e:
+                pytest.fail(f"{backend.__name__}.{method} (engine.py:{line}): {e}")
 
 
 def test_engine_runs_through_injected_sink(spark, tmp_path):

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+import image_report_spark.engine as engine_mod
 from image_report_spark.config import EngineConfig
 from image_report_spark.engine import CdcEngine
 from image_report_spark.fixtures import ChangeLogGenerator, apply_oracle
@@ -27,7 +28,7 @@ def test_detect_and_salt_hot_keys(spark):
     assert per_turn.filter("n > 1").count() == 0
 
 
-def test_skewed_log_correct_under_both_resolvers(spark, tmp_path):
+def test_skewed_log_correct_under_both_resolvers(spark, tmp_path, monkeypatch):
     gen = ChangeLogGenerator(seed=30, n_convs=80, max_turns=6, n_batches=4,
                              hot_keys=2, hot_frac=0.3, dup_frac=0.02, late_frac=0.1)
     log = str(tmp_path / "log")
@@ -36,10 +37,12 @@ def test_skewed_log_correct_under_both_resolvers(spark, tmp_path):
 
     for name, cfg in {
         "window": EngineConfig(num_buckets=8),
-        # force the grouped path to actually salt: tiny hot threshold
-        "grouped": EngineConfig(num_buckets=8, grouped_resolve=True,
-                                hot_key_threshold=50, skew_salt=4),
+        "grouped": EngineConfig(num_buckets=8, grouped_resolve=True),
     }.items():
+        if name == "grouped":
+            # force the grouped path to actually salt: tiny hot threshold
+            monkeypatch.setattr(engine_mod, "HOT_EVENTS", 50)
+            monkeypatch.setattr(engine_mod, "SKEW_SALT", 4)
         eng = CdcEngine.init(spark, str(tmp_path / f"t-{name}"),
                              str(tmp_path / f"cp-{name}"), config=cfg)
         reports = eng.run(log)

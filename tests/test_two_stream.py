@@ -1,5 +1,4 @@
-"""COW two-stream merge — the append fast-path's merge-proven tier
-(EngineConfig.cow_two_stream).
+"""COW two-stream merge — the append fast-path's merge-proven tier.
 
 The scale argument (guide §2.2, shuffle fewer bytes): an interleaved
 pure-insert batch under plain COW rewrites every touched partition even
@@ -16,7 +15,7 @@ take the fused path unchanged.
 
 Correctness contract tested here:
 * digest + content + manifest + per-batch ledger equality against the
-  two-stream-OFF engine on the same log, across mixed I/U/D workloads
+  full-rewrite engine (append fast-path off) on the same log, across mixed I/U/D workloads
   with replays, late (losing) updates, LWW ties and schema evolution,
   and under both partition-stats tiers (observe and file read-back);
 * batches carrying null merge keys still match (their buckets are routed
@@ -52,16 +51,22 @@ LEDGER_KEYS = [
 ]
 
 
+@pytest.fixture
+def any_ratio(monkeypatch):
+    """Engage the two-stream tier at any incumbent/batch row ratio."""
+    monkeypatch.setattr(engine_mod, "TWO_STREAM_MIN_RATIO", 0.0)
+
+
 def _mk(spark, root, name: str, two_stream: bool, **cfg):
+    """``two_stream=False`` is the full-rewrite reference engine."""
     cfg.setdefault("num_buckets", 8)
     cfg.setdefault("shuffle_partitions", 8)
-    cfg.setdefault("cow_two_stream_min_ratio", 0.0)
     return CdcEngine.init(
         spark,
         str(root / f"tbl-{name}"),
         str(root / f"cp-{name}"),
         config=EngineConfig(
-            cow_two_stream=two_stream,
+            cow_append_fastpath=two_stream,
             **cfg,
         ),
     )
@@ -77,7 +82,7 @@ def _content(eng) -> pd.DataFrame:
 
 
 def _assert_equiv(on, off, reports_on, reports_off):
-    """The two-stream engine is indistinguishable from the fused engine."""
+    """The two-stream engine is indistinguishable from the rewrite engine."""
     assert on.current_table_digest() == off.current_table_digest()
     pd.testing.assert_frame_equal(_content(on), _content(off))
     ma = {e["partition"]: e for e in on.table.snapshot()["manifest"]}
@@ -97,6 +102,7 @@ def _assert_equiv(on, off, reports_on, reports_off):
         assert ra.table_digest == rb.table_digest, ra.batch_id
 
 
+@pytest.mark.usefixtures("any_ratio")
 @pytest.mark.parametrize("observe_limit", [64, 0])
 def test_mixed_workload_matches_fused(spark, tmp_path, monkeypatch, observe_limit):
     """Replays, late updates, LWW ties, deletes — both partstats tiers."""
@@ -118,6 +124,7 @@ def test_mixed_workload_matches_fused(spark, tmp_path, monkeypatch, observe_limi
     _assert_equiv(on, off, reports_on, reports_off)
 
 
+@pytest.mark.usefixtures("any_ratio")
 def test_schema_evolution_matches_fused(spark, tmp_path):
     gen = ChangeLogGenerator(
         seed=21, n_convs=60, max_turns=6, n_batches=6, evolve=True,
@@ -158,6 +165,7 @@ def _row(lsn, conv, turn, op="I", text="t", ts_off_s=0, conv_id=None) -> dict:
     )
 
 
+@pytest.mark.usefixtures("any_ratio")
 def test_null_merge_keys_match_fused(spark, tmp_path):
     """Null conv_id/turn_idx events group in the resolve window; the
     two-stream router must send those buckets down the fused path (SQL
@@ -178,6 +186,7 @@ def test_null_merge_keys_match_fused(spark, tmp_path):
     _assert_equiv(on, off, reports_on, reports_off)
 
 
+@pytest.mark.usefixtures("any_ratio")
 def test_all_losing_batch_carries_files_forward(spark, tmp_path):
     """A pure-insert batch whose events ALL lose LWW (stale re-inserts,
     older ts than the incumbent) leaves every two-stream partition's
@@ -204,7 +213,8 @@ def test_all_losing_batch_carries_files_forward(spark, tmp_path):
     _assert_equiv(on, off, reports_on, reports_off)
 
 
-def test_file_count_bound_routes_to_fused(spark, tmp_path):
+@pytest.mark.usefixtures("any_ratio")
+def test_file_count_bound_routes_to_fused(spark, tmp_path, monkeypatch):
     """At the file-count bound the partition takes the fused rewrite and
     coalesces back to one file."""
     log = str(tmp_path / "log")
@@ -219,7 +229,8 @@ def test_file_count_bound_routes_to_fused(spark, tmp_path):
     _write_batch(log, 2, [
         _row(200 + i, 7, 100 + 2 * i + 1, ts_off_s=200 + i) for i in range(8)
     ])
-    on = _mk(spark, tmp_path, "on", True, cow_two_stream_max_files=2)
+    monkeypatch.setattr(engine_mod, "TWO_STREAM_MAX_FILES", 2)
+    on = _mk(spark, tmp_path, "on", True)
     off = _mk(spark, tmp_path, "off", False)
     reports_on = on.run(log)
     reports_off = off.run(log)
@@ -235,6 +246,7 @@ def test_file_count_bound_routes_to_fused(spark, tmp_path):
     _assert_equiv(on, off, reports_on, reports_off)
 
 
+@pytest.mark.usefixtures("any_ratio")
 def test_interleaved_inserts_append_by_merge(spark, tmp_path):
     """Pure-insert batches whose key RANGES overlap the incumbent (so the
     zone-map append tier cannot prove disjointness) but whose key SETS are
@@ -293,3 +305,45 @@ def test_default_ratio_gate_keeps_small_incumbents_fused(spark, tmp_path):
     # (the zone-map append tier may still fire for buckets whose key
     # ranges happen to be disjoint — only the merge-proven tier is gated)
     assert all(r.partitions_two_stream == 0 for r in reports)
+
+
+@pytest.mark.usefixtures("any_ratio")
+@pytest.mark.parametrize("observe_limit", [64, 0])
+def test_survivor_files_persist_row_hash_only_for_readback(
+    spark, tmp_path, monkeypatch, observe_limit
+):
+    """The per-row hash ``_h`` is persisted only when a read-back tier
+    consumes it. On the observe tier a batch that rewrites a two-stream
+    partition through the survivor pass writes no ``_h`` in either its
+    winner or its survivor files; with the observe tier off, both carry
+    it. The table matches the rewrite engine either way."""
+    monkeypatch.setattr(engine_mod, "PARTSTATS_OBSERVE_LIMIT", observe_limit)
+    log = str(tmp_path / "log")
+    _write_batch(log, 0, [_row(i, 2 * i, 0, ts_off_s=i) for i in range(16)])
+    # b1: a re-insert of an existing key forces its partition through the
+    # survivor pass
+    _write_batch(log, 1, [
+        _row(100, 0, 0, text="re-insert", ts_off_s=999),
+        _row(101, 2, 1, ts_off_s=999),
+    ])
+    on = _mk(spark, tmp_path, "on", True)
+    off = _mk(spark, tmp_path, "off", False)
+    reports_on = on.run(log)
+    reports_off = off.run(log)
+    r1 = reports_on[1]
+    assert r1.partitions_two_stream > 0
+    assert "survivors" in r1.phase_ms
+    assert r1.partitions_appended < r1.partitions_touched
+    written = [
+        f
+        for e in on.table.snapshot()["manifest"]
+        for f in e["files"]
+        if f.startswith(os.path.join("data", "b00001"))
+    ]
+    # the rewritten partition holds a winner file and at least one
+    # survivor file
+    assert len(written) >= 2
+    has_h = {f: "_h" in pq.read_schema(os.path.join(on.table.root, f)).names
+             for f in written}
+    assert all(v == (observe_limit == 0) for v in has_h.values()), has_h
+    _assert_equiv(on, off, reports_on, reports_off)
