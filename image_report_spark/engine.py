@@ -400,8 +400,9 @@ def build_mor_classification(
     key_cols: list[str],
     broadcast_keys: bool,
 ) -> DataFrame:
-    """Join the batch's delta winners against the incumbent's latest row
-    per key, for MOR ledger classification (``_mor_tail``).
+    """Join the batch's written delta rows against the incumbent's latest
+    row per key, for the per-partition delta stats of a MOR batch above
+    ``PARTSTATS_OBSERVE_LIMIT`` touched partitions (``_mor_delta_stats``).
 
     Two regimes, chosen by the caller from the batch's size:
 
@@ -514,12 +515,14 @@ TWO_STREAM_MIN_RATIO = 8.0
 
 #: broadcast gate on a batch's VALID event count (an upper bound on its
 #: distinct key count, free from the bucket pre-pass), read by two joins.
-#: MOR classification (``build_mor_classification``): at or below it the
-#: delta key set and the pruned incumbent are broadcast (tiny batches
-#: classify with zero wide shuffles); above it the classification falls
-#: back to a shuffled semi-join + sort-merge join — a 10–100 M-event
-#: initial load must degrade to a shuffle, not hit the 8 GB broadcast /
-#: driver-memory wall. Two-stream survivors (``plan_batch``): the events
+#: MOR delta-stats read-back (``build_mor_classification``), which serves
+#: only batches touching more than ``PARTSTATS_OBSERVE_LIMIT`` partitions
+#: (below that the stats ride the delta write's observation): at or below
+#: the gate the delta key set and the pruned incumbent are broadcast (zero
+#: wide shuffles); above it the join falls back to a shuffled semi-join +
+#: sort-merge join — a 10–100 M-event initial load must degrade to a
+#: shuffle, not hit the 8 GB broadcast wall. Two-stream
+#: survivors (``plan_batch``): the events
 #: of all two-stream candidates together must fit it, because the survivor
 #: pass broadcasts the written winners' keys into its anti-join; above it
 #: the candidates take the fused rewrite. 2 M keys ≈ 100–150 MB broadcast
@@ -531,8 +534,11 @@ BROADCAST_KEY_LIMIT = 2_000_000
 @dataclass
 class BatchPlan:
     """Routing decision for one batch, made on the driver from the bucket
-    pre-pass and the manifest alone (``plan_batch``). MOR reads only
-    ``touched``, ``hot_buckets`` and ``valid``."""
+    pre-pass and the manifest alone (``plan_batch``). MOR ignores
+    ``route`` and ``observe_stats``: it reads ``touched`` (whose
+    incumbent rows enter its window, and whose count gates its stats
+    observation), ``hot_buckets``, and ``valid`` (the broadcast gate of
+    its above-limit read-back)."""
 
     #: buckets holding at least one valid event, ascending
     touched: list[int]
@@ -638,12 +644,34 @@ def _event_rows(events: DataFrame, num_buckets: int, payload_cols: list[str], *e
     )
 
 
+def _narrow_incumbent(scan: DataFrame, evolved: StructType) -> DataFrame:
+    """Incumbent rows as the merge window needs them when their payload
+    is not rewritten: the merge keys and the LWW order columns, every
+    other payload column a typed NULL literal (which prunes its column
+    chunks out of the parquet ``scan``), tagged ``_src`` 0. Feeds COW's
+    two-stream partitions and every MOR batch."""
+    key_or_order = {"conv_id", "turn_idx", "ts"}
+    return scan.select(
+        F.col(PART_COL),
+        *[
+            F.col(f.name)
+            if f.name in key_or_order
+            else F.lit(None).cast(f.dataType).alias(f.name)
+            for f in evolved.fields
+        ],
+        "_lsn",
+        "_op",
+        F.lit(0).alias("_src"),
+    )
+
+
 def build_merge_ranking(
     rows: DataFrame,
     hot_buckets: list[int],
     n_salt: int,
     incumbent: bool = False,
     inc_any: bool = False,
+    unresolved: bool = False,
 ) -> DataFrame:
     """The merge's ONE shuffle and ONE window sort, shared by COW and MOR.
 
@@ -660,9 +688,19 @@ def build_merge_ranking(
     merge-proven append: tombstones must count as overlap so an appended
     partition never holds two physical rows for one key. The per-key
     max() aggregates need only the clustering prefix, so they ride the
-    same sort. Built as SQL text: one driver round-trip for the whole
-    window block; the single-Exchange plans are pinned in
-    tests/test_plans.py.
+    same sort.
+
+    ``unresolved``: the incumbent holds several rows per key (MOR base
+    plus pending deltas), and only the NEWEST one — the row a read
+    resolves to — counts. ``_inc_live`` is that row's liveness, not a
+    max() over all of them, and a batch row is a replay only when it
+    pairs with another batch row or with that newest row, never with an
+    older, superseded incumbent row. Both are full-frame ``first()``
+    aggregates over the same order spec, so they too ride the one sort.
+
+    Built as SQL text: one py4j round-trip for the whole window block;
+    the single-Exchange plans are pinned in tests/test_plans.py and
+    tests/test_mor_plans.py.
     """
     # repartition on _salt only when it's a real column: a lit(0) salt
     # constant-folds OUT of the window's required clustering but NOT out of
@@ -676,33 +714,90 @@ def build_merge_ranking(
     order = f"{part} ORDER BY ts DESC NULLS LAST, _lsn DESC NULLS LAST"
     if incumbent:
         order += ", _src ASC"  # exact tie → incumbent wins
+    replay = f"lag(_lsn) OVER ({order}) <=> _lsn"
+    inc_live = f"max(if(_src = 0 AND _op <> 'D', 1, 0)) OVER ({part})"
+    if unresolved:
+        full = f"{order} ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING"
+        replay += (
+            f" AND (lag(_src) OVER ({order}) = 1"
+            f" OR first(if(_src = 0, _lsn, null), true) OVER ({full}) = _lsn)"
+        )
+        inc_live = f"coalesce(cast(first(if(_src = 0, _op <> 'D', null), true) OVER ({full}) AS int), 0)"
     exprs = [
         f"row_number() OVER ({order}) AS _rn",
-        f"if(lag(_lsn) OVER ({order}) <=> _lsn, 1, 0) AS _replay",
+        f"if({replay}, 1, 0) AS _replay",
     ]
     if incumbent:
-        exprs.append(f"max(if(_src = 0 AND _op <> 'D', 1, 0)) OVER ({part}) AS _inc_live")
+        exprs.append(f"{inc_live} AS _inc_live")
     if inc_any:
         exprs.append(f"max(if(_src = 0, 1, 0)) OVER ({part}) AS _inc_any")
     return u.selectExpr("*", *exprs)
 
 
-def _observe_partition_stats(df: DataFrame, parts: list[int], name: str):
-    """Per-partition lineage aggregates (count, live, max LSN, bit_xor
-    checksum, key zone map) riding ``df``'s own job as ONE named_struct
-    observation (single py4j call, parsed JVM-side) — 6 aggregates per
-    partition as Column objects would add ~100s of py4j round-trips per
-    batch to the plan phase. Returns the observed frame and the
-    Observation; ``_observed_partition_stats`` folds the results."""
+#: per-partition lineage aggregates of a written COW frame, keyed by the
+#: ``_observed_partition_stats`` field letter; ``{in_p}`` is the
+#: partition predicate: row count, live rows, max LSN, bit_xor checksum
+#: and the key zone map
+_COW_PSTATS = {
+    "n": "sum(if({in_p}, 1, 0))",
+    "l": "sum(if({in_p} and _op <> 'D', 1, 0))",
+    "m": "max(if({in_p}, _lsn, null))",
+    "x": "bit_xor(if({in_p}, _h, null))",
+    "a": "min(if({in_p}, conv_id, null))",
+    "b": "max(if({in_p}, conv_id, null))",
+}
+
+#: the same over a MOR batch's delta rows, which carry no checksum: rows
+#: written, the live DELTA (inserts − deletes, judged against the newest
+#: incumbent row by the merge window's ``_inc_live``) and the max LSN
+_MOR_PSTATS = {
+    "n": _COW_PSTATS["n"],
+    "l": (
+        "sum(if({in_p}, case when _op IN ('I', 'U') AND _inc_live = 0 then 1 "
+        "when _op = 'D' AND _inc_live = 1 then -1 else 0 end, 0))"
+    ),
+    "m": _COW_PSTATS["m"],
+}
+
+
+#: the ledger aggregates of a merge window's observation, shared by COW
+#: and MOR: one parsed SQL expression per aggregate (vs ~6 py4j
+#: round-trips per Column build); `_src = 1 AND _rn = 1` is the "winning
+#: event row" predicate throughout
+_LEDGER_OBS = (
+    "sum(if(_src = 1 AND _rn = 1, 1, 0)) AS applied",
+    "sum(if(_src = 1 AND _replay = 1, 1, 0)) AS dups",
+    "sum(if(_src = 1 AND _replay = 0 AND _rn > 1, 1, 0)) AS superseded",
+    "sum(if(_src = 1 AND _rn = 1 AND _op IN ('I', 'U') AND _inc_live = 0, 1, 0)) AS ins",
+    "sum(if(_src = 1 AND _rn = 1 AND _op IN ('I', 'U') AND _inc_live = 1, 1, 0)) AS upd",
+    "sum(if(_src = 1 AND _rn = 1 AND _op = 'D' AND _inc_live = 1, 1, 0)) AS `del`",
+    "sum(if(_rn = 1 AND _op <> 'D', 1, 0)) AS live_after",
+    "max(if(_src = 1, _lsn, null)) AS mx",
+    # op histogram folded into the SAME observation (3 more conditional
+    # sums on the one pipeline execution) — a groupBy recompute would
+    # re-run the entire uncached merge
+    *[
+        f"sum(if(_src = 1 AND _replay = 0 AND _op = '{o}', 1, 0)) AS op_{o}"
+        for o in ("I", "U", "D")
+    ],
+)
+
+
+def _observe_partition_stats(
+    df: DataFrame, parts: list[int], name: str, aggs: dict = _COW_PSTATS
+):
+    """Per-partition lineage aggregates (``aggs``, by default count, live,
+    max LSN, bit_xor checksum and key zone map) riding ``df``'s own job
+    as ONE named_struct observation (single py4j call, parsed JVM-side) —
+    6 aggregates per partition as Column objects would add ~100s of py4j
+    round-trips per batch to the plan phase. Returns the observed frame
+    and the Observation; ``_observed_partition_stats`` folds the
+    results."""
     obs = Observation(name)
     entries = ", ".join(
-        f"'n_{p}', sum(if({PART_COL} = {p}, 1, 0)), "
-        f"'l_{p}', sum(if({PART_COL} = {p} and _op <> 'D', 1, 0)), "
-        f"'m_{p}', max(if({PART_COL} = {p}, _lsn, null)), "
-        f"'x_{p}', bit_xor(if({PART_COL} = {p}, _h, null)), "
-        f"'a_{p}', min(if({PART_COL} = {p}, conv_id, null)), "
-        f"'b_{p}', max(if({PART_COL} = {p}, conv_id, null))"
+        f"'{k}_{p}', {agg.format(in_p=f'{PART_COL} = {p}')}"
         for p in parts
+        for k, agg in aggs.items()
     )
     return df.observe(obs, F.expr(f"named_struct({entries})").alias("pstats")), obs
 
@@ -711,7 +806,9 @@ def _observed_partition_stats(observations: list, parts: list[int]) -> list[dict
     """One stats row per partition in ``parts`` (the ``_written_partition_stats``
     shape) from the observations of every job that wrote its files: counts
     add, max/min compose, and bit_xor checksums xor-combine
-    (order-independent by construction)."""
+    (order-independent by construction). Fields an observation did not
+    aggregate fold to their empty value (checksum of nothing, no zone
+    map)."""
     vals = [o.get["pstats"].asDict() for o in observations]
     out = []
     for p in parts:
@@ -1057,7 +1154,7 @@ class CdcEngine:
             # carry forward), so only the partitions the merge rewrote or
             # read narrow have their old live counts displaced by its
             # live_after
-            self._count_cow(
+            self._count_ledger(
                 rpt, stats, pre,
                 sum(
                     old_entries[p]["live_rows"]
@@ -1189,53 +1286,18 @@ class CdcEngine:
             old_entries, plan.parts(FUSED), evolved
         ).withColumn("_src", F.lit(0))
         if ts_parts:
-            # narrow branch: the resolve window needs only the merge keys
-            # and the LWW order columns; null literals on the rest prune
-            # the payload column chunks out of the parquet scan
-            field_types = {f.name: f.dataType for f in evolved.fields}
-            key_or_order = {"conv_id", "turn_idx", "ts"}
-            narrow_inc = (
-                self._read_physical(old_entries, ts_parts, evolved)
-                .select(
-                    F.col(PART_COL),
-                    *[
-                        F.col(c)
-                        if c in key_or_order
-                        else F.lit(None).cast(field_types[c]).alias(c)
-                        for c in payload_cols
-                    ],
-                    "_lsn",
-                    "_op",
+            incumbent = incumbent.unionByName(
+                _narrow_incumbent(
+                    self._read_physical(old_entries, ts_parts, evolved), evolved
                 )
-                .withColumn("_src", F.lit(0))
             )
-            incumbent = incumbent.unionByName(narrow_inc)
         evt = _event_rows(events, num_buckets, payload_cols, "1 AS _src")
         ranked = build_merge_ranking(
             incumbent.unionByName(evt), plan.hot_buckets, SKEW_SALT,
             incumbent=True, inc_any=bool(ts_parts),
         )
         obs = Observation(f"batch-{batch_id}")
-        # one parsed SQL expression per aggregate (vs ~6 driver round-trips
-        # per Column build); `_src = 1 AND _rn = 1` is the "winning event
-        # row" predicate throughout
-        obs_exprs = [
-            "sum(if(_src = 1 AND _rn = 1, 1, 0)) AS applied",
-            "sum(if(_src = 1 AND _replay = 1, 1, 0)) AS dups",
-            "sum(if(_src = 1 AND _replay = 0 AND _rn > 1, 1, 0)) AS superseded",
-            "sum(if(_src = 1 AND _rn = 1 AND _op IN ('I', 'U') AND _inc_live = 0, 1, 0)) AS ins",
-            "sum(if(_src = 1 AND _rn = 1 AND _op IN ('I', 'U') AND _inc_live = 1, 1, 0)) AS upd",
-            "sum(if(_src = 1 AND _rn = 1 AND _op = 'D' AND _inc_live = 1, 1, 0)) AS `del`",
-            "sum(if(_rn = 1 AND _op <> 'D', 1, 0)) AS live_after",
-            "max(if(_src = 1, _lsn, null)) AS mx",
-            # op histogram folded into the SAME observation (3 more
-            # conditional sums on the one pipeline execution) — a groupBy
-            # recompute would re-run the entire uncached merge
-            *[
-                f"sum(if(_src = 1 AND _replay = 0 AND _op = '{o}', 1, 0)) AS op_{o}"
-                for o in ("I", "U", "D")
-            ],
-        ]
+        obs_exprs = list(_LEDGER_OBS)
         keep = F.col("_rn") == 1
         if ts_parts:
             # merge-proven append: count batch winners that displaced an
@@ -1334,10 +1396,12 @@ class CdcEngine:
                 files[p] = files.get(p, []) + fl
         return appended, pobs
 
-    def _count_cow(self, rpt: BatchReport, stats, pre, replaced_old_live: int) -> None:
-        """Fill the COW ledger from the merge observation. ``pre`` is the
-        grouped pre-resolve's (n, nd) row: it dropped (n − events into the
-        union) events — duplicates-by-lsn first, the rest lost LWW
+    def _count_ledger(self, rpt: BatchReport, stats, pre, replaced_old_live: int) -> None:
+        """Fill the ledger from a merge window's observation (COW and MOR).
+        ``replaced_old_live`` is the old live-row count of the partitions
+        whose every key went through the window. ``pre`` is the grouped
+        pre-resolve's (n, nd) row (COW only): it dropped (n − events into
+        the union) events — duplicates-by-lsn first, the rest lost LWW
         in-batch."""
         applied, sup, dups = (
             int(stats[k] or 0) for k in ("applied", "superseded", "dups")
@@ -1406,43 +1470,56 @@ class CdcEngine:
     ) -> BatchReport:
         """Merge-on-read write path (``EngineConfig.write_mode='mor'``).
 
-        Instead of rewriting every touched partition (COW), the batch is
-        resolved WITHIN ITSELF by the same LWW window and the winners are
-        written as per-partition DELTA files; the merge against the
-        incumbent is deferred to read time (``IceliteTable.read`` resolves
-        base ∪ deltas) or to ``compact()``. At 100 TB an update-heavy batch
-        touching a few rows per partition writes kilobytes instead of
-        rewriting terabytes — the Iceberg-v2 / Hudi trade, re-expressed on
-        the engine's own table format.
+        Instead of rewriting every touched partition (COW), the batch's
+        winning rows are written as per-partition DELTA files; the merge of
+        base ∪ deltas is deferred to read time (``IceliteTable.read``) or
+        to ``compact()``. At 100 TB an update-heavy batch touching a few
+        rows per partition writes kilobytes instead of rewriting terabytes
+        — the Iceberg-v2 / Hudi trade, re-expressed on the engine's own
+        table format.
 
-        The ledger still matches COW batch-for-batch: delta winners are
-        classified against the incumbent via a KEYS-ONLY column-pruned scan
-        (conv_id, turn_idx, ts, _lsn, _op) of the touched partitions'
-        base+prior-delta files, semi-joined down to the delta's keys before
-        the resolve window — so the classification job reads a few percent
-        of the table bytes (text payloads never move) and shuffles only
-        rows whose keys the batch touched. Partition checksums and the
-        table digest are undefined (None) while deltas are pending; they
-        are restored by ``compact()``, after which the digest EQUALS the
-        COW digest for the same log (asserted in tests/test_mor.py).
+        Classification rides the delta write. The touched partitions' base
+        and pending-delta rows enter COW's union window NARROW (keys,
+        ``ts``, ``_lsn``, ``_op``; payload chunks never leave the parquet
+        scan), with ``unresolved=True`` so liveness and replay pairing come
+        from each key's newest incumbent row. The ledger rides the write
+        job's ``observe()`` with COW's expressions, so it equals COW's
+        batch for batch by construction, and only batch rows that beat
+        every incumbent row (``_src = 1 AND _rn = 1``) become deltas: a
+        row that loses was never visible to a read, so not writing it
+        changes no read. Per-partition delta stats (rows written, live
+        delta, max LSN) ride a second observation on the same job when at
+        most ``PARTSTATS_OBSERVE_LIMIT`` partitions are touched; above it
+        they come from a read-back of the written deltas joined to the
+        incumbent (``build_mor_classification``). Partition checksums and
+        the table digest are undefined (None) while deltas are pending;
+        ``compact()`` restores them, after which the digest EQUALS the COW
+        digest for the same log (asserted in tests/test_mor.py).
         """
         cfg = self.config
         batch_id = rpt.batch_id
+        phys = physical_schema(evolved)
+        inc_files = [
+            f
+            for p in plan.touched
+            if p in old_entries
+            for f in old_entries[p]["files"] + (old_entries[p].get("delta_files") or [])
+        ]
+        rows = _event_rows(events, num_buckets, payload_cols, "1 AS _src")
+        if inc_files:
+            rows = _narrow_incumbent(self._scan(phys, inc_files), evolved).unionByName(rows)
         ranked = build_merge_ranking(
-            _event_rows(events, num_buckets, payload_cols),
-            plan.hot_buckets, SKEW_SALT,
+            rows, plan.hot_buckets, SKEW_SALT, incumbent=True, unresolved=True
         )
         obs = Observation(f"mor-batch-{batch_id}")
-        ranked_obs = ranked.observe(
-            obs,
-            F.count(F.lit(1)).alias("n_in"),
-            F.sum(F.when(F.col("_replay") == 1, 1).otherwise(0)).alias("dups_b"),
-            F.sum(
-                F.when((F.col("_replay") == 0) & (F.col("_rn") > 1), 1).otherwise(0)
-            ).alias("sup_b"),
-            F.max("_lsn").alias("mx"),
+        winners = ranked.observe(obs, *[F.expr(s) for s in _LEDGER_OBS]).filter(
+            "_src = 1 AND _rn = 1"
         )
-        winners = ranked_obs.filter(F.col("_rn") == 1)
+        pobs = None
+        if len(plan.touched) <= PARTSTATS_OBSERVE_LIMIT:
+            winners, pobs = _observe_partition_stats(
+                winners, plan.touched, f"mor-pstats-{batch_id}", _MOR_PSTATS
+            )
         phys_cols = [PART_COL] + payload_cols + ["_lsn", "_op", "_salt"]
         rpt.tick("plan")
         # as in the COW path: the seen-LSN write is independent of the
@@ -1455,101 +1532,34 @@ class CdcEngine:
         )
         stats = obs.get
         rpt.tick("write+delta")
-
-        # classification + per-partition delta stats: one narrow job
-        key_cols = ["conv_id", "turn_idx"]
-        narrow = [PART_COL] + key_cols + ["ts", "_lsn", "_op"]
-        phys = physical_schema(evolved)
-        dback = self._scan(phys, [f for fl in files.values() for f in fl]).select(*narrow)
-        inc_files = []
-        for p in plan.touched:
-            e = old_entries.get(p)
-            if e:
-                inc_files.extend(e["files"])
-                inc_files.extend(e.get("delta_files") or [])
-        if inc_files:
-            # size-gate the broadcasts: the bucket pre-pass already
-            # counted the batch's valid events on the driver — an upper
-            # bound on its distinct key count, so the gate never
-            # broadcasts a frame bigger than it expects
-            j = build_mor_classification(
-                dback,
-                self._scan(phys, inc_files).select(*narrow),
-                key_cols,
-                broadcast_keys=sum(plan.valid.values()) <= BROADCAST_KEY_LIMIT,
+        if pobs is not None:
+            part_rows = _observed_partition_stats(
+                [pobs], [p for p in plan.touched if p in files]
             )
         else:
-            j = (
-                dback.withColumn("_i_ts", F.lit(None).cast("timestamp"))
-                .withColumn("_i_lsn", F.lit(None).cast("long"))
-                .withColumn("_i_live", F.lit(None).cast("int"))
-            )
-        # the delta winner beats the incumbent exactly when it would
-        # have won the COW union window: ts desc nulls last, lsn desc,
-        # incumbent wins exact ties
-        has_inc = F.col("_i_lsn").isNotNull()
-        ts_gt = F.col("ts").isNotNull() & (
-            F.col("_i_ts").isNull() | (F.col("ts") > F.col("_i_ts"))
-        )
-        beats = (
-            (~has_inc)
-            | ts_gt
-            | (F.col("ts").eqNullSafe(F.col("_i_ts")) & (F.col("_lsn") > F.col("_i_lsn")))
-        )
-        replay_vb = has_inc & (F.col("_lsn") == F.col("_i_lsn"))
-        upsert = F.col("_op").isin("I", "U")
-        live = F.col("_i_live") == 1
-        c = lambda p: F.sum(F.when(p, 1).otherwise(0))  # noqa: E731
-        pstats = (
-            j.groupBy(PART_COL)
-            .agg(
-                F.count(F.lit(1)).alias("rows"),
-                F.max("_lsn").alias("max_lsn"),
-                c(beats).alias("applied"),
-                c(~beats & replay_vb).alias("dups_vb"),
-                c(~beats & ~replay_vb).alias("sup_vb"),
-                c(beats & upsert & ~live.eqNullSafe(F.lit(True))).alias("ins"),
-                c(beats & upsert & live).alias("upd"),
-                c(beats & (F.col("_op") == "D") & live).alias("del"),
-            )
-            .collect()
-        )
-        rpt.tick("classify")
+            part_rows = self._mor_delta_stats(files, inc_files, phys, plan)
+            rpt.tick("partstats")
 
-        def s(col: str) -> int:
-            return sum(int(r[col] or 0) for r in pstats)
-
-        rpt.applied = s("applied")
-        rpt.inserts = s("ins")
-        rpt.updates = s("upd")
-        rpt.deletes = s("del")
-        rpt.superseded = int(stats["sup_b"] or 0) + s("sup_vb")
-        rpt.deduped = (
-            rpt.events_read - rpt.quarantined - rpt.applied - rpt.superseded
+        self._count_ledger(
+            rpt, stats, None,
+            sum(old_entries[p]["live_rows"] for p in plan.touched if p in old_entries),
         )
-        rpt.rows_after = rpt.rows_before + rpt.inserts - rpt.deletes
-
+        # a partition where no batch row won keeps its entry verbatim
         replaced = {}
-        for r in pstats:
+        for r in part_rows:
             p = int(r[PART_COL])
-            old = old_entries.get(p)
-            old_lal = old.get("last_applied_lsn") if old else None
-            new_lal = int(r["max_lsn"]) if r["max_lsn"] is not None else None
+            old = old_entries.get(p, {})
+            lal = r["last_applied_lsn"]
+            lsns = (old.get("last_applied_lsn"), int(lal) if lal is not None else None)
             replaced[p] = {
-                "files": list(old["files"]) if old else [],
-                "delta_files": (list(old.get("delta_files") or []) if old else [])
-                + files.get(p, []),
-                "row_count": (int(old["row_count"]) if old else 0) + int(r["rows"]),
-                "live_rows": (int(old["live_rows"]) if old else 0)
-                + int(r["ins"] or 0)
-                - int(r["del"] or 0),
+                "files": list(old.get("files") or []),
+                "delta_files": list(old.get("delta_files") or []) + files[p],
+                "row_count": int(old.get("row_count") or 0) + int(r["row_count"]),
+                "live_rows": int(old.get("live_rows") or 0) + int(r["live_rows"]),
                 # checksum/digest undefined while deltas are pending;
                 # compact() restores them (and the table digest)
                 "checksum": None,
-                "last_applied_lsn": max(
-                    (v for v in (old_lal, new_lal) if v is not None),
-                    default=None,
-                ),
+                "last_applied_lsn": max((v for v in lsns if v is not None), default=None),
             }
         self._commit(rpt, replaced, evolved, None, lsn_fut, stats["mx"])
 
@@ -1579,6 +1589,52 @@ class CdcEngine:
                 rpt.auto_compacted_partitions = len(crossed)
                 rpt.tick("auto_compact")
         return rpt
+
+    def _mor_delta_stats(
+        self,
+        files: dict[int, list[str]],
+        inc_files: list[str],
+        phys: StructType,
+        plan: BatchPlan,
+    ) -> list:
+        """Per-partition delta stats of a MOR batch that touched more than
+        ``PARTSTATS_OBSERVE_LIMIT`` partitions, in the ``_MOR_PSTATS``
+        shape: a narrow read-back of the written deltas joined to each
+        key's newest incumbent row (``build_mor_classification``). Every
+        written row beat that row in the merge window, so its op and the
+        incumbent's liveness alone decide the live delta."""
+        if not files:
+            return []
+        key_cols = ["conv_id", "turn_idx"]
+        narrow = [PART_COL] + key_cols + ["ts", "_lsn", "_op"]
+        j = self._scan(phys, [f for fl in files.values() for f in fl]).select(*narrow)
+        live = F.lit(False)
+        if inc_files:
+            # size-gate the broadcasts: the bucket pre-pass already
+            # counted the batch's valid events — an upper
+            # bound on its distinct key count, so the gate never
+            # broadcasts a frame bigger than it expects
+            j = build_mor_classification(
+                j,
+                self._scan(phys, inc_files).select(*narrow),
+                key_cols,
+                broadcast_keys=sum(plan.valid.values()) <= BROADCAST_KEY_LIMIT,
+            )
+            live = F.coalesce(F.col("_i_live"), F.lit(0)) == 1
+        upsert = F.col("_op").isin("I", "U")
+        return (
+            j.groupBy(PART_COL)
+            .agg(
+                F.count(F.lit(1)).alias("row_count"),
+                F.sum(
+                    F.when(upsert & ~live, 1)
+                    .when((F.col("_op") == "D") & live, -1)
+                    .otherwise(0)
+                ).alias("live_rows"),
+                F.max("_lsn").alias("last_applied_lsn"),
+            )
+            .collect()
+        )
 
     def compact(self, partitions: list[int] | None = None) -> dict:
         """Fold pending merge-on-read delta files back into base files.

@@ -80,6 +80,14 @@ ROUTES = {
         [_row(i, i) for i in range(16)],
         [_row(100 + i, i, op="U", text="u", ts_off_s=60) for i in range(0, 16, 2)],
     ),
+    # the MOR route above PARTSTATS_OBSERVE_LIMIT (patched to 0 below): the
+    # per-partition delta stats come from a read-back of the written deltas
+    # joined to the incumbent instead of the write's observation
+    "mor_readback": (
+        {"write_mode": "mor"},
+        [_row(i, i) for i in range(16)],
+        [_row(100 + i, i, op="U", text="u", ts_off_s=60) for i in range(0, 16, 2)],
+    ),
     # the fused route plus the missing-key probe: one update of a key the
     # table never held is quarantined
     "quarantine_missing": (
@@ -94,6 +102,7 @@ ROUTES = {
 CONSTANTS = {
     "two_stream_zero_displaced": {"TWO_STREAM_MIN_RATIO": 0.0},
     "two_stream_survivors": {"TWO_STREAM_MIN_RATIO": 0.0},
+    "mor_readback": {"PARTSTATS_OBSERVE_LIMIT": 0},
 }
 
 #: route -> (jobs for batch 0, jobs for batch 1)
@@ -102,7 +111,8 @@ EXPECTED_JOBS = {
     "zone_map_append": (5, 7),
     "two_stream_zero_displaced": (5, 7),
     "two_stream_survivors": (5, 12),
-    "mor": (7, 13),
+    "mor": (5, 7),
+    "mor_readback": (7, 13),
     "quarantine_missing": (11, 25),
 }
 
@@ -136,6 +146,8 @@ def test_jobs_per_batch(spark, tmp_path, monkeypatch, route):
     elif route == "two_stream_survivors":
         assert r1.partitions_two_stream > 0
         assert r1.partitions_appended < r1.partitions_touched
+    elif route == "mor_readback":
+        assert "partstats" in r1.phase_ms
     elif route == "quarantine_missing":
         assert r1.quarantined == 1
         assert r1.partitions_appended == r1.partitions_two_stream == 0

@@ -7,8 +7,11 @@ time / compaction — the Iceberg-v2 / Hudi positional-delete analog on the
 engine's own table format.
 
 Correctness contract tested here:
-* the MOR ledger equals the COW ledger batch-for-batch (the keys-only
-  classification scan reproduces exactly what COW's union window counts);
+* the MOR ledger equals the COW ledger batch-for-batch (the touched
+  partitions' narrow incumbent rows ride COW's own union window, and the
+  ledger its observation), on the observe tier and on the read-back tier
+  above ``PARTSTATS_OBSERVE_LIMIT``;
+* batch rows that lose to the incumbent are never written as deltas;
 * the MOR resolved read equals the COW table and the pandas oracle at
   every batch point;
 * base files are REUSED (appended-to, never rewritten) by MOR batches;
@@ -16,14 +19,22 @@ Correctness contract tested here:
   defined again and EQUALS the COW digest for the same log;
 * idempotent re-apply beyond the dedup window classifies as replays
   (dups), leaving the table unchanged;
+* a crash between the snapshot swap and the checkpoint marker re-applies
+  the batch with COW's ledger, read and post-compaction digest;
 * reads of a fully-compacted table are scan-only (no resolve window).
 """
 
 from __future__ import annotations
 
+import json
+import os
+
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
+import image_report_spark.engine as engine_mod
 from image_report_spark.config import EngineConfig
 from image_report_spark.engine import CdcEngine
 from image_report_spark.fixtures import ChangeLogGenerator, apply_oracle
@@ -255,3 +266,169 @@ def test_mor_changes_between_sees_delta_commits(spark, tmp_path):
     )
     assert ch.count() > 0
     assert ch.filter(f"_lsn <= {hwm}").count() == 0
+
+
+def _ledger(r) -> dict:
+    return {k: getattr(r, k) for k in LEDGER_KEYS}
+
+
+def _assert_matches_cow(cow, mor, cow_reports, mor_reports) -> None:
+    """Batch-for-batch ledger, resolved read and post-compaction digest
+    of a MOR run equal to the COW run over the same log."""
+    assert len(cow_reports) == len(mor_reports)
+    for cr, mr in zip(cow_reports, mor_reports):
+        assert mr.conservation_ok(), _ledger(mr)
+        assert _ledger(mr) == _ledger(cr), f"batch {mr.batch_id}"
+    pd.testing.assert_frame_equal(_sorted_read(mor), _sorted_read(cow))
+    out = mor.compact()
+    assert out["table_digest"] is not None
+    assert out["table_digest"] == cow.current_table_digest()
+
+
+TS0 = pd.Timestamp("2026-01-01T00:00:00")
+_BATCH_SCHEMA = pa.schema([
+    ("lsn", pa.int64()), ("op", pa.string()), ("conv_id", pa.string()),
+    ("turn_idx", pa.int32()), ("role", pa.string()), ("text", pa.string()),
+    ("tool", pa.string()), ("ts", pa.timestamp("us")),
+])
+
+
+def _write_batch(log_dir: str, batch_id: int, rows: list[tuple]) -> None:
+    """``rows``: (lsn, op, conv, turn, text, ts offset in seconds)."""
+    os.makedirs(log_dir, exist_ok=True)
+    df = pd.DataFrame(
+        [
+            dict(lsn=lsn, op=op, conv_id=f"c{conv:03d}", turn_idx=turn,
+                 role="user", text=text, tool=None,
+                 ts=TS0 + pd.Timedelta(seconds=off))
+            for lsn, op, conv, turn, text, off in rows
+        ]
+    )
+    pq.write_table(
+        pa.Table.from_pandas(df, schema=_BATCH_SCHEMA, preserve_index=False),
+        os.path.join(log_dir, f"batch-{batch_id:05d}.parquet"),
+    )
+
+
+def _data_files(eng) -> set[str]:
+    root = os.path.join(eng.table.root, "data")
+    return {
+        os.path.join(d, f)
+        for d, _, fs in os.walk(root)
+        for f in fs
+        if f.endswith(".parquet")
+    }
+
+
+def test_mor_losing_rows_write_no_delta(spark, tmp_path):
+    """A batch whose every event is older than its key's incumbent row
+    (late updates, late deletes, a late re-insert) loses every key in the
+    merge window: it writes no delta file and leaves each manifest entry
+    byte-identical, while its ledger, read and post-compaction digest
+    equal COW's."""
+    log = str(tmp_path / "log")
+    _write_batch(log, 0, [(i, "I", i, t, f"v{i}", 60) for i in range(12) for t in (0, 1)])
+    # batch 1 updates a key batch 0 left pending, so the incumbent of
+    # batch 2 is base + an older base row + a delta
+    _write_batch(log, 1, [(100 + i, "U", i, 0, f"u{i}", 120) for i in range(0, 12, 3)])
+    _write_batch(
+        log, 2,
+        [(200 + i, "U", i, 0, f"late{i}", 30) for i in range(12)]
+        + [(220 + i, "D", i, 1, None, 30) for i in range(0, 12, 2)]
+        + [(240 + i, "I", i, 1, f"re{i}", 10) for i in range(1, 12, 2)],
+    )
+    cow, mor = _mk(spark, tmp_path, "cow"), _mk(spark, tmp_path, "mor")
+    cow_reports = cow.run(log)
+    mor_reports = mor.run(log, max_batches=2)
+    mor.compact(partitions=[0, 1, 2, 3])  # some incumbents in base, some in deltas
+    before = mor.table.snapshot()["manifest"]
+    files_before = _data_files(mor)
+    mor_reports += [r for r in mor.run(log) if not r.skipped]
+    assert mor_reports[2].applied == 0
+    assert mor_reports[2].superseded == 12 + 6 + 6
+    assert _data_files(mor) == files_before, "a losing row was written"
+    after = mor.table.snapshot()["manifest"]
+    dump = lambda m: sorted(json.dumps(e, sort_keys=True) for e in m)  # noqa: E731
+    assert dump(after) == dump(before)
+    _assert_matches_cow(cow, mor, cow_reports, mor_reports)
+
+
+def test_mor_crash_between_swap_and_marker_matches_cow(spark, tmp_path):
+    """A batch whose snapshot committed but whose checkpoint marker did
+    not (a crash between the two) is re-applied by the next run(). Its
+    events now meet their own delta rows as incumbents: each pairs with
+    its key's NEWEST incumbent row only, so the re-applied ledger, the
+    read and the post-compaction digest equal COW's in the same crash."""
+    gen = ChangeLogGenerator(
+        n_convs=30, max_turns=5, n_batches=3, seed=17,
+        dup_frac=0.05, late_frac=0.15,
+    )
+    log = str(tmp_path / "log")
+    gen.write_log(log)
+    runs = {}
+    for mode in ("cow", "mor"):
+        eng = _mk(spark, tmp_path, mode)
+        first = eng.run(log, max_batches=2)
+        os.remove(os.path.join(str(tmp_path / f"cp-{mode}"), "batches", "batch-00001.json"))
+        rest = eng.run(log)
+        assert [r.skipped for r in rest] == [True, False, False]
+        assert rest[1].applied == 0 and rest[1].rows_after == first[1].rows_after
+        runs[mode] = (eng, first + rest[1:])
+    (cow, cow_reports), (mor, mor_reports) = runs["cow"], runs["mor"]
+    _assert_matches_cow(cow, mor, cow_reports, mor_reports)
+
+
+@pytest.fixture(scope="module")
+def reference(spark, tmp_path_factory, gen):
+    """COW and default-tier MOR runs over ``gen``'s log."""
+    root = tmp_path_factory.mktemp("mor-reference")
+    log = str(root / "log")
+    gen.write_log(log)
+    cow, mor = _mk(spark, root, "cow"), _mk(spark, root, "mor")
+    mor.run(log)
+    return log, cow, cow.run(log), mor
+
+
+@pytest.mark.parametrize(
+    "patch",
+    [
+        {"HOT_EVENTS": 2},
+        {"PARTSTATS_OBSERVE_LIMIT": 0},
+        {"PARTSTATS_OBSERVE_LIMIT": 0, "BROADCAST_KEY_LIMIT": 0},
+    ],
+    ids=["salted_hot", "readback", "readback_shuffled"],
+)
+def test_mor_tiers_match_cow(spark, tmp_path, monkeypatch, reference, patch):
+    """Salted hot buckets and the read-back delta-stats tier (broadcast
+    and shuffled joins) reach COW's ledger batch for batch, and manifest
+    entries whose row counts, live rows and last-applied LSNs equal the
+    default tier's."""
+    log, cow, cow_reports, ref = reference
+    for name, value in patch.items():
+        monkeypatch.setattr(engine_mod, name, value)
+    salted = []
+    salt_expr = engine_mod._salt_expr
+
+    def spy(hot_buckets, n_salt):
+        salted.extend(hot_buckets)
+        return salt_expr(hot_buckets, n_salt)
+
+    monkeypatch.setattr(engine_mod, "_salt_expr", spy)
+    mor = _mk(spark, tmp_path, "mor")
+    mor_reports = mor.run(log)
+    # the batches really took the tier the case is named for
+    assert bool(salted) == ("HOT_EVENTS" in patch)
+    readback = "PARTSTATS_OBSERVE_LIMIT" in patch
+    assert all(("partstats" in r.phase_ms) == readback for r in mor_reports)
+
+    def stats(eng) -> dict:
+        return {
+            e["partition"]: (
+                e["row_count"], e["live_rows"], e["last_applied_lsn"],
+                len(e["delta_files"]),
+            )
+            for e in eng.table.snapshot()["manifest"]
+        }
+
+    assert stats(mor) == stats(ref)
+    _assert_matches_cow(cow, mor, cow_reports, mor_reports)

@@ -1,9 +1,13 @@
 """Physical-plan + corner-case pins for the merge-on-read path.
 
 Scale claims checked against Catalyst:
-* the MOR write pipeline (within-batch resolve → delta write) moves the
-  batch across the network exactly once, like the COW merge;
-* the classification job is size-gated (engine.BROADCAST_KEY_LIMIT):
+* the MOR write pipeline (narrow incumbent ∪ batch → one LWW window →
+  delta write) moves the rows across the network exactly once, like the
+  COW merge, and the incumbent scan reads no payload column;
+* the window pairs a batch row with the newest incumbent row of its key
+  only (liveness and replays), never with an older, superseded one;
+* the delta-stats read-back above ``engine.PARTSTATS_OBSERVE_LIMIT``
+  touched partitions is size-gated (engine.BROADCAST_KEY_LIMIT):
   below the gate the keys-only incumbent scan is semi-joined against a
   BROADCAST of the delta's keys and broadcast back into the outer join
   (zero added Exchanges); above it BOTH joins run shuffled — a
@@ -19,6 +23,11 @@ Corners:
 """
 
 from __future__ import annotations
+
+import datetime
+import io
+import re
+from contextlib import redirect_stdout
 
 import pandas as pd
 import pytest
@@ -59,6 +68,108 @@ def _classification_frames(spark, mor):
     dback = spark.read.parquet(*delta_files).select(*narrow)
     inc_scan = spark.read.parquet(*base_files).select(*narrow)
     return dback, inc_scan
+
+
+def _explain(df) -> str:
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
+
+
+def test_mor_write_pipeline_has_single_exchange(spark, tmp_path):
+    """The MOR delta write as ``_mor_tail`` builds it: the touched
+    partitions' narrow incumbent (base and pending deltas, payload as
+    typed NULLs) ∪ the batch's events → ``build_merge_ranking`` with
+    ``unresolved=True`` → the winning batch rows. ONE Exchange and ONE
+    Window on the cold and the salted-hot path — the newest-incumbent
+    ``first()`` aggregates share the ranking's sort — and the incumbent
+    scan reads keys and order columns only."""
+    from image_report_spark.engine import (
+        _event_rows,
+        _narrow_incumbent,
+        build_merge_ranking,
+    )
+    from image_report_spark.plans.icelite import physical_schema
+
+    gen = ChangeLogGenerator(n_convs=30, max_turns=5, n_batches=2, seed=21)
+    log = str(tmp_path / "log")
+    gen.write_log(log)
+    mor = _mk(spark, tmp_path)
+    mor.run(log, max_batches=1)
+    mor.compact(partitions=[0, 1, 2, 3])  # base files AND pending deltas
+    snap = mor.table.snapshot()
+    files = [
+        f for e in snap["manifest"] for f in e["files"] + (e.get("delta_files") or [])
+    ]
+    logical = mor.table.logical_schema(snap)
+    payload = [f.name for f in logical.fields]
+    inc = _narrow_incumbent(mor._scan(physical_schema(logical), files), logical)
+    ev = spark.read.parquet(f"{log}/batch-00001.parquet")
+    rows = inc.unionByName(_event_rows(ev, 8, payload, "1 AS _src"))
+    for hot in ([], [0, 3, 5]):
+        winners = build_merge_ranking(
+            rows, hot, 16, incumbent=True, unresolved=True
+        ).filter("_src = 1 AND _rn = 1")
+        plan = _explain(winners)
+        # formatted explain lists each node twice — count distinct nodes
+        assert len(set(re.findall(r"\(\d+\) Exchange", plan))) == 1, (hot, plan)
+        assert len(set(re.findall(r"\(\d+\) Window\b", plan))) == 1, (hot, plan)
+        parts = [ln for ln in plan.splitlines() if "hashpartitioning(" in ln]
+        assert parts and all(("_salt" in ln) == bool(hot) for ln in parts), plan
+        schemas = re.findall(r"ReadSchema: (.*)", plan)
+        narrow = [rs for rs in schemas if "text" not in rs]
+        assert narrow and all("role" not in rs and "conv_id" in rs for rs in narrow), schemas
+
+
+def test_unresolved_incumbent_pairs_with_newest_row_only(spark):
+    """A MOR incumbent holds several rows per key, and the window must
+    judge a batch row against the NEWEST one — the row a read resolves
+    to, and the only one COW's resolved incumbent would hold.
+
+    * key a: incumbent N (lsn 20) supersedes L (lsn 10). The batch
+      replays both: its N pairs with the newest row (a replay); its L
+      must not pair with the superseded L, so it is superseded.
+    * key b: a live base row under a newer tombstone delta: the key is
+      not live, so a re-insert counts as an insert.
+    * key c: no incumbent row; the batch carries its event twice.
+
+    The COW rule (any equal-LSN neighbour, max() over every incumbent
+    row) gets keys a and b wrong on the same rows."""
+    from image_report_spark.engine import build_merge_ranking
+
+    t = datetime.datetime(2026, 1, 1)
+    data = [
+        # (conv_id, ts offset s, _lsn, _op, _src)
+        ("a", 2, 20, "U", 0), ("a", 1, 10, "I", 0),
+        ("a", 2, 20, "U", 1), ("a", 1, 10, "I", 1),
+        ("b", 1, 1, "I", 0), ("b", 2, 2, "D", 0), ("b", 3, 3, "I", 1),
+        ("c", 1, 5, "I", 1), ("c", 1, 5, "I", 1),
+    ]
+    rows = spark.createDataFrame(
+        [(0, c, 0, t + datetime.timedelta(seconds=s), lsn, op, src) for c, s, lsn, op, src in data],
+        "_p int, conv_id string, turn_idx int, ts timestamp, _lsn bigint, _op string, _src int",
+    )
+
+    def batch_rows(**kw) -> list:
+        return sorted(
+            (r.conv_id, r._lsn, r._rn, r._replay, r._inc_live)
+            for r in build_merge_ranking(rows, [], 16, incumbent=True, **kw)
+            .filter("_src = 1")
+            .collect()
+        )
+
+    # (conv_id, _lsn, _rn, _replay, _inc_live)
+    assert batch_rows(unresolved=True) == [
+        ("a", 10, 4, 0, 1), ("a", 20, 2, 1, 1),
+        ("b", 3, 1, 0, 0),
+        ("c", 5, 1, 0, 0), ("c", 5, 2, 1, 0),
+    ]
+    assert batch_rows() == [
+        ("a", 10, 4, 1, 1), ("a", 20, 2, 1, 1),
+        ("b", 3, 1, 0, 1),
+        ("c", 5, 1, 0, 0), ("c", 5, 2, 1, 0),
+    ]
 
 
 def test_mor_classification_broadcasts_delta_keys(spark, tmp_path):
