@@ -131,10 +131,12 @@ class EngineConfig:
     #: to read time / compaction — at 100 TB an update-heavy batch touching
     #: a few rows per partition writes KBs instead of rewriting TBs (the
     #: Iceberg-v2 / Hudi trade). Ledger semantics are IDENTICAL in both
-    #: modes: MOR classifies its delta winners against the incumbent via a
-    #: keys-only column-pruned scan (conv_id, turn_idx, ts, lsn, op — a few
-    #: %% of table bytes when payloads are text) semi-joined down to the
-    #: delta's keys, so applied/superseded/deduped/ins/upd/del and the
+    #: modes: MOR classifies the batch inside the delta write itself — the
+    #: touched partitions' narrow incumbent rows (keys, ts, lsn, op from
+    #: base and pending delta files; payloads as nulls) join the batch in
+    #: the same union window COW's merge uses, the ledger rides that
+    #: write's observation, and only rows that beat every incumbent row
+    #: are written — so applied/superseded/deduped/ins/upd/del and the
     #: conservation equations match copy-on-write batch for batch.
     write_mode: str = "cow"
 

@@ -47,12 +47,7 @@ from pyspark.sql.types import (
 )
 
 from image_report_spark.config import EngineConfig
-from image_report_spark.functions.digests import (
-    SEP,
-    canonical_cols,
-    table_digest,
-    typed_row_digest,
-)
+from image_report_spark.functions.digests import row_digest, table_digest
 from image_report_spark.operators.evolution import reconcile_schema
 from image_report_spark.operators.resolve import resolve_lww_grouped
 from image_report_spark.operators.skew import detect_hot_keys, salt_hot_keys
@@ -119,44 +114,31 @@ PARTSTATS_DRIVER_BYTES_LIMIT = 128 * 1024 * 1024
 
 
 def _checksum_cols_id(
-    checksum_cols: list[str],
-    rowhash_mode: str = "canonical",
-    schema: StructType | None = None,
+    checksum_cols: list[str], schema: StructType | None = None
 ) -> str:
-    """Short stable id of the checksum column SET, their types and the hash
-    definition a partition entry's ``checksum`` was computed over. The
-    append tiers may only xor-combine an old entry's checksum with fresh
-    per-row hashes when both were computed over the same columns, types
-    AND hash definition. After an additive schema evolution on a table
-    without frozen ``checksum_columns`` the set changes; after a type
-    promotion (int→bigint, float→double) the typed hash of every value
-    of that column changes, and float→double changes its canonical
-    string too. Either way old entries stop matching, and those
-    partitions fall back to one full rewrite (which re-hashes them under
-    the new definition and restores appendability). ``schema`` supplies
-    the column types; without it the id covers names and mode only."""
+    """Short stable id of the checksum column SET and their types a
+    partition entry's ``checksum`` was computed over. The append tiers may
+    only xor-combine an old entry's checksum with fresh per-row hashes
+    when both were computed over the same columns and types. After an
+    additive schema evolution on a table without frozen
+    ``checksum_columns`` the set changes; after a type promotion
+    (int→bigint, float→double) the hash of every value of that column
+    changes. Either way old entries stop matching, and those partitions
+    fall back to one full rewrite (which re-hashes them under the new
+    definition and restores appendability). ``schema`` supplies the column
+    types; without it the id covers names only. The ``:typed`` suffix
+    names the row-hash definition (functions/digests.py:row_digest); it
+    stays so the ids of manifests already written still match."""
     types = {f.name: f.dataType.simpleString() for f in schema.fields} if schema else {}
     desc = [f"{c}:{types[c]}" if c in types else c for c in checksum_cols]
-    base = format(zlib.crc32("\x1f".join(desc).encode()), "08x")
-    return base if rowhash_mode == "canonical" else f"{base}:{rowhash_mode}"
+    return format(zlib.crc32("\x1f".join(desc).encode()), "08x") + ":typed"
 
 
-def _live_row_hash(
-    df: DataFrame, checksum_cols: list[str], rowhash_mode: str = "canonical"
-):
+def _live_row_hash(df: DataFrame, checksum_cols: list[str]):
     """Per-row content hash of LIVE rows — NULL for tombstones so the
     partition ``bit_xor`` skips them. This is the unit of the
-    order-independent partition checksum (functions/digests.py).
-    ``rowhash_mode`` comes from the table snapshot (frozen at create):
-    "typed" hashes native columns directly (no canonical cast-strings or
-    concat buffer — see digests.typed_row_digest for the measured GC
-    motivation), "canonical" is the original string-canonicalized form
-    kept for tables created before the mode existed."""
-    if rowhash_mode == "typed":
-        h = typed_row_digest(df, checksum_cols)
-    else:
-        h = F.xxhash64(F.concat_ws(SEP, *canonical_cols(df, checksum_cols)))
-    return F.when(F.col("_op") != "D", h)
+    order-independent partition checksum (functions/digests.py)."""
+    return F.when(F.col("_op") != "D", row_digest(df, checksum_cols))
 
 
 def _driver_partition_stats(root: str, files: dict[int, list[str]]) -> list:
@@ -255,7 +237,6 @@ def _written_partition_stats(
     checksum_cols: list[str],
     mode: str,
     driver_bytes_limit: int = 0,
-    rowhash_mode: str = "canonical",
 ) -> list:
     """Per-partition lineage (row counts, live rows, last applied LSN,
     order-independent checksum) aggregated from freshly WRITTEN files.
@@ -282,7 +263,7 @@ def _written_partition_stats(
     written_paths = [os.path.join(root, f) for fl in files.values() for f in fl]
     if mode == "reverify":
         wdf = spark.read.schema(physical_schema(logical)).parquet(*written_paths)
-        h = _live_row_hash(wdf, checksum_cols, rowhash_mode)
+        h = _live_row_hash(wdf, checksum_cols)
     else:
         wdf = spark.read.schema(_PARTSTATS_SCHEMA).parquet(*written_paths)
         h = F.col("_h")
@@ -838,7 +819,6 @@ def _observed_partition_stats(observations: list, parts: list[int]) -> list[dict
 def _stats_columns(
     df: DataFrame,
     checksum_cols: list[str],
-    rowhash_mode: str,
     partstats_mode: str,
     observe: list[int] | None = None,
     name: str = "",
@@ -853,7 +833,7 @@ def _stats_columns(
     consume. Returns the frame to write and the observation, if any."""
     if partstats_mode == "reverify":
         return df, None
-    df = df.withColumn("_h", _live_row_hash(df, checksum_cols, rowhash_mode))
+    df = df.withColumn("_h", _live_row_hash(df, checksum_cols))
     if not observe:
         return df, None
     df, obs = _observe_partition_stats(df, observe, name)
@@ -946,28 +926,34 @@ class CdcEngine:
             IceliteTable.create(
                 spark, table_root, schema, num_buckets=config.num_buckets
             )
-            # checksum column set + hash definition are frozen at creation so
-            # partition digests stay comparable across schema evolution
-            # (evolved columns are verified by full-content replay diff, not
-            # by the rolling digest), and every tier — stored/observe/driver
+            # the checksum column set is frozen at creation so partition
+            # digests stay comparable across schema evolution (evolved
+            # columns are verified by full-content replay diff, not by the
+            # rolling digest); the hash definition itself is fixed by
+            # IceliteTable.create, so every tier — stored/observe/driver
             # read-back, reverify, MOR compact, replay verify — hashes
-            # identically for the table's whole lifetime. New tables hash
-            # "typed": xxhash64 over native typed columns with typed NULL
-            # sentinels (functions/digests.py:typed_row_digest) — no
-            # per-row cast-strings or concat buffer, removing ~200 B of
-            # garbage per written row from a merge stage measured at 46-73%
-            # JVM GC time (BENCH/merge_stage_profile.py,
-            # BENCH/rowhash_probe.py: the canonical form costs 0.25-0.3 s
-            # per 2 M rows before GC amplification). "canonical", the
-            # original string-canonicalized form, stays readable: tables
-            # without ``rowhash_mode`` in their snapshot always read as
-            # canonical, so their manifests remain valid and append-path
-            # xor-combines never mix definitions (the per-entry ``ck_id``
-            # additionally tags the mode). Checksums are an internal
-            # integrity contract; no external system consumes their values.
+            # identically for the table's whole lifetime
             eng.table.set_checksum_columns([f.name for f in schema.fields])
-            eng.table.set_rowhash_mode("typed")
         return eng
+
+    def _checksum_columns(self, snap: dict, logical: StructType) -> list[str]:
+        """The columns a partition checksum hashes, read from ``snap``
+        once the snapshot is shown to name the one row-hash definition
+        this engine computes (functions/digests.py:row_digest). A snapshot
+        that names none predates it: its manifest checksums hash a retired
+        form, so they can neither be xor-extended by the append tiers nor
+        compared by replay_verify. The engine refuses such a table rather
+        than mix two definitions in one digest."""
+        mode = snap.get("rowhash_mode")
+        if mode != "typed":
+            raise ValueError(
+                f"table at {self.table.root} does not use the typed row hash "
+                f"(snapshot {snap.get('snapshot_id')} records {mode!r}), so "
+                "its checksums cannot be extended or verified. Re-ingest "
+                "its change log into a new table: CdcEngine.init(spark, "
+                "<new table root>, <new checkpoint root>).run(log_dir)"
+            )
+        return snap.get("checksum_columns") or [f.name for f in logical.fields]
 
     # ------------------------------------------------------------ the merge
     def apply_batch(
@@ -1049,10 +1035,7 @@ class CdcEngine:
         snap = self.table.snapshot()
         logical = self.table.logical_schema(snap)
         num_buckets = self.table.num_buckets(snap)
-        checksum_cols = snap.get("checksum_columns") or [f.name for f in logical.fields]
-        # hash definition frozen at table create; absent field (pre-mode
-        # tables) means canonical — their manifests stay valid as-is
-        rowhash_mode = snap.get("rowhash_mode") or "canonical"
+        checksum_cols = self._checksum_columns(snap, logical)
 
         # 1. bucket pre-pass (see _prepass) — either computed here or handed
         # in by run()'s pipeline, which overlapped it with the previous
@@ -1090,7 +1073,7 @@ class CdcEngine:
             events = events.join(recent, "lsn", "left_anti")
 
         old_entries = {e["partition"]: e for e in snap["manifest"]}
-        ck_id = _checksum_cols_id(checksum_cols, rowhash_mode, evolved)
+        ck_id = _checksum_cols_id(checksum_cols, evolved)
         plan = plan_batch(bucket_rows, old_entries, cfg, ck_id)
         rpt.partitions_touched = len(plan.touched)
         rpt.rows_before = sum(e["live_rows"] for e in old_entries.values())
@@ -1147,7 +1130,7 @@ class CdcEngine:
             # 4-6. execute: the COW merge runs once, inside the file write
             part_rows, files, append_parts, stats, lsn_fut = self._cow_execute(
                 events, plan, old_entries, evolved, payload_cols, num_buckets,
-                checksum_cols, rowhash_mode, rpt, lsn_pool,
+                checksum_cols, rpt, lsn_pool,
             )
             # 7. account: ledger, manifest, then snapshot + checkpoint marker.
             # Appended partitions KEEP their old live rows (incumbent files
@@ -1186,7 +1169,6 @@ class CdcEngine:
         payload_cols: list[str],
         num_buckets: int,
         checksum_cols: list[str],
-        rowhash_mode: str,
         rpt: BatchReport,
         lsn_pool: ThreadPoolExecutor,
     ):
@@ -1200,7 +1182,7 @@ class CdcEngine:
         ts_parts = plan.parts(TWO_STREAM)
         to_write, obs, pobs = self._cow_merge(
             events, plan, old_entries, evolved, payload_cols, num_buckets,
-            checksum_cols, rowhash_mode, batch_id,
+            checksum_cols, batch_id,
         )
         rpt.tick("plan")
         # the dedup-window LSN set is independent of the merge output, so
@@ -1223,7 +1205,7 @@ class CdcEngine:
             rpt.partitions_carried = sum(p not in files for p in ts_parts)
             appended, pobs2 = self._two_stream_survivors(
                 ts_parts, files, int(stats["displaced"] or 0), old_entries,
-                evolved, checksum_cols, rowhash_mode, plan.observe_stats,
+                evolved, checksum_cols, plan.observe_stats,
                 batch_id,
             )
             append_parts |= appended
@@ -1242,7 +1224,7 @@ class CdcEngine:
         else:
             part_rows = _written_partition_stats(
                 self.spark, self.table.root, files, evolved, checksum_cols,
-                cfg.partstats_mode, PARTSTATS_DRIVER_BYTES_LIMIT, rowhash_mode,
+                cfg.partstats_mode, PARTSTATS_DRIVER_BYTES_LIMIT,
             )
         rpt.tick("partstats")
         return part_rows, files, append_parts, stats, lsn_fut
@@ -1256,7 +1238,6 @@ class CdcEngine:
         payload_cols: list[str],
         num_buckets: int,
         checksum_cols: list[str],
-        rowhash_mode: str,
         batch_id: int,
     ) -> tuple[DataFrame, Observation, Observation | None]:
         """The COW merge pipeline, ready to write: incumbent ∪ events
@@ -1320,9 +1301,8 @@ class CdcEngine:
         # and force a second full sort)
         phys_cols = [PART_COL] + payload_cols + ["_lsn", "_op", "_salt"]
         to_write, pobs = _stats_columns(
-            merged.select(*phys_cols), checksum_cols, rowhash_mode,
-            cfg.partstats_mode, plan.touched if plan.observe_stats else None,
-            f"pstats-{batch_id}",
+            merged.select(*phys_cols), checksum_cols, cfg.partstats_mode,
+            plan.touched if plan.observe_stats else None, f"pstats-{batch_id}",
         )
         return to_write, obs, pobs
 
@@ -1334,7 +1314,6 @@ class CdcEngine:
         old_entries: dict,
         evolved: StructType,
         checksum_cols: list[str],
-        rowhash_mode: str,
         observe: bool,
         batch_id: int,
     ) -> tuple[set[int], Observation | None]:
@@ -1386,7 +1365,7 @@ class CdcEngine:
                 self._scan(phys, old_files(surv_parts)).join(
                     won_keys(surv_parts), keys, "left_anti"
                 ),
-                checksum_cols, rowhash_mode, self.config.partstats_mode,
+                checksum_cols, self.config.partstats_mode,
                 surv_parts if observe else None, f"pstats2-{batch_id}",
             )
             written = self.table.write_partition_files(
@@ -1645,13 +1624,12 @@ class CdcEngine:
         and commits a snapshot with ``delta_files=[]``. After compacting
         every dirty partition, the table digest is defined again and EQUALS
         the digest a COW apply of the same log produces (same winning rows,
-        same canonical checksum — asserted in tests/test_mor.py). Clean
+        same row-hash checksum — asserted in tests/test_mor.py). Clean
         partitions are carried forward metadata-only, so compaction cost is
         O(dirty partitions), schedulable per-partition on a cluster."""
         snap = self.table.snapshot()
         logical = self.table.logical_schema(snap)
-        checksum_cols = snap.get("checksum_columns") or [f.name for f in logical.fields]
-        rowhash_mode = snap.get("rowhash_mode") or "canonical"
+        checksum_cols = self._checksum_columns(snap, logical)
         dirty = [
             e
             for e in snap["manifest"]
@@ -1668,7 +1646,7 @@ class CdcEngine:
         # compaction keeps the read-back tier: no observation
         resolved, _ = _stats_columns(
             self.table.read(partitions=parts, with_lineage=True),
-            checksum_cols, rowhash_mode, self.config.partstats_mode,
+            checksum_cols, self.config.partstats_mode,
         )
         label = f"c{snap['snapshot_id']:05d}"
         files = self.table.write_partition_files(
@@ -1677,11 +1655,10 @@ class CdcEngine:
         part_rows = _written_partition_stats(
             self.spark, self.table.root, files, logical, checksum_cols,
             self.config.partstats_mode, PARTSTATS_DRIVER_BYTES_LIMIT,
-            rowhash_mode,
         )
         # compacted entries are clean + freshly checksummed, so they are
         # append-eligible for subsequent COW batches
-        ck_id = _checksum_cols_id(checksum_cols, rowhash_mode, logical)
+        ck_id = _checksum_cols_id(checksum_cols, logical)
         replaced = {
             int(r[PART_COL]): {
                 **_manifest_entry(r, files.get(int(r[PART_COL]), []), ck_id),
@@ -1770,13 +1747,14 @@ class CdcEngine:
         incrementally-maintained table (graft of the v2 validator checklist,
         docs/report-schema-v2.md:352-368). Returns a report dict; ``ok`` is
         True iff content + digests match exactly."""
+        live_snap = self.table.snapshot()
+        logical = self.table.logical_schema(live_snap)
+        live_ck = self._checksum_columns(live_snap, logical)
         fresh = CdcEngine.init(
             self.spark,
             os.path.join(scratch_root, "table"),
             os.path.join(scratch_root, "checkpoint"),
-            schema=StructType(
-                [f for f in self.table.logical_schema().fields]
-            ),
+            schema=StructType(list(logical.fields)),
             config=self.config,
             dedup_window_batches=self.checkpoint.window,
         )
@@ -1785,16 +1763,7 @@ class CdcEngine:
         # Copy the live set over so both digests hash the same column set —
         # otherwise replay_verify reports ok=False after any schema evolution
         # even when content is identical.
-        live_snap = self.table.snapshot()
-        fsnap = fresh.table.snapshot()
-        live_ck = live_snap.get("checksum_columns")
-        if live_ck is not None:
-            fsnap["checksum_columns"] = list(live_ck)
-        # the hash definition must match too, or content-identical tables
-        # report digest mismatch — also for a live table without frozen
-        # checksum_columns (absent field = canonical, so copy the absence)
-        fsnap["rowhash_mode"] = live_snap.get("rowhash_mode") or "canonical"
-        fresh.table._write_snapshot(fsnap)
+        fresh.table.set_checksum_columns(live_ck)
         fresh.run(log_dir)
         a, b = self.read(), fresh.read()
         cols = sorted(set(a.columns) & set(b.columns))

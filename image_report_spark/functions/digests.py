@@ -6,6 +6,11 @@ content fingerprints, combined order-independently per partition, then
 folded into one table digest used for replay-equality verification
 (BASELINE.json:6 — "asserting final-table equality").
 
+One per-row hash definition: :func:`row_digest`, ``xxhash64`` over the
+native typed columns. The string-canonicalized form
+(:func:`canonical_cols`) survives only inside the golden sha2 digest and
+as :func:`typed_cols`' per-column fallback for types outside its fast set.
+
 All JVM-side (``xxhash64`` / ``sha2`` / ``bit_xor`` built-ins); no Python
 in the hot path.
 """
@@ -41,18 +46,13 @@ def canonical_cols(df: DataFrame, cols: list[str]) -> list[Column]:
     return out
 
 
-def row_digest(df: DataFrame, cols: list[str]) -> Column:
-    """Fast 64-bit per-row content hash (JVM xxhash64 over canonical form)."""
-    return F.xxhash64(F.concat_ws(SEP, *canonical_cols(df, cols)))
-
-
-#: typed NULL sentinels for ``typed_row_digest``. They are representable
+#: typed NULL sentinels for :func:`row_digest`. They are representable
 #: values, so a row that really holds LONG_MIN / INT_MIN in a column hashes
 #: like a NULL there — an accepted collision for an internal checksum
 #: (LONG_MIN microseconds is the year −290308). Byte and short columns are
 #: widened to int first, so INT_MIN lies outside their range and never
 #: collides. The string sentinel is the control-character form the
-#: canonical digest uses.
+#: golden sha2 digest uses.
 _LONG_MIN = -(1 << 63)
 _INT_MIN = -(1 << 31)
 
@@ -66,9 +66,9 @@ def typed_cols(df: DataFrame, cols: list[str]) -> list[Column]:
     NULL still contributes to the hash at its position (a bare
     ``xxhash64(col)`` SKIPS null inputs, which would make row
     ``(NULL, "x")`` collide with ``("x", NULL)`` across adjacent columns).
-    Timestamps hash as microseconds-since-epoch (timezone-proof, same
-    normalization canonical mode uses). Types outside the fast set fall
-    back to the canonical string form for that column only.
+    Timestamps hash as microseconds-since-epoch (timezone-proof, the same
+    normalization :func:`canonical_cols` uses). Types outside the fast set
+    fall back to the canonical string form for that column only.
     """
     out = []
     for c in cols:
@@ -90,18 +90,16 @@ def typed_cols(df: DataFrame, cols: list[str]) -> list[Column]:
     return out
 
 
-def typed_row_digest(df: DataFrame, cols: list[str]) -> Column:
-    """Per-row content hash without the canonical string materialization.
+def row_digest(df: DataFrame, cols: list[str]) -> Column:
+    """Per-row 64-bit content hash: ``xxhash64`` over :func:`typed_cols`.
 
-    ``xxhash64`` over :func:`typed_cols` — same 64-bit contract as
-    :func:`row_digest` but different values: no per-row cast-strings, no
-    concat buffer (the canonical form allocates ~200 B of garbage per row,
-    measured at 0.25–0.3 s per 2 M rows plus GC amplification across 32
-    concurrent merge tasks — BENCH/rowhash_probe.py). Used as the engine's
-    partition-checksum unit for every table ``CdcEngine.init`` creates
-    (the snapshot's ``rowhash_mode``); the canonical form remains for
-    pre-existing tables and for the golden sha2 digest, whose values are
-    externally comparable.
+    The engine's one partition-checksum unit; ``IceliteTable.create``
+    names it ``"typed"`` in every new table's first snapshot. No per-row
+    cast-strings and no concat buffer — the string-canonicalized form it
+    replaced allocated ~200 B of garbage per row, measured at 0.25–0.3 s
+    per 2 M rows plus GC amplification across 32 concurrent merge tasks.
+    Its values are an internal integrity contract; the externally
+    comparable digest is the golden :func:`row_digest_sha2`.
     """
     return F.xxhash64(*typed_cols(df, cols))
 

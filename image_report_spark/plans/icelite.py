@@ -119,6 +119,10 @@ class IceliteTable:
             # manifest format version (graft of the v2 16-bit-ceiling
             # escape hatch, reference docs/report-schema-v2.md:96-105)
             "format_version": 1,
+            # the per-row checksum hash definition (functions/digests.py:
+            # row_digest), fixed for the table's lifetime; the engine
+            # refuses a snapshot that names any other
+            "rowhash_mode": "typed",
             "snapshot_id": 0,
             "parent_snapshot_id": None,
             "batch_id": None,
@@ -469,15 +473,6 @@ class IceliteTable:
         evolution because evolved columns never enter the rolling digest."""
         snap = self.snapshot()
         snap["checksum_columns"] = list(cols)
-        self._write_snapshot(snap)
-
-    def set_rowhash_mode(self, mode: str) -> None:
-        """Freeze the per-row checksum hash definition (see
-        ``CdcEngine.init``, which freezes "typed" into new tables).
-        Snapshots without the field read as "canonical" — the definition
-        that produced their manifests."""
-        snap = self.snapshot()
-        snap["rowhash_mode"] = mode
         self._write_snapshot(snap)
 
     # -------------------------------------------------------------- maintenance

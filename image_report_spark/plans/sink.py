@@ -96,6 +96,10 @@ class IcebergSink:
     * ``expire_snapshots``    → ``CALL catalog.system.expire_snapshots``.
     * ``set_checksum_columns``→ a table property
       (``ALTER TABLE ... SET TBLPROPERTIES``).
+    * the row-hash definition (``"typed"``, which ``IceliteTable.create``
+      writes into snapshot 0) → a table property set by ``CREATE TABLE
+      ... TBLPROPERTIES``, like the checksum columns; ``snapshot`` must
+      surface it, because the engine refuses a table without it.
     * merge-on-read mode (``EngineConfig.write_mode='mor'``) → Iceberg v2
       row-level deletes: delta files map onto equality-delete + data file
       pairs (``write.merge.mode=merge-on-read``), ``CdcEngine.compact()``

@@ -65,9 +65,8 @@ def _ins(lsn, conv, turn, text, ts_off_s=0, **extra) -> dict:
     )
 
 
-def _mk(spark, root, name: str, fastpath: bool, schema=TRANSCRIPT_SCHEMA,
-        rowhash_mode: str = "typed"):
-    eng = CdcEngine.init(
+def _mk(spark, root, name: str, fastpath: bool, schema=TRANSCRIPT_SCHEMA):
+    return CdcEngine.init(
         spark,
         str(root / f"tbl-{name}"),
         str(root / f"cp-{name}"),
@@ -76,9 +75,6 @@ def _mk(spark, root, name: str, fastpath: bool, schema=TRANSCRIPT_SCHEMA,
             num_buckets=8, shuffle_partitions=8, cow_append_fastpath=fastpath,
         ),
     )
-    if rowhash_mode != "typed":
-        eng.table.set_rowhash_mode(rowhash_mode)
-    return eng
 
 
 def _content(eng) -> pd.DataFrame:
@@ -284,16 +280,12 @@ def test_ck_id_guard_on_checksum_column_set_change(spark, tmp_path):
     _assert_equiv(on, off)
 
 
-@pytest.mark.parametrize("rowhash_mode", ["typed", "canonical"])
 @pytest.mark.parametrize("promotion", ["int_bigint", "float_double"])
-def test_type_promotion_then_append_matches_rewrite(
-    spark, tmp_path, promotion, rowhash_mode
-):
+def test_type_promotion_then_append_matches_rewrite(spark, tmp_path, promotion):
     """A type promotion of a checksum column changes every row hash of
-    that column (and, for float→double, its canonical string), so an
-    entry hashed under the narrow type must not be xor-combined with rows
-    hashed under the wide one: the promoted batch rewrites, and the batch
-    after it appends again."""
+    that column, so an entry hashed under the narrow type must not be
+    xor-combined with rows hashed under the wide one: the promoted batch
+    rewrites, and the batch after it appends again."""
     log = str(tmp_path / "log")
     if promotion == "int_bigint":
         col, field, narrow, wide = "n", IntegerType(), pa.int32(), pa.int64()
@@ -309,8 +301,8 @@ def test_type_promotion_then_append_matches_rewrite(
                   **{col: i if col == "n" else i + 0.1}) for i in range(16)],
             **{col: typ},
         )
-    on = _mk(spark, tmp_path, "on", True, schema, rowhash_mode=rowhash_mode)
-    off = _mk(spark, tmp_path, "off", False, schema, rowhash_mode=rowhash_mode)
+    on = _mk(spark, tmp_path, "on", True, schema)
+    off = _mk(spark, tmp_path, "off", False, schema)
     r_on = on.run(log)
     r_off = off.run(log)
     for a, b in zip(r_on, r_off):

@@ -30,9 +30,7 @@ import re
 from contextlib import redirect_stdout
 
 import pandas as pd
-import pytest
 
-import image_report_spark.engine as engine_mod
 from image_report_spark.config import EngineConfig
 from image_report_spark.engine import CdcEngine
 from image_report_spark.fixtures import ChangeLogGenerator
@@ -235,36 +233,6 @@ def test_mor_classification_shuffles_above_gate(spark, tmp_path):
         assert "BroadcastHashJoin" in jb._jdf.queryExecution().executedPlan().toString()
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-
-
-def test_mor_shuffle_regime_equals_cow(spark, tmp_path, monkeypatch):
-    """End-to-end with BROADCAST_KEY_LIMIT=0 (every MOR batch takes the
-    shuffled classification path): ledger and final table still EXACTLY
-    match copy-on-write, and compaction restores the COW digest."""
-    gen = ChangeLogGenerator(n_convs=40, max_turns=5, n_batches=3, seed=31)
-    log = str(tmp_path / "log")
-    gen.write_log(log)
-    mor = _mk(spark, tmp_path)
-    cow = _mk(spark, tmp_path, mode="cow")
-    with monkeypatch.context() as m:
-        m.setattr(engine_mod, "BROADCAST_KEY_LIMIT", 0)
-        mrpts = mor.run(log)
-    crpts = cow.run(log)
-    for m, c in zip(mrpts, crpts):
-        for f in ("applied", "deduped", "superseded", "inserts", "updates",
-                  "deletes", "rows_after"):
-            assert getattr(m, f) == getattr(c, f), f"batch {m.batch_id} {f}"
-    got = (
-        mor.read().toPandas().sort_values(["conv_id", "turn_idx"], kind="stable")
-        .reset_index(drop=True)
-    )
-    want = (
-        cow.read().toPandas().sort_values(["conv_id", "turn_idx"], kind="stable")
-        .reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(got, want[got.columns])
-    out = mor.compact()
-    assert out["table_digest"] == cow.current_table_digest()
 
 
 def test_mor_schema_evolution_mid_stream(spark, tmp_path):

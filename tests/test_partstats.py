@@ -278,7 +278,6 @@ def test_driver_tier_matches_spark_readback_with_null_keys(
     }
     via_job = engine_mod._written_partition_stats(
         spark, eng.table.root, files, logical, cols, "stored", 0,
-        snap.get("rowhash_mode") or "canonical",
     )
     via_driver = engine_mod._driver_partition_stats(eng.table.root, files)
     key = lambda r: int(r["_p"])

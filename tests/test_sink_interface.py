@@ -43,7 +43,8 @@ def test_iceberg_stub_covers_the_protocol_and_refuses_cleanly(spark):
 
 def _engine_sink_calls() -> list[tuple[str, int, list[str], int]]:
     """(method, positional count, keywords, line) of every
-    ``self.table.<method>(...)`` call in engine.py."""
+    ``<name>.table.<method>(...)`` call in engine.py — ``self.table`` and
+    any other engine's sink alike (``eng.table``, ``fresh.table``)."""
     tree = ast.parse(Path(engine_mod.__file__).read_text())
     calls = []
     for node in ast.walk(tree):
@@ -54,7 +55,6 @@ def _engine_sink_calls() -> list[tuple[str, int, list[str], int]]:
             and isinstance(f.value, ast.Attribute)
             and f.value.attr == "table"
             and isinstance(f.value.value, ast.Name)
-            and f.value.value.id == "self"
         ):
             calls.append(
                 (f.attr, len(node.args), [k.arg for k in node.keywords], node.lineno)
@@ -99,6 +99,35 @@ def test_engine_runs_through_injected_sink(spark, tmp_path):
     rpt = eng.apply_batch(changes, 0)
     assert rpt.applied == 1 and rpt.rows_after == 1
     assert eng.read().count() == 1
+
+
+def test_injected_sink_gets_the_typed_hash(spark, tmp_path):
+    """A table created by its backend and injected, with no engine-side
+    setup, hashes with the one typed row hash: its first snapshot already
+    names it, every commit carries it, and every manifest entry's
+    checksum id is tagged with it."""
+    from image_report_spark.engine import TRANSCRIPT_SCHEMA
+
+    root = str(tmp_path / "tbl")
+    sink = IceliteTable.create(spark, root, TRANSCRIPT_SCHEMA, num_buckets=4)
+    assert sink.snapshot(0)["rowhash_mode"] == "typed"
+    eng = CdcEngine.init(
+        spark, root, str(tmp_path / "cp"),
+        config=EngineConfig(num_buckets=4), table=sink,
+    )
+    changes = spark.createDataFrame(
+        [(i, "I", f"c{i}", 0, "user", f"t{i}", None, "2024-01-01 00:00:00")
+         for i in range(1, 9)],
+        "lsn long, op string, conv_id string, turn_idx int, role string, "
+        "text string, tool string, ts string",
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    assert eng.apply_batch(changes, 0).applied == 8
+    sids = sink.snapshots()
+    assert len(sids) >= 2 and sids[0] == 0
+    for sid in sids:
+        assert sink.snapshot(sid)["rowhash_mode"] == "typed", sid
+    manifest = sink.snapshot()["manifest"]
+    assert manifest and all(e["ck_id"].endswith(":typed") for e in manifest)
 
 
 def test_injected_sink_must_be_precreated(spark, tmp_path):
