@@ -1,17 +1,7 @@
 """CLI entry points (graft of the reference's argparse surface,
 utils.py:91-207, with validation-by-SystemExit and derived defaults).
 
-Subcommands (SURVEY.md §3.4):
-
-* ``init``            — create an empty Icelite transcript table
-* ``apply``           — tail a change-log dir and merge unapplied batches
-* ``replay-verify``   — rebuild from LSN 0 and diff vs the live table
-* ``sql``             — query the table (view ``t``), time-travel via --snapshot
-* ``history``         — snapshot lineage + per-batch ledgers
-* ``changes``         — incremental change feed between two snapshots
-* ``expire``          — drop old snapshots + unreferenced data files
-* ``stream``          — Structured-Streaming WAL tail (availableNow or continuous)
-* ``gen``             — synthesize a deterministic change log (fixtures)
+Subcommands (SURVEY.md §3.4): ``--help`` lists each with what it does.
 
 Run via ``spark-submit --py-files engine.zip -m`` or plain ``python -m
 image_report_spark.cli`` (local mode). The module is pure ``--py-files``
@@ -23,6 +13,7 @@ from __future__ import annotations
 import argparse
 import json
 import sys
+import tempfile
 
 from pyspark.sql import SparkSession
 
@@ -60,12 +51,12 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     p.add_argument("--shuffle-partitions", type=int, default=32)
     sub = p.add_subparsers(dest="cmd", required=True)
 
-    sp = sub.add_parser("init")
+    sp = sub.add_parser("init", help="create an empty Icelite transcript table")
     sp.add_argument("--table", required=True)
     sp.add_argument("--checkpoint", required=True)
     sp.add_argument("--buckets", type=int, default=32)
 
-    sp = sub.add_parser("apply")
+    sp = sub.add_parser("apply", help="tail a change-log dir and merge unapplied batches")
     sp.add_argument("--table", required=True)
     sp.add_argument("--log", required=True)
     sp.add_argument("--checkpoint", required=True)
@@ -86,34 +77,31 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
                          "in the same apply once its delta bytes exceed "
                          "this fraction of its base bytes (default: manual "
                          "compaction only)")
-    sp.add_argument("--partstats-mode", choices=["stored", "reverify"],
-                    default="stored",
-                    help="post-write partition stats: 'stored' aggregates "
-                         "the pipeline-computed row hash from a narrow "
-                         "4-column scan; 'reverify' re-hashes the on-disk "
-                         "payload bytes (bit-level write integrity check)")
     sp.add_argument("--no-append-fastpath", action="store_true",
                     help="disable the COW append fast-path (insert-only "
                          "partitions with provably disjoint keys append a "
                          "new file instead of rewriting the partition)")
 
-    sp = sub.add_parser("compact")
+    sp = sub.add_parser("compact", help="fold merge-on-read delta files into base files")
     sp.add_argument("--table", required=True)
     sp.add_argument("--checkpoint", required=True)
     sp.add_argument("--partitions", type=int, nargs="*", default=None,
                     help="compact only these bucket ids (default: all dirty)")
 
-    sp = sub.add_parser("replay-verify")
+    sp = sub.add_parser("replay-verify", help="rebuild from LSN 0 and diff vs the live table")
     sp.add_argument("--table", required=True)
     sp.add_argument("--log", required=True)
     sp.add_argument("--checkpoint", required=True)
     sp.add_argument("--scratch", required=True)
 
-    sp = sub.add_parser("expire")
+    sp = sub.add_parser("verify", help="re-hash sealed partitions' files vs the manifest")
+    sp.add_argument("--table", required=True)
+
+    sp = sub.add_parser("expire", help="drop old snapshots + unreferenced data files")
     sp.add_argument("--table", required=True)
     sp.add_argument("--keep-last", type=int, default=1)
 
-    sp = sub.add_parser("stream")
+    sp = sub.add_parser("stream", help="Structured-Streaming WAL tail (availableNow or continuous)")
     sp.add_argument("--table", required=True)
     sp.add_argument("--log", required=True)
     sp.add_argument("--checkpoint", required=True)
@@ -122,23 +110,23 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     sp.add_argument("--continuous", action="store_true",
                     help="keep tailing (default: drain backlog and stop)")
 
-    sp = sub.add_parser("sql")
+    sp = sub.add_parser("sql", help="query the table (view `t`), time-travel via --snapshot")
     sp.add_argument("--table", required=True)
     sp.add_argument("--snapshot", type=int, default=None,
                     help="time-travel: query this snapshot id")
     sp.add_argument("--limit", type=int, default=100)
     sp.add_argument("query", help="SQL over the table registered as view `t`")
 
-    sp = sub.add_parser("history")
+    sp = sub.add_parser("history", help="snapshot lineage + per-batch ledgers")
     sp.add_argument("--table", required=True)
 
-    sp = sub.add_parser("changes")
+    sp = sub.add_parser("changes", help="incremental change feed between two snapshots")
     sp.add_argument("--table", required=True)
     sp.add_argument("--from-snapshot", type=int, required=True)
     sp.add_argument("--to-snapshot", type=int, default=None)
     sp.add_argument("--limit", type=int, default=100)
 
-    sp = sub.add_parser("gen")
+    sp = sub.add_parser("gen", help="synthesize a deterministic change log (fixtures)")
     sp.add_argument("--out", required=True)
     sp.add_argument("--seed", type=int, default=0)
     sp.add_argument("--convs", type=int, default=200)
@@ -200,7 +188,6 @@ def main(argv: list[str] | None = None) -> int:
             write_mode=args.write_mode,
             cow_append_fastpath=not args.no_append_fastpath,
             mor_compact_delta_ratio=args.compact_delta_ratio,
-            partstats_mode=args.partstats_mode,
         )
         eng = CdcEngine.init(spark, args.table, args.checkpoint, config=cfg,
                              dedup_window_batches=args.dedup_window)
@@ -266,6 +253,12 @@ def main(argv: list[str] | None = None) -> int:
     if args.cmd == "replay-verify":
         eng = CdcEngine(spark, args.table, args.checkpoint)
         report = eng.replay_verify(args.log, args.scratch)
+        print(json.dumps(report))
+        return 0 if report["ok"] else 1
+
+    if args.cmd == "verify":
+        with tempfile.TemporaryDirectory() as cp:  # verify reads no checkpoint
+            report = CdcEngine(spark, args.table, cp).verify()
         print(json.dumps(report))
         return 0 if report["ok"] else 1
 

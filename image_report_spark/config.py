@@ -184,18 +184,6 @@ class EngineConfig:
     #: incremental ones; set ~0.2–0.5 for continuously-tailed tables.
     mor_compact_delta_ratio: float | None = None
 
-    #: how the post-write per-partition lineage stats (counts, last LSN,
-    #: order-independent checksum) are computed. "stored" (default): the
-    #: per-row checksum hash is computed INSIDE the merge pipeline and
-    #: persisted in the written files, so the stats read-back is a narrow
-    #: scan of four fixed-width columns — at 100 TB the write path does
-    #: not re-read every payload byte it just wrote. "reverify": recompute
-    #: the hash from the on-disk payload bytes — a bit-level end-to-end
-    #: write integrity check for low-trust storage (the pre-round-5
-    #: behavior; 15-25% of apply wall at sf0.1). Checksums are identical
-    #: in both modes (tests/test_partstats.py).
-    partstats_mode: str = "stored"
-
     selected_metrics: set[str] = field(init=False, repr=False)
 
     def __post_init__(self) -> None:
@@ -218,10 +206,6 @@ class EngineConfig:
         if self.update_missing not in ("upsert", "quarantine"):
             raise ValueError(
                 f"update_missing must be upsert|quarantine, got {self.update_missing!r}"
-            )
-        if self.partstats_mode not in ("stored", "reverify"):
-            raise ValueError(
-                f"partstats_mode must be stored|reverify, got {self.partstats_mode!r}"
             )
         if self.num_buckets < 1:
             raise ValueError("num_buckets must be >= 1")

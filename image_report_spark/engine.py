@@ -74,9 +74,9 @@ TRANSCRIPT_SCHEMA = StructType(
 )
 
 
-#: narrow read-back schema for ``partstats_mode="stored"`` — the stats
-#: aggregation needs only these four fixed-width columns; payload bytes
-#: stay on disk (parquet schema projection skips their column chunks)
+#: narrow schema of the partition-stats read-back tiers — the stats
+#: aggregation needs only these few columns; payload bytes stay on disk
+#: (parquet schema projection skips their column chunks)
 _PARTSTATS_SCHEMA = StructType(
     [
         StructField(PART_COL, IntegerType(), False),
@@ -88,7 +88,7 @@ _PARTSTATS_SCHEMA = StructType(
 )
 
 
-#: partition-stats tier 1 gate: when a "stored"-mode batch touches at most
+#: partition-stats tier 1 gate: when a batch touches at most
 #: this many partitions, the per-partition stats ride the WRITE JOB ITSELF
 #: as conditional ``observe()`` aggregates (6 per touched partition) —
 #: zero extra Spark job, zero read-back bytes, and no persisted ``_h``.
@@ -102,7 +102,7 @@ _PARTSTATS_SCHEMA = StructType(
 #: boundary A/B is in BENCH/partstats_ab.jsonl (BENCH/BASELINE.md).
 PARTSTATS_OBSERVE_LIMIT = 64
 
-#: "stored"-mode read-back size gate: when a batch's freshly written data
+#: read-back size gate: when a batch's freshly written data
 #: files total at most this many bytes, the narrow stats read-back runs
 #: DRIVER-side with arrow (a few MB of fixed-width column chunks — the same
 #: magnitude of driver I/O as the per-commit file renames and manifest
@@ -233,26 +233,16 @@ def _written_partition_stats(
     spark: SparkSession,
     root: str,
     files: dict[int, list[str]],
-    logical: StructType,
-    checksum_cols: list[str],
-    mode: str,
     driver_bytes_limit: int = 0,
 ) -> list:
     """Per-partition lineage (row counts, live rows, last applied LSN,
     order-independent checksum) aggregated from freshly WRITTEN files.
 
-    ``mode="stored"`` (default): the per-row hash ``_h`` was already
-    computed INSIDE the merge pipeline (JVM-side, riding the single
-    write execution) and persisted in the files, so the read-back is a
-    narrow scan of four fixed-width columns — at 100 TB the write path
-    no longer re-reads every payload byte it just wrote (measured at
-    sf0.1 / 2 M x 8: the payload re-read was 15-25% of apply wall,
-    BENCH/BASELINE.md round 5). ``mode="reverify"``: recompute the hash
-    from the on-disk payload bytes — a bit-level end-to-end write
-    integrity check, the right paranoia for low-trust storage. Both
-    modes produce identical checksums (pinned in tests/test_partstats.py).
-    """
-    if mode == "stored" and driver_bytes_limit and files:
+    The per-row hash ``_h`` was computed INSIDE the merge pipeline and
+    persisted in the files, so the read-back is a narrow scan that never
+    re-reads the payload bytes just written (at sf0.1 / 2 M x 8 such a
+    re-read was 15-25% of apply wall, BENCH/BASELINE.md round 5)."""
+    if driver_bytes_limit and files:
         total = sum(
             os.path.getsize(os.path.join(root, f))
             for fl in files.values()
@@ -261,15 +251,15 @@ def _written_partition_stats(
         if total <= driver_bytes_limit:
             return _driver_partition_stats(root, files)
     written_paths = [os.path.join(root, f) for fl in files.values() for f in fl]
-    if mode == "reverify":
-        wdf = spark.read.schema(physical_schema(logical)).parquet(*written_paths)
-        h = _live_row_hash(wdf, checksum_cols)
-    else:
-        wdf = spark.read.schema(_PARTSTATS_SCHEMA).parquet(*written_paths)
-        h = F.col("_h")
+    wdf = spark.read.schema(_PARTSTATS_SCHEMA).parquet(*written_paths)
+    return _partition_stats(wdf.withColumn("h", F.col("_h")))
+
+
+def _partition_stats(df: DataFrame) -> list:
+    """Per-partition lineage rows of table rows whose live-row hash is the
+    column ``h`` (NULL for tombstones), in one aggregation job."""
     return (
-        wdf.withColumn("h", h)
-        .groupBy(PART_COL)
+        df.groupBy(PART_COL)
         .agg(
             F.count(F.lit(1)).alias("row_count"),
             F.sum(F.when(F.col("_op") != "D", 1).otherwise(0)).alias("live_rows"),
@@ -595,7 +585,7 @@ def plan_batch(bucket_rows: list, old_entries: dict, cfg: EngineConfig, ck_id: s
             ts_cand.append(p)
     if sum(valid[p] for p in ts_cand) <= BROADCAST_KEY_LIMIT:
         route.update(dict.fromkeys(ts_cand, TWO_STREAM))
-    observe = cfg.partstats_mode == "stored" and 0 < len(touched) <= PARTSTATS_OBSERVE_LIMIT
+    observe = 0 < len(touched) <= PARTSTATS_OBSERVE_LIMIT
     return BatchPlan(touched, hot, valid, route, observe)
 
 
@@ -819,20 +809,16 @@ def _observed_partition_stats(observations: list, parts: list[int]) -> list[dict
 def _stats_columns(
     df: DataFrame,
     checksum_cols: list[str],
-    partstats_mode: str,
     observe: list[int] | None = None,
     name: str = "",
 ) -> tuple[DataFrame, Observation | None]:
-    """Ready a frame that is about to be written for its partition stats.
-    Under ``"reverify"`` nothing is added: the stats re-hash the on-disk
-    payloads. Otherwise the per-row checksum hash ``_h`` is computed in
-    the pipeline, and either rides an ``observe()`` over the ``observe``
-    partitions and is dropped before the write, or, without ``observe``,
-    is persisted for the narrow read-back tiers. Dropping it matters:
-    ``_h`` is 8 incompressible bytes per row that only a read-back would
-    consume. Returns the frame to write and the observation, if any."""
-    if partstats_mode == "reverify":
-        return df, None
+    """Ready a frame that is about to be written for its partition stats:
+    the per-row checksum hash ``_h`` is computed in the pipeline, and
+    either rides an ``observe()`` over the ``observe`` partitions and is
+    dropped before the write, or, without ``observe``, is persisted for
+    the narrow read-back tiers. Dropping it matters: ``_h`` is 8
+    incompressible bytes per row that only a read-back would consume.
+    Returns the frame to write and the observation, if any."""
     df = df.withColumn("_h", _live_row_hash(df, checksum_cols))
     if not observe:
         return df, None
@@ -930,8 +916,8 @@ class CdcEngine:
             # digests stay comparable across schema evolution (evolved
             # columns are verified by full-content replay diff, not by the
             # rolling digest); the hash definition itself is fixed by
-            # IceliteTable.create, so every tier — stored/observe/driver
-            # read-back, reverify, MOR compact, replay verify — hashes
+            # IceliteTable.create, so every tier — observe, driver and
+            # Spark read-back, MOR compact, verify, replay verify — hashes
             # identically for the table's whole lifetime
             eng.table.set_checksum_columns([f.name for f in schema.fields])
         return eng
@@ -1177,7 +1163,6 @@ class CdcEngine:
         per-partition stats rows, the written files, the partitions whose
         old files carry forward (both append tiers), the merge
         observation's values, and the in-flight seen-LSN write."""
-        cfg = self.config
         batch_id = rpt.batch_id
         ts_parts = plan.parts(TWO_STREAM)
         to_write, obs, pobs = self._cow_merge(
@@ -1216,15 +1201,13 @@ class CdcEngine:
 
         # per-partition lineage: already collected by the write jobs'
         # observations (tier 1), else a narrow scan of the written files
-        # ("stored" tier 2) or a full payload re-hash ("reverify")
         if plan.observe_stats:
             part_rows = _observed_partition_stats(
                 observations, [p for p in plan.touched if p in files]
             )
         else:
             part_rows = _written_partition_stats(
-                self.spark, self.table.root, files, evolved, checksum_cols,
-                cfg.partstats_mode, PARTSTATS_DRIVER_BYTES_LIMIT,
+                self.spark, self.table.root, files, PARTSTATS_DRIVER_BYTES_LIMIT
             )
         rpt.tick("partstats")
         return part_rows, files, append_parts, stats, lsn_fut
@@ -1254,14 +1237,11 @@ class CdcEngine:
         either by a second observation riding it (``plan.observe_stats``)
         or from a narrow read-back of the written files, which persist the
         pipeline-computed per-row hash ``_h`` for it.
-        ``partstats_mode="reverify"`` instead re-hashes the on-disk
-        payload bytes as a bit-level integrity check.
 
         TWO_STREAM partitions contribute only NARROW incumbent rows; the
         pipeline writes their batch winners only, and the survivor pass
         (``_two_stream_survivors``) carries their incumbent payload.
         """
-        cfg = self.config
         ts_parts = plan.parts(TWO_STREAM)
         incumbent = self._read_physical(
             old_entries, plan.parts(FUSED), evolved
@@ -1301,7 +1281,7 @@ class CdcEngine:
         # and force a second full sort)
         phys_cols = [PART_COL] + payload_cols + ["_lsn", "_op", "_salt"]
         to_write, pobs = _stats_columns(
-            merged.select(*phys_cols), checksum_cols, cfg.partstats_mode,
+            merged.select(*phys_cols), checksum_cols,
             plan.touched if plan.observe_stats else None, f"pstats-{batch_id}",
         )
         return to_write, obs, pobs
@@ -1365,7 +1345,7 @@ class CdcEngine:
                 self._scan(phys, old_files(surv_parts)).join(
                     won_keys(surv_parts), keys, "left_anti"
                 ),
-                checksum_cols, self.config.partstats_mode,
+                checksum_cols,
                 surv_parts if observe else None, f"pstats2-{batch_id}",
             )
             written = self.table.write_partition_files(
@@ -1645,16 +1625,14 @@ class CdcEngine:
         parts = [e["partition"] for e in dirty]
         # compaction keeps the read-back tier: no observation
         resolved, _ = _stats_columns(
-            self.table.read(partitions=parts, with_lineage=True),
-            checksum_cols, self.config.partstats_mode,
+            self.table.read(partitions=parts, with_lineage=True), checksum_cols
         )
         label = f"c{snap['snapshot_id']:05d}"
         files = self.table.write_partition_files(
             resolved, batch_id=snap["snapshot_id"], dir_label=label
         )
         part_rows = _written_partition_stats(
-            self.spark, self.table.root, files, logical, checksum_cols,
-            self.config.partstats_mode, PARTSTATS_DRIVER_BYTES_LIMIT,
+            self.spark, self.table.root, files, PARTSTATS_DRIVER_BYTES_LIMIT
         )
         # compacted entries are clean + freshly checksummed, so they are
         # append-eligible for subsequent COW batches
@@ -1780,6 +1758,50 @@ class CdcEngine:
             "digest_replay": db,
         }
 
+    def verify(self) -> dict:
+        """Re-hash the files of every sealed partition of the current
+        snapshot with the table's row hash, in one aggregation query, and
+        compare each one's stats with its manifest entry (a partition its
+        files do not hold compares as empty). Deltas carry no checksum, so
+        this covers what the last copy-on-write write or ``compact()``
+        sealed; partitions with pending deltas, or whose checksum hashes
+        older columns or types (after a type promotion, until next
+        rewritten), are skipped."""
+        snap = self.table.snapshot()
+        logical = self.table.logical_schema(snap)
+        checksum_cols = self._checksum_columns(snap, logical)
+        ck_id = _checksum_cols_id(checksum_cols, logical)
+        checked, skipped, found = {}, [], {}
+        for e in snap["manifest"]:
+            if e.get("delta_files") or e.get("checksum") is None or e.get("ck_id") != ck_id:
+                reason = "pending_deltas" if e.get("delta_files") else "stale_ck_id"
+                skipped.append({"partition": e["partition"], "reason": reason})
+            else:
+                checked[e["partition"]] = e
+        files = [f for e in checked.values() for f in e["files"]]
+        if files:
+            df = self._scan(physical_schema(logical), files)
+            rows = _partition_stats(df.withColumn("h", _live_row_hash(df, checksum_cols)))
+            found = {int(r[PART_COL]): r.asDict() for r in rows}
+        empty = {"row_count": 0, "live_rows": 0, "checksum": "0" * 16, "last_applied_lsn": None}
+        mismatches = []
+        for p, e in checked.items():
+            got = found.get(p, empty)
+            # a zone map is compared where the entry records one (None =
+            # unknown, e.g. an append over a side without one)
+            for k in (*empty, "key_lo", "key_hi"):
+                if (k in empty or e.get(k) is not None) and e.get(k) != got.get(k):
+                    mismatches.append(
+                        {"partition": p, "field": k, "manifest": e.get(k), "files": got.get(k)}
+                    )
+        return {
+            "ok": not mismatches,
+            "snapshot_id": snap["snapshot_id"],
+            "checked": sorted(checked),
+            "skipped": skipped,
+            "mismatches": mismatches,
+        }
+
     # -------------------------------------------------------------- internals
     def _scan(self, schema: StructType, rel_paths: list[str]) -> DataFrame:
         """Parquet scan of table-relative data files through ``schema``."""
@@ -1845,9 +1867,9 @@ class CdcEngine:
             out = os.path.join(
                 self.table.root, "_quarantine", f"b{batch_id:05d}-missing-updates"
             )
-            missing.withColumn("_status", F.lit("failed:update_of_missing_key")).write.mode(
-                "overwrite"
-            ).parquet(out)
+            missing.withColumn("_status", F.lit("failed:update_of_missing_key")).withColumn(
+                "_batch_id", F.lit(batch_id)
+            ).write.mode("overwrite").parquet(out)
             events = events.join(
                 missing.select("lsn"), "lsn", "left_anti"
             )

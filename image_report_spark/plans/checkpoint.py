@@ -91,8 +91,8 @@ class Checkpoint:
     def write_seen_lsns(self, batch_id: int, seen_lsns: DataFrame) -> None:
         """Persist the batch's dedup-window LSN set (executor-side Parquet,
         never collected — the set scales with batch size). Independent of
-        the snapshot commit, so the engine overlaps it with the
-        partition-stats read-back on a driver I/O thread; the commit marker
+        the merge output, so the engine submits it on a driver I/O thread
+        just before the batch's write job and overlaps the two; the marker
         (``mark_committed``) is only written after BOTH complete, so crash
         semantics are unchanged: marker exists ⇒ dedup state is on disk."""
         rp = os.path.join(self.recent_dir, f"batch-{batch_id:05d}.parquet")

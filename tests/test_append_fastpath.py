@@ -155,6 +155,7 @@ def test_insert_only_batches_append_and_match_rewrite(spark, tmp_path):
         want = {k: getattr(b, k) for k in LEDGER_KEYS}
         assert got == want, f"batch {a.batch_id}: {got} != {want}"
     _assert_equiv(on, off)
+    assert on.verify()["ok"]
 
 
 def test_reinsert_collision_forces_rewrite(spark, tmp_path, monkeypatch):
@@ -292,15 +293,14 @@ def test_type_promotion_then_append_matches_rewrite(spark, tmp_path, promotion):
     else:
         col, field, narrow, wide = "score", FloatType(), pa.float32(), pa.float64()
     schema = StructType(list(TRANSCRIPT_SCHEMA.fields) + [StructField(col, field)])
-    for b, typ in enumerate((narrow, wide, wide)):
+    def rows(b: int, n: int = 16) -> list[dict]:
         # 0.1 is inexact in binary, so a widened float is not the double
         # a double column would have held
-        _write_batch(
-            log, b,
-            [_ins(100 * b + i, 16 * b + i, 0, f"t{b}-{i}", ts_off_s=60 * b,
-                  **{col: i if col == "n" else i + 0.1}) for i in range(16)],
-            **{col: typ},
-        )
+        return [_ins(100 * b + i, 16 * b + i, 0, f"t{b}-{i}", ts_off_s=60 * b,
+                     **{col: i if col == "n" else i + 0.1}) for i in range(n)]
+
+    for b, typ in enumerate((narrow, wide, wide)):
+        _write_batch(log, b, rows(b), **{col: typ})
     on = _mk(spark, tmp_path, "on", True, schema)
     off = _mk(spark, tmp_path, "off", False, schema)
     r_on = on.run(log)
@@ -310,6 +310,26 @@ def test_type_promotion_then_append_matches_rewrite(spark, tmp_path, promotion):
         assert a.table_digest == b.table_digest, a.batch_id
     assert r_on[2].partitions_appended > 0
     _assert_equiv(on, off)
+    assert on.verify()["ok"] and off.verify()["ok"]
+
+    # a promoted batch that touches ONE partition leaves every other one
+    # hashed under the narrow type: verify skips them, it does not flag them
+    partial_log = str(tmp_path / "partial-log")
+    _write_batch(partial_log, 0, rows(0), **{col: narrow})
+    _write_batch(partial_log, 1, rows(1, n=1), **{col: wide})
+    partial = _mk(spark, tmp_path, "partial", True, schema)
+    assert partial.run(partial_log)[1].partitions_touched == 1
+    snap = partial.table.snapshot()
+    ck_id = engine_mod._checksum_cols_id(
+        snap["checksum_columns"], partial.table.logical_schema(snap)
+    )
+    stale = [e["partition"] for e in snap["manifest"] if e["ck_id"] != ck_id]
+    assert len(stale) == len(snap["manifest"]) - 1 > 0
+    report = partial.verify()
+    assert report["ok"] and len(report["checked"]) == 1, report
+    assert report["skipped"] == [
+        {"partition": p, "reason": "stale_ck_id"} for p in stale
+    ], report
 
 
 @pytest.mark.parametrize("fault", ["mixed", "pure_inserts"])

@@ -131,13 +131,12 @@ def test_observe_flag_at_limit():
     limit = engine_mod.PARTSTATS_OBSERVE_LIMIT
     assert limit == 64
 
-    def observe(n_touched, **cfg):
+    def observe(n_touched):
         rows = [_row(p=p) for p in range(n_touched)]
-        return plan_batch(rows, {}, EngineConfig(**cfg), CK).observe_stats
+        return plan_batch(rows, {}, EngineConfig(), CK).observe_stats
 
     assert observe(64)
     assert not observe(65)
-    assert not observe(64, partstats_mode="reverify")
     assert not observe(0)
 
 

@@ -36,6 +36,12 @@ def test_bad_on_error_rejected():
                     "--on-error", "explode"])
 
 
+def test_partstats_mode_flag_is_gone():
+    with pytest.raises(SystemExit):
+        parse_args(["apply", "--table", "t", "--log", "l", "--checkpoint", "c",
+                    "--partstats-mode", "stored"])
+
+
 def test_missing_subcommand_rejected():
     with pytest.raises(SystemExit):
         parse_args([])
@@ -116,6 +122,35 @@ def test_sql_history_changes_cli(tmp_path, capsys):
                         "--from-snapshot", str(hist[-2]["snapshot_id"])]) == 0
     ch = [json.loads(l) for l in capsys.readouterr().out.splitlines()]
     assert ch and all("_lsn" in r and "_op" in r for r in ch)
+
+
+def test_verify_cli_exit_code_follows_report(spark, tmp_path, capsys):
+    """``cli verify`` prints verify's report and exits 0 on a fresh table,
+    1 once a sealed partition's file is corrupted."""
+    import json
+
+    from image_report_spark.cli import main
+    from image_report_spark.plans.icelite import IceliteTable
+    from tests.test_partstats import _corrupt
+
+    log, tbl = str(tmp_path / "log"), str(tmp_path / "t")
+    assert main(["gen", "--out", log, "--seed", "3", "--convs", "10",
+                 "--max-turns", "4", "--batches", "2"]) == 0
+    args = ["--master", "local[2]", "--shuffle-partitions", "4"]
+    assert main(args + ["apply", "--table", tbl, "--log", log,
+                        "--checkpoint", str(tmp_path / "cp"), "--buckets", "4"]) == 0
+    capsys.readouterr()
+    assert main(args + ["verify", "--table", tbl]) == 0
+    ok = json.loads(capsys.readouterr().out)
+    assert ok["ok"] and ok["checked"] and ok["mismatches"] == []
+
+    manifest = IceliteTable(spark, tbl).snapshot()["manifest"]
+    entry = next(e for e in manifest if e["live_rows"] > 0)
+    _corrupt(spark, os.path.join(tbl, entry["files"][0]), str(tmp_path / "bad"))
+    assert main(args + ["verify", "--table", tbl]) == 1
+    bad = json.loads(capsys.readouterr().out)
+    assert not bad["ok"]
+    assert {m["partition"] for m in bad["mismatches"]} == {entry["partition"]}
 
 
 def test_footer_schema_matches_spark_inference(spark, tmp_path):

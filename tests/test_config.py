@@ -71,7 +71,7 @@ def test_engine_config_validation():
 _SETTABLE = {
     "num_buckets", "shuffle_partitions", "on_error", "update_missing",
     "metrics", "grouped_resolve", "write_mode", "cow_append_fastpath",
-    "mor_compact_delta_ratio", "partstats_mode",
+    "mor_compact_delta_ratio",
 }
 
 

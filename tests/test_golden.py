@@ -132,7 +132,9 @@ def test_update_of_missing_key_quarantined_when_configured(spark, tmp_table):
     assert rpt.quarantined == 1
     assert rpt.conservation_ok()
     q = eng.quarantine_df()
-    assert q is not None and q.filter("_status = 'failed:update_of_missing_key'").count() == 1
+    assert q is not None
+    missing = q.filter("_status = 'failed:update_of_missing_key'").collect()
+    assert len(missing) == 1 and missing[0]["_batch_id"] == 0
 
 
 def test_delete_of_missing_key_is_tombstone_only(spark, tmp_table):

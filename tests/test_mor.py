@@ -126,6 +126,15 @@ def test_mor_compaction_restores_cow_digest(spark, tmp_path, gen):
     cow.run(log_dir)
     mor.run(log_dir)
     before = _sorted_read(mor)
+    # deltas carry no checksum: verify skips every dirty partition
+    dirty = sorted(
+        e["partition"] for e in mor.table.snapshot()["manifest"] if e.get("delta_files")
+    )
+    pending = mor.verify()
+    assert pending["ok"] and dirty
+    assert pending["skipped"] == [
+        {"partition": p, "reason": "pending_deltas"} for p in dirty
+    ], pending
     out = mor.compact()
     assert out["compacted_partitions"] > 0
     assert out["table_digest"] is not None
@@ -140,6 +149,9 @@ def test_mor_compaction_restores_cow_digest(spark, tmp_path, gen):
     again = mor.compact()
     assert again["compacted_partitions"] == 0
     assert again["table_digest"] == out["table_digest"]
+    sealed = mor.verify()
+    assert sealed["ok"] and sealed["skipped"] == [], sealed
+    assert sealed["checked"] == sorted(e["partition"] for e in snap["manifest"])
 
 
 def test_mor_auto_compaction_policy(spark, tmp_path):

@@ -75,6 +75,7 @@ def test_faulty_replay_matches_oracle(spark, tmp_path):
     assert totals["quarantined"] == led["quarantined"]
     assert totals["deduped"] == led["deduped"]
     assert reports[-1].rows_after == led["rows_after"]
+    assert eng.verify()["ok"]
 
 
 def test_jsonl_codec_matches_oracle(spark, tmp_path):

@@ -30,20 +30,15 @@ def _build(spark, tmp_path, name, **cfg):
     return eng
 
 
-def test_typed_mode_reverify_matches_stored(spark, tmp_path):
-    # reverify recomputes from disk with the same row hash — it must agree
-    # with the stored-tier checksums
-    a = _build(spark, tmp_path, "stored")
-    r = _build(spark, tmp_path, "reverify", partstats_mode="reverify")
-    la = {
-        e["partition"]: (e["row_count"], e["live_rows"], e["checksum"])
-        for e in a.table.snapshot()["manifest"]
-    }
-    lr = {
-        e["partition"]: (e["row_count"], e["live_rows"], e["checksum"])
-        for e in r.table.snapshot()["manifest"]
-    }
-    assert la == lr
+def test_verify_passes_on_typed_table(spark, tmp_path):
+    # verify re-hashes the files on disk with the same row hash — it must
+    # agree with every stored checksum
+    eng = _build(spark, tmp_path, "typed")
+    report = eng.verify()
+    assert report["ok"] and report["skipped"] == [], report
+    assert report["checked"] == sorted(
+        e["partition"] for e in eng.table.snapshot()["manifest"]
+    )
 
 
 def test_typed_digest_null_position_distinct(spark):
@@ -114,27 +109,19 @@ def _manifest(eng) -> dict:
 
 def test_typed_hash_smallint_tinyint_with_nulls(spark, tmp_path):
     """Typed mode hashes smallint/tinyint columns holding NULLs (their NULL
-    sentinel used to overflow under ANSI casts), and the stored checksums
-    agree with a reverify re-hash of the on-disk bytes."""
-    engines = {}
-    for mode in ("stored", "reverify"):
-        eng = CdcEngine.init(
-            spark,
-            str(tmp_path / mode / "tbl"),
-            str(tmp_path / mode / "cp"),
-            schema=_SMALL_SCHEMA,
-            config=EngineConfig(num_buckets=4, partstats_mode=mode),
-        )
-        reports = [eng.apply_batch(_small_int_batch(spark, b), b) for b in (0, 1)]
-        assert eng.table.snapshot()["rowhash_mode"] == "typed"
-        assert all(r.conservation_ok() for r in reports)
-        engines[mode] = (eng, reports)
-    (st, rs), (rv, rr) = engines["stored"], engines["reverify"]
-    keys = {"applied", "inserts", "updates", "deletes", "rows_after", "table_digest"}
-    assert [r.ledger(keys) for r in rs] == [r.ledger(keys) for r in rr]
-    assert rs[1].updates == 6 and rs[1].deletes == 3
-    assert st.current_table_digest() == rv.current_table_digest()
-    assert _manifest(st) == _manifest(rv)
+    sentinel used to overflow under ANSI casts), and verify's re-hash of
+    the on-disk bytes agrees with every stored checksum."""
+    eng = CdcEngine.init(
+        spark, str(tmp_path / "tbl"), str(tmp_path / "cp"),
+        schema=_SMALL_SCHEMA, config=EngineConfig(num_buckets=4),
+    )
+    reports = [eng.apply_batch(_small_int_batch(spark, b), b) for b in (0, 1)]
+    assert eng.table.snapshot()["rowhash_mode"] == "typed"
+    assert all(r.conservation_ok() for r in reports)
+    assert reports[1].updates == 6 and reports[1].deletes == 3
+    report = eng.verify()
+    assert report["ok"] and report["skipped"] == [], report
+    assert report["checked"] == sorted(_manifest(eng))
     # a NULL must hash differently from a real zero in both widths
     df = spark.createDataFrame(
         [(None, 0), (0, 0), (0, None)], "s smallint, b tinyint"

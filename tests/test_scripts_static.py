@@ -6,10 +6,14 @@ session. Two things rot silently when the package changes under them:
 
 * a ``from image_report_spark... import name`` whose name is gone;
 * a keyword passed to ``EngineConfig(...)`` that is no longer a field.
+
+The README's layout line for ``cli.py`` is checked the same way: it must
+name every subcommand the CLI registers.
 """
 
 from __future__ import annotations
 
+import argparse
 import ast
 import dataclasses
 import importlib
@@ -59,3 +63,27 @@ def test_script_matches_package(path):
                     if kw.arg is not None and kw.arg not in FIELDS:
                         problems.append(f"{node.lineno}: EngineConfig({kw.arg}=)")
     assert not problems, problems
+
+
+def test_readme_names_every_cli_subcommand(monkeypatch):
+    from image_report_spark import cli
+
+    parsers = []
+    real = argparse.ArgumentParser.parse_args
+
+    def spy(self, *a, **kw):
+        parsers.append(self)
+        return real(self, *a, **kw)
+
+    monkeypatch.setattr(argparse.ArgumentParser, "parse_args", spy)
+    cli.parse_args(["history", "--table", "t"])
+    (sub,) = [
+        a for a in parsers[0]._actions if isinstance(a, argparse._SubParsersAction)
+    ]
+    line = next(
+        ln for ln in (ROOT / "README.md").read_text().splitlines()
+        if ln.strip().startswith("cli.py")
+    )
+    named = {w.strip() for w in line.split(None, 1)[1].split("/")}
+    assert len(sub.choices) >= 11
+    assert set(sub.choices) <= named, set(sub.choices) - named

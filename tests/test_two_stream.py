@@ -122,6 +122,7 @@ def test_mixed_workload_matches_fused(spark, tmp_path, monkeypatch, observe_limi
     assert any(r.partitions_two_stream > 0 for r in reports_on)
     assert all(r.partitions_two_stream == 0 for r in reports_off)
     _assert_equiv(on, off, reports_on, reports_off)
+    assert on.verify()["ok"]
 
 
 @pytest.mark.usefixtures("any_ratio")
@@ -138,6 +139,7 @@ def test_schema_evolution_matches_fused(spark, tmp_path):
     reports_off = off.run(log)
     assert any(r.partitions_two_stream > 0 for r in reports_on)
     _assert_equiv(on, off, reports_on, reports_off)
+    assert on.verify()["ok"]
 
 
 def _write_batch(log_dir: str, batch_id: int, rows: list[dict]) -> None:
