@@ -13,7 +13,6 @@ from __future__ import annotations
 import argparse
 import json
 import sys
-import tempfile
 
 from pyspark.sql import SparkSession
 
@@ -84,7 +83,8 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
 
     sp = sub.add_parser("compact", help="fold merge-on-read delta files into base files")
     sp.add_argument("--table", required=True)
-    sp.add_argument("--checkpoint", required=True)
+    sp.add_argument("--checkpoint", default=None,
+                    help="accepted and unused: compaction reads no checkpoint state")
     sp.add_argument("--partitions", type=int, nargs="*", default=None,
                     help="compact only these bucket ids (default: all dirty)")
 
@@ -225,7 +225,7 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.cmd == "compact":
-        eng = CdcEngine(spark, args.table, args.checkpoint)
+        eng = CdcEngine(spark, args.table)
         print(json.dumps(eng.compact(partitions=args.partitions)))
         return 0
 
@@ -257,8 +257,7 @@ def main(argv: list[str] | None = None) -> int:
         return 0 if report["ok"] else 1
 
     if args.cmd == "verify":
-        with tempfile.TemporaryDirectory() as cp:  # verify reads no checkpoint
-            report = CdcEngine(spark, args.table, cp).verify()
+        report = CdcEngine(spark, args.table).verify()
         print(json.dumps(report))
         return 0 if report["ok"] else 1
 

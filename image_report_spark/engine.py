@@ -34,6 +34,7 @@ import time
 import zlib
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
@@ -643,6 +644,7 @@ def build_merge_ranking(
     incumbent: bool = False,
     inc_any: bool = False,
     unresolved: bool = False,
+    tasks: int | None = None,
 ) -> DataFrame:
     """The merge's ONE shuffle and ONE window sort, shared by COW and MOR.
 
@@ -669,6 +671,19 @@ def build_merge_ranking(
     older, superseded incumbent row. Both are full-frame ``first()``
     aggregates over the same order spec, so they too ride the one sort.
 
+    ``tasks``: the exchange's reduce-task count, which AQE does not
+    coalesce. ``CdcEngine._merge_tasks`` passes min(touched buckets, task
+    slots) when the merge has no hot bucket and its input is below task
+    slots × ``spark.sql.adaptive.coalescePartitions.minPartitionSize``,
+    the range where AQE would coalesce the exchange onto fewer tasks than
+    slots — at perfbench's ``backlog_upsert`` shape (7.5 k-event batches,
+    8 buckets, 4 slots) onto one task that ran the window, the
+    observations and all 8 file writes. With the count, that workload's
+    ``op_p50_ms`` fell 1680 → 1254 ms (10 of 10 pairs, together with the
+    dedup window's range pruning). Otherwise AQE sizes the exchange, and
+    parallelism comes from #buckets × salt: at 2 M-event batches an
+    explicit per-bucket placement lost to it (OPTIMIZATION_r06.md).
+
     Built as SQL text: one py4j round-trip for the whole window block;
     the single-Exchange plans are pinned in tests/test_plans.py and
     tests/test_mor_plans.py.
@@ -676,11 +691,10 @@ def build_merge_ranking(
     # repartition on _salt only when it's a real column: a lit(0) salt
     # constant-folds OUT of the window's required clustering but NOT out of
     # hashpartitioning, which would defeat the subset-satisfaction rule and
-    # buy a second Exchange. No explicit partition count: AQE sizes the
-    # exchange; parallelism comes from #buckets × salt.
-    u = rows.withColumn("_salt", _salt_expr(hot_buckets, n_salt)).repartition(
-        F.col(PART_COL), *([F.col("_salt")] if hot_buckets else [])
-    )
+    # buy a second Exchange
+    keys = [F.col(PART_COL), *([F.col("_salt")] if hot_buckets else [])]
+    u = rows.withColumn("_salt", _salt_expr(hot_buckets, n_salt))
+    u = u.repartition(tasks, *keys) if tasks else u.repartition(*keys)
     part = f"PARTITION BY {PART_COL}, _salt, conv_id, turn_idx"
     order = f"{part} ORDER BY ts DESC NULLS LAST, _lsn DESC NULLS LAST"
     if incumbent:
@@ -867,12 +881,33 @@ def _manifest_digest(entries: dict) -> str:
     return table_digest([(p, e["live_rows"], e["checksum"]) for p, e in entries.items()])
 
 
+def _local_bytes(uris: list[str]) -> int | None:
+    """On-disk bytes of the files a DataFrame reads (its ``inputFiles()``),
+    or None when one of them is not on the local file system."""
+    total = 0
+    for u in uris:
+        parsed = urlparse(u)
+        if parsed.scheme not in ("", "file"):
+            return None
+        total += os.path.getsize(unquote(parsed.path))
+    return total
+
+
+def _lsn_range(bucket_rows: list) -> tuple[int, int] | None:
+    """[min, max] LSN of a batch's valid events from the bucket pre-pass,
+    or None when it has none."""
+    rows = [r for r in bucket_rows if r["llo"] is not None]
+    if not rows:
+        return None
+    return min(int(r["llo"]) for r in rows), max(int(r["lhi"]) for r in rows)
+
+
 class CdcEngine:
     def __init__(
         self,
         spark: SparkSession,
         table_root: str,
-        checkpoint_root: str,
+        checkpoint_root: str | None = None,
         config: EngineConfig | None = None,
         dedup_window_batches: int = 4,
         table: "TableSink | None" = None,
@@ -883,7 +918,22 @@ class CdcEngine:
         # (plans/sink.py); IceliteTable is the jar-free default backend,
         # IcebergSink the documented cluster swap
         self.table: "TableSink" = table or IceliteTable(spark, table_root)
-        self.checkpoint = Checkpoint(spark, checkpoint_root, dedup_window_batches)
+        # no root: the engine serves only commands that read no checkpoint
+        # state (compact, verify, reads)
+        self._checkpoint = (
+            Checkpoint(spark, checkpoint_root, dedup_window_batches)
+            if checkpoint_root is not None
+            else None
+        )
+
+    @property
+    def checkpoint(self) -> Checkpoint:
+        if self._checkpoint is None:
+            raise ValueError(
+                "this engine has no checkpoint root; applying, running or "
+                "replaying batches needs one"
+            )
+        return self._checkpoint
 
     # ----------------------------------------------------------------- setup
     @classmethod
@@ -1006,6 +1056,11 @@ class CdcEngine:
                         1,
                     ).otherwise(0)
                 ).alias("nullk"),
+                # LSN range of the valid events: the dedup anti-join reads
+                # only the window batches whose range meets it, and the
+                # commit records it for later batches (plans/checkpoint.py)
+                F.min(F.when(~malformed, F.col("lsn"))).alias("llo"),
+                F.max(F.when(~malformed, F.col("lsn"))).alias("lhi"),
             )
             .collect()
         )
@@ -1048,13 +1103,18 @@ class CdcEngine:
         payload_cols = [f.name for f in evolved.fields]
 
         # 3. cross-batch exactly-once filters: boundary + bounded recent-LSN
-        # anti-join (within-batch duplicate LSNs are folded into the merge
-        # window — no separate dropDuplicates shuffle)
+        # anti-join over the window batches whose LSN range meets this
+        # batch's — an in-order log's batch meets none, and runs no join
+        # (within-batch duplicate LSNs are folded into the merge window —
+        # no separate dropDuplicates shuffle)
         events = aligned
+        lsn_range = _lsn_range(bucket_rows)
         boundary = self.checkpoint.boundary_lsn(batch_id)
         if boundary >= 0:
             events = events.filter(F.col("lsn") > boundary)
-        recent = self.checkpoint.recent_lsns_df(batch_id)
+        recent = None
+        if lsn_range is not None:
+            recent = self.checkpoint.recent_lsns_df(batch_id, *lsn_range)
         if recent is not None:
             events = events.join(recent, "lsn", "left_anti")
 
@@ -1083,7 +1143,8 @@ class CdcEngine:
                 rpt.deduped = rpt.events_read - rpt.quarantined
                 rpt.rows_after = rpt.rows_before
                 self._commit(
-                    rpt, {}, evolved, snap.get("table_digest"), events.select("lsn")
+                    rpt, {}, evolved, snap.get("table_digest"), events.select("lsn"),
+                    lsn_range=lsn_range,
                 )
                 return rpt
 
@@ -1107,16 +1168,17 @@ class CdcEngine:
                     salt_hot_keys(events, hot, n_salt=SKEW_SALT)
                 ).drop("_salt")
 
+            batch_bytes = _local_bytes(changes_raw.inputFiles())
             if cfg.write_mode == "mor":
                 return self._mor_tail(
                     events, evolved, payload_cols, num_buckets, plan,
-                    old_entries, rpt, lsn_pool,
+                    old_entries, rpt, lsn_pool, batch_bytes, lsn_range,
                 )
 
             # 4-6. execute: the COW merge runs once, inside the file write
             part_rows, files, append_parts, stats, lsn_fut = self._cow_execute(
                 events, plan, old_entries, evolved, payload_cols, num_buckets,
-                checksum_cols, rpt, lsn_pool,
+                checksum_cols, rpt, lsn_pool, batch_bytes,
             )
             # 7. account: ledger, manifest, then snapshot + checkpoint marker.
             # Appended partitions KEEP their old live rows (incumbent files
@@ -1139,6 +1201,7 @@ class CdcEngine:
             self._commit(
                 rpt, replaced, evolved,
                 _manifest_digest({**old_entries, **replaced}), lsn_fut, stats["mx"],
+                lsn_range,
             )
         finally:
             lsn_pool.shutdown(wait=True)
@@ -1157,6 +1220,7 @@ class CdcEngine:
         checksum_cols: list[str],
         rpt: BatchReport,
         lsn_pool: ThreadPoolExecutor,
+        batch_bytes: int | None,
     ):
         """Run the COW batch's jobs: the merge write, the two-stream
         survivor pass and the partition-stats read-back. Returns the
@@ -1167,7 +1231,7 @@ class CdcEngine:
         ts_parts = plan.parts(TWO_STREAM)
         to_write, obs, pobs = self._cow_merge(
             events, plan, old_entries, evolved, payload_cols, num_buckets,
-            checksum_cols, batch_id,
+            checksum_cols, batch_id, batch_bytes,
         )
         rpt.tick("plan")
         # the dedup-window LSN set is independent of the merge output, so
@@ -1222,6 +1286,7 @@ class CdcEngine:
         num_buckets: int,
         checksum_cols: list[str],
         batch_id: int,
+        batch_bytes: int | None,
     ) -> tuple[DataFrame, Observation, Observation | None]:
         """The COW merge pipeline, ready to write: incumbent ∪ events
         through ``build_merge_ranking`` — one wide shuffle on
@@ -1252,10 +1317,17 @@ class CdcEngine:
                     self._read_physical(old_entries, ts_parts, evolved), evolved
                 )
             )
+        scanned = [
+            f
+            for p in plan.parts(FUSED) + ts_parts
+            if p in old_entries
+            for f in old_entries[p]["files"]
+        ]
         evt = _event_rows(events, num_buckets, payload_cols, "1 AS _src")
         ranked = build_merge_ranking(
             incumbent.unionByName(evt), plan.hot_buckets, SKEW_SALT,
             incumbent=True, inc_any=bool(ts_parts),
+            tasks=self._merge_tasks(plan, scanned, batch_bytes),
         )
         obs = Observation(f"batch-{batch_id}")
         obs_exprs = list(_LEDGER_OBS)
@@ -1393,13 +1465,16 @@ class CdcEngine:
         digest: str | None,
         seen,
         max_lsn: int | None = None,
+        lsn_range: tuple[int, int] | None = None,
     ) -> None:
         """Commit tail of every apply route, in crash-safe order: ledger,
         table snapshot (atomic pointer swap), dedup state, checkpoint
         marker — markers are written last and the merge is idempotent, so
         a crash at any boundary resumes cleanly. ``seen`` is the in-flight
         background seen-LSN write (a Future), or, for an empty batch with
-        no write to overlap, the LSN frame to write now."""
+        no write to overlap, the LSN frame to write now. ``lsn_range``, the
+        batch's valid-event LSN range (``_lsn_range``), is recorded in the
+        marker."""
         rpt.table_digest = digest
         rpt.wall_ms = rpt.elapsed_ms()
         ledger = rpt.ledger(self.config.selected_metrics)
@@ -1407,11 +1482,14 @@ class CdcEngine:
         sid = self.table.commit(replaced, schema, rpt.batch_id, ledger, digest)
         rpt.snapshot_id = sid
         if isinstance(seen, DataFrame):
-            self.checkpoint.commit_batch(rpt.batch_id, ledger, sid, seen, -1)
+            self.checkpoint.commit_batch(
+                rpt.batch_id, ledger, sid, seen, -1, lsn_range
+            )
         else:
             seen.result()  # dedup state durable before the marker
             self.checkpoint.mark_committed(
-                rpt.batch_id, ledger, sid, max_lsn if max_lsn is not None else -1
+                rpt.batch_id, ledger, sid, max_lsn if max_lsn is not None else -1,
+                lsn_range,
             )
         rpt.tick("commit+seen")
 
@@ -1426,6 +1504,8 @@ class CdcEngine:
         old_entries: dict,
         rpt: BatchReport,
         lsn_pool: ThreadPoolExecutor,
+        batch_bytes: int | None,
+        lsn_range: tuple[int, int] | None,
     ) -> BatchReport:
         """Merge-on-read write path (``EngineConfig.write_mode='mor'``).
 
@@ -1468,7 +1548,8 @@ class CdcEngine:
         if inc_files:
             rows = _narrow_incumbent(self._scan(phys, inc_files), evolved).unionByName(rows)
         ranked = build_merge_ranking(
-            rows, plan.hot_buckets, SKEW_SALT, incumbent=True, unresolved=True
+            rows, plan.hot_buckets, SKEW_SALT, incumbent=True, unresolved=True,
+            tasks=self._merge_tasks(plan, inc_files, batch_bytes),
         )
         obs = Observation(f"mor-batch-{batch_id}")
         winners = ranked.observe(obs, *[F.expr(s) for s in _LEDGER_OBS]).filter(
@@ -1509,7 +1590,7 @@ class CdcEngine:
             p = int(r[PART_COL])
             old = old_entries.get(p, {})
             lal = r["last_applied_lsn"]
-            lsns = (old.get("last_applied_lsn"), int(lal) if lal is not None else None)
+            lals = (old.get("last_applied_lsn"), int(lal) if lal is not None else None)
             replaced[p] = {
                 "files": list(old.get("files") or []),
                 "delta_files": list(old.get("delta_files") or []) + files[p],
@@ -1518,9 +1599,9 @@ class CdcEngine:
                 # checksum/digest undefined while deltas are pending;
                 # compact() restores them (and the table digest)
                 "checksum": None,
-                "last_applied_lsn": max((v for v in lsns if v is not None), default=None),
+                "last_applied_lsn": max((v for v in lals if v is not None), default=None),
             }
-        self._commit(rpt, replaced, evolved, None, lsn_fut, stats["mx"])
+        self._commit(rpt, replaced, evolved, None, lsn_fut, stats["mx"], lsn_range)
 
         # auto-compaction policy: fold deltas back into base for any
         # TOUCHED partition whose accumulated delta bytes crossed
@@ -1808,6 +1889,32 @@ class CdcEngine:
         return self.spark.read.schema(schema).parquet(
             *[os.path.join(self.table.root, f) for f in rel_paths]
         )
+
+    def _merge_tasks(
+        self, plan: BatchPlan, scanned: list[str], batch_bytes: int | None
+    ) -> int | None:
+        """Reduce-task count of the merge exchange, or None to leave it to
+        AQE (the rule is on ``build_merge_ranking``). AQE does not start a
+        new coalesced partition until the current one reaches
+        ``spark.sql.adaptive.coalescePartitions.minPartitionSize``, so a
+        merge whose input — the on-disk bytes of the incumbent ``scanned``
+        files plus the batch's input files (``batch_bytes``, None when not
+        local) — is below task slots × that floor gets fewer reduce tasks
+        than slots. A bucket still lands in one task, so each touched
+        partition still gets one file."""
+        if plan.hot_buckets or batch_bytes is None:
+            return None
+        sc = self.spark.sparkContext
+        slots = sc.defaultParallelism
+        floor = sc._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+            self.spark.conf.get("spark.sql.adaptive.coalescePartitions.minPartitionSize")
+        )
+        size = batch_bytes + sum(
+            os.path.getsize(os.path.join(self.table.root, f)) for f in scanned
+        )
+        if size >= slots * floor:
+            return None
+        return min(len(plan.touched), slots)
 
     def _read_physical(
         self, entries: dict, partitions: list[int], logical: StructType

@@ -5,7 +5,9 @@ stateful progress counters + duration attributes, ir:508-513,606-613, and
 of the conservation ledger, docs/report-schema-v2.md:116-137):
 
 * ``batches/batch-{id}.json`` — the commit *marker* for a batch: ledger
-  row, committed snapshot id, cumulative ``max_lsn_seen``. Written last
+  row, committed snapshot id, cumulative ``max_lsn_seen``, and
+  ``lsn_lo``/``lsn_hi``, the [min, max] LSN of the batch's valid events
+  (both null when it had none). Written last
   (after the table snapshot swap), atomically; a batch whose marker exists
   is never re-processed. A crash between snapshot-swap and marker-write
   re-applies the batch on resume — safe because the LWW merge is
@@ -24,6 +26,20 @@ nothing proportional to history lives on the driver. Events older than
 the window that are NOT replays violate the window contract and are
 (documented, tested) dropped — size ``dedup_window_batches`` to the
 source's real replay/out-of-order horizon.
+
+Range pruning: the anti-join reads only the window batches whose recorded
+``[lsn_lo, lsn_hi]`` meets ``[max(lo, boundary + 1), hi]``, the new
+batch's valid-event range above the boundary. The recorded range is a
+superset of the batch's seen set, so a pruned batch holds no LSN the join
+could drop. A batch of an in-order log lies above every window batch, so
+it reads none and runs no join. A marker written before ranges were
+recorded is always read. The range only prunes; it never replaces the
+seen set. Even with count = max − min + 1 a batch's set need not be dense:
+two keys may share one LSN, leaving a hole the interval would claim was
+seen.
+
+Both directories are created by the first write, so opening a checkpoint
+that is never written (``compact``, ``verify``) leaves nothing on disk.
 """
 
 from __future__ import annotations
@@ -40,10 +56,10 @@ class Checkpoint:
         self.spark = spark
         self.root = root
         self.window = dedup_window_batches
+        # both directories are created by the first write, so an engine
+        # that never commits leaves no checkpoint behind
         self.batches_dir = os.path.join(root, "batches")
         self.recent_dir = os.path.join(root, "recent")
-        os.makedirs(self.batches_dir, exist_ok=True)
-        os.makedirs(self.recent_dir, exist_ok=True)
 
     # ---------------------------------------------------------------- state
     def _batch_path(self, batch_id: int) -> str:
@@ -53,6 +69,8 @@ class Checkpoint:
         return os.path.exists(self._batch_path(batch_id))
 
     def applied_batches(self) -> list[int]:
+        if not os.path.isdir(self.batches_dir):
+            return []
         out = []
         for name in os.listdir(self.batches_dir):
             if name.startswith("batch-") and name.endswith(".json"):
@@ -72,12 +90,24 @@ class Checkpoint:
             return -1
         return int(self.batch_record(max(eligible))["max_lsn_seen"])
 
-    def recent_lsns_df(self, batch_id: int) -> DataFrame | None:
-        """Union of seen-LSN sets for applied batches inside the window."""
+    def recent_lsns_df(self, batch_id: int, lo: int, hi: int) -> DataFrame | None:
+        """Union of the seen-LSN sets of the applied batches inside the
+        window that could hold an LSN of a batch whose valid events span
+        ``[lo, hi]``; None when none could."""
+        lo = max(lo, self.boundary_lsn(batch_id) + 1)  # the rest is filtered
+        if lo > hi:
+            return None
+
+        def meets(b: int) -> bool:
+            rec = self.batch_record(b)
+            if "lsn_lo" not in rec:  # committed before ranges were recorded
+                return True
+            return rec["lsn_lo"] is not None and rec["lsn_lo"] <= hi and rec["lsn_hi"] >= lo
+
         paths = [
             os.path.join(self.recent_dir, f"batch-{b:05d}.parquet")
             for b in self.applied_batches()
-            if batch_id - self.window < b < batch_id
+            if batch_id - self.window < b < batch_id and meets(b)
         ]
         paths = [p for p in paths if os.path.exists(p)]
         if not paths:
@@ -104,17 +134,24 @@ class Checkpoint:
         ledger: dict,
         snapshot_id: int,
         max_lsn_seen_batch: int,
+        lsn_range: tuple[int, int] | None,
     ) -> None:
         """Write the atomic commit marker (must be LAST: its existence
-        asserts the snapshot AND the dedup state are both durable)."""
+        asserts the snapshot AND the dedup state are both durable).
+        ``lsn_range`` is the [min, max] LSN of the batch's valid events,
+        or None when it had none."""
         prev = self.applied_batches()
         prev_max = int(self.batch_record(prev[-1])["max_lsn_seen"]) if prev else -1
+        lo, hi = lsn_range or (None, None)
         rec = {
             "batch_id": batch_id,
             "snapshot_id": snapshot_id,
             "ledger": ledger,
             "max_lsn_seen": max(prev_max, int(max_lsn_seen_batch)),
+            "lsn_lo": lo,
+            "lsn_hi": hi,
         }
+        os.makedirs(self.batches_dir, exist_ok=True)
         path = self._batch_path(batch_id)
         tmp = path + f".tmp-{uuid.uuid4().hex[:8]}"
         with open(tmp, "w") as f:
@@ -128,9 +165,12 @@ class Checkpoint:
         snapshot_id: int,
         seen_lsns: DataFrame,
         max_lsn_seen_batch: int,
+        lsn_range: tuple[int, int] | None,
     ) -> None:
         """Persist dedup state then the commit marker (marker last) —
         the serial composition of ``write_seen_lsns`` + ``mark_committed``
         for paths with nothing to overlap (empty batches, tests)."""
         self.write_seen_lsns(batch_id, seen_lsns)
-        self.mark_committed(batch_id, ledger, snapshot_id, max_lsn_seen_batch)
+        self.mark_committed(
+            batch_id, ledger, snapshot_id, max_lsn_seen_batch, lsn_range
+        )

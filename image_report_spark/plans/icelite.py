@@ -454,17 +454,13 @@ class IceliteTable:
             if p in old_entries and old_entries[p]["last_applied_lsn"] is not None
         }
         if hwm:
-            # per-partition high-water-mark filter via a small broadcast map
-            from pyspark.sql.functions import broadcast
-
-            hwm_df = self.spark.createDataFrame(
-                [(int(p), int(v)) for p, v in hwm.items()], f"{PART_COL} int, _hwm long"
-            )
-            df = (
-                df.join(broadcast(hwm_df), PART_COL, "left")
-                .filter(F.col("_hwm").isNull() | (F.col("_lsn") > F.col("_hwm")))
-                .drop("_hwm")
-            )
+            # per-partition high-water mark as a literal map in one parsed
+            # expression: no Python-built frame, no broadcast; a partition
+            # without a mark keeps every row, a NULL `_lsn` under a mark
+            # is dropped
+            marks = ", ".join(f"{int(p)}, {int(v)}L" for p, v in hwm.items())
+            mark = f"element_at(map({marks}), {PART_COL})"
+            df = df.filter(F.expr(f"{mark} IS NULL OR _lsn > {mark}"))
         return df
 
     def set_checksum_columns(self, cols: list[str]) -> None:

@@ -153,6 +153,31 @@ def test_verify_cli_exit_code_follows_report(spark, tmp_path, capsys):
     assert {m["partition"] for m in bad["mismatches"]} == {entry["partition"]}
 
 
+def test_compact_cli_needs_no_checkpoint(spark, tmp_path, capsys):
+    """Constructing an engine creates no checkpoint directory, and ``cli
+    compact`` folds a merge-on-read table's deltas without
+    ``--checkpoint``."""
+    import json
+
+    from image_report_spark.cli import main
+    from image_report_spark.engine import CdcEngine
+
+    log, tbl = str(tmp_path / "log"), str(tmp_path / "t")
+    assert main(["gen", "--out", log, "--seed", "4", "--convs", "10",
+                 "--max-turns", "4", "--batches", "2"]) == 0
+    args = ["--master", "local[2]", "--shuffle-partitions", "4"]
+    assert main(args + ["apply", "--table", tbl, "--log", log, "--write-mode", "mor",
+                        "--checkpoint", str(tmp_path / "cp"), "--buckets", "4"]) == 0
+    CdcEngine(spark, tbl, str(tmp_path / "cp2"))
+    assert not os.path.exists(tmp_path / "cp2")
+    with pytest.raises(ValueError, match="no checkpoint root"):
+        CdcEngine(spark, tbl).checkpoint
+    capsys.readouterr()
+    assert main(args + ["compact", "--table", tbl]) == 0
+    out = json.loads(capsys.readouterr().out)
+    assert out["compacted_partitions"] > 0 and out["table_digest"]
+
+
 def test_footer_schema_matches_spark_inference(spark, tmp_path):
     """The driver-side pyarrow footer read must produce the SAME schema the
     Spark parquet scan would infer — including the timestamp variant

@@ -128,3 +128,121 @@ def test_range_self_join_is_bucket_bounded(spark):
     assert "BroadcastNestedLoopJoin" not in plan and "CartesianProduct" not in plan
     keys_section = plan.split("Left keys")[1].split("Right keys")[0] if "Left keys" in plan else plan
     assert "bkt" in keys_section and "user_id" in keys_section
+
+
+def _merge_write_plans(spark, root, **cfg) -> tuple[list[str], object]:
+    """Apply the fused-route batches of tests/test_job_counts.py to a
+    fresh table and return the formatted plan of every frame batch 1
+    writes (the merge write first) and batch 1's report."""
+    from tests.test_job_counts import ROUTES, _batch_df
+
+    _, b0, b1 = ROUTES["fused"]
+    eng = CdcEngine.init(spark, f"{root}/t", f"{root}/cp",
+                         config=EngineConfig(num_buckets=8, **cfg))
+    eng.apply_batch(_batch_df(spark, f"{root}/b0.parquet", b0), 0)
+    plans, write = [], eng.table.write_partition_files
+
+    def spy(df, *a, **kw):
+        plans.append(_explain(df))
+        return write(df, *a, **kw)
+
+    eng.table.write_partition_files = spy
+    rpt = eng.apply_batch(_batch_df(spark, f"{root}/b1.parquet", b1), 1)
+    return plans, rpt
+
+
+def _exchanges(plan: str) -> list[str]:
+    """Arguments of each distinct Exchange node of a formatted plan."""
+    return re.findall(r"\(\d+\) Exchange\n(?:Input.*\n)?Arguments: (.*)", plan)
+
+
+def _normalized(plan: str, root: str) -> str:
+    """A plan with expression and plan ids, the table root and the data
+    files' attempt ids masked."""
+    plan = plan.replace(root, "<root>")
+    return re.sub(r"#\d+|plan_id=\d+|-[0-9a-f]{8}\.parquet", "#", plan)
+
+
+def test_small_merge_reduce_stage_gets_one_task_per_bucket(spark, tmp_path):
+    """Below task slots × AQE's minimum coalesced partition size, the merge
+    exchange has an explicit count — one task per touched bucket, up to
+    the slot count — which AQE leaves as is. COW and MOR alike."""
+    slots = spark.sparkContext.defaultParallelism
+    for mode in ("cow", "mor"):
+        plans, rpt = _merge_write_plans(spark, str(tmp_path / mode), write_mode=mode)
+        (ex,) = _exchanges(plans[0])
+        n = min(rpt.partitions_touched, slots)
+        assert re.fullmatch(rf"hashpartitioning\(_p#\d+, {n}\), REPARTITION_BY_NUM, .*", ex), ex
+        assert n > 1
+
+
+def test_merge_above_gate_or_hot_keeps_aqe_sizing(spark, tmp_path, monkeypatch):
+    """Above the gate, or with a hot bucket, the merge write's plan equals
+    the plan built with no reduce-task count at all."""
+    import image_report_spark.engine as engine_mod
+
+    key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+    build = engine_mod.build_merge_ranking
+
+    def countless(*a, tasks=None, **kw):
+        return build(*a, **kw)
+
+    for case in ("above_gate", "hot"):
+        with monkeypatch.context() as m:
+            if case == "hot":
+                m.setattr(engine_mod, "HOT_EVENTS", 0)
+            else:
+                spark.conf.set(key, "1b")
+            try:
+                got, _ = _merge_write_plans(spark, str(tmp_path / case / "a"))
+            finally:
+                spark.conf.unset(key)
+            m.setattr(engine_mod, "build_merge_ranking", countless)
+            want, _ = _merge_write_plans(spark, str(tmp_path / case / "b"))
+        (ex,) = _exchanges(got[0])
+        assert "REPARTITION_BY_COL" in ex and ("_salt" in ex) == (case == "hot"), ex
+        assert _normalized(got[0], str(tmp_path / case / "a")) == _normalized(
+            want[0], str(tmp_path / case / "b")
+        )
+
+
+def test_changes_between_filters_with_one_expression(spark, tmp_path):
+    """The per-partition high-water-mark filter of ``changes_between`` is
+    one column expression: its plan holds no Python-built frame and no
+    broadcast, and its rows equal the broadcast-joined mark table's on a
+    table with a partition the older snapshot did not hold."""
+    from pyspark.sql.functions import broadcast
+
+    from image_report_spark.plans.icelite import PART_COL
+    from tests.test_job_counts import _batch_df, _row
+
+    eng = CdcEngine.init(spark, str(tmp_path / "t"), str(tmp_path / "cp"),
+                         config=EngineConfig(num_buckets=8))
+    eng.apply_batch(_batch_df(spark, str(tmp_path / "b0.parquet"),
+                              [_row(i, i) for i in range(3)]), 0)
+    eng.apply_batch(_batch_df(spark, str(tmp_path / "b1.parquet"),
+                              [_row(100 + i, i, op="U", text="u", ts_off_s=60) for i in range(40)]), 1)
+    t = eng.table
+    old, new = t.snapshot(1), t.snapshot()
+    old_entries = {e["partition"]: e for e in old["manifest"]}
+    assert {e["partition"] for e in new["manifest"]} - set(old_entries)  # unmarked
+
+    got = t.changes_between(old["snapshot_id"])
+    plan = got._jdf.queryExecution().optimizedPlan().toString() + _executed_plan(got)
+    assert "LogicalRDD" not in plan and "BroadcastExchange" not in plan
+    # the previous form: the changed partitions' rows joined to a
+    # Python-built mark table by broadcast
+    changed = [e["partition"] for e in new["manifest"]
+               if old_entries.get(e["partition"], {}).get("files") != e["files"]]
+    marks = spark.createDataFrame(
+        [(p, e["last_applied_lsn"]) for p, e in old_entries.items() if p in changed],
+        f"{PART_COL} int, _hwm long",
+    )
+    want = (
+        t.read(partitions=changed, with_lineage=True)
+        .join(broadcast(marks), PART_COL, "left")
+        .filter(F.col("_hwm").isNull() | (F.col("_lsn") > F.col("_hwm")))
+        .drop("_hwm")
+    )
+    assert want.count() > 0
+    assert sorted(got.collect()) == sorted(want.select(*got.columns).collect())
