@@ -83,8 +83,6 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
 
     sp = sub.add_parser("compact", help="fold merge-on-read delta files into base files")
     sp.add_argument("--table", required=True)
-    sp.add_argument("--checkpoint", default=None,
-                    help="accepted and unused: compaction reads no checkpoint state")
     sp.add_argument("--partitions", type=int, nargs="*", default=None,
                     help="compact only these bucket ids (default: all dirty)")
 

@@ -34,7 +34,6 @@ import time
 import zlib
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
-from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
@@ -422,7 +421,7 @@ def build_mor_classification(
 #: per-partition routes of a COW batch (``BatchPlan.route``)
 APPEND, TWO_STREAM, FUSED = "append", "two_stream", "fused"
 
-#: hot threshold, read in two places. ``plan_batch`` counts a batch's
+#: hot threshold, read in three places. ``plan_batch`` counts a batch's
 #: valid events per BUCKET: a bucket above it is hot, and the merge window
 #: (``build_merge_ranking``) spreads its rows over ``SKEW_SALT`` sub-keys
 #: by ``pmod(xxhash64(conv_id, turn_idx), SKEW_SALT)``. The grouped
@@ -430,7 +429,9 @@ APPEND, TWO_STREAM, FUSED = "append", "two_stream", "fused"
 #: (``detect_hot_keys``): a conversation above it is salted by
 #: ``pmod(xxhash64(turn_idx), SKEW_SALT)`` (``salt_hot_keys``) before its
 #: applyInPandas groups. Either salt keeps every event of one key in one
-#: salted group, so per-key resolution is unchanged.
+#: salted group, so per-key resolution is unchanged. ``_merge_tasks``
+#: counts a merge's rows: at or below it the merge exchange gets an
+#: explicit reduce-task count (``build_merge_ranking``), above it AQE's.
 HOT_EVENTS = 100_000
 
 #: number of salt values a hot bucket or hot conversation fans out over
@@ -673,16 +674,21 @@ def build_merge_ranking(
 
     ``tasks``: the exchange's reduce-task count, which AQE does not
     coalesce. ``CdcEngine._merge_tasks`` passes min(touched buckets, task
-    slots) when the merge has no hot bucket and its input is below task
-    slots × ``spark.sql.adaptive.coalescePartitions.minPartitionSize``,
-    the range where AQE would coalesce the exchange onto fewer tasks than
-    slots — at perfbench's ``backlog_upsert`` shape (7.5 k-event batches,
-    8 buckets, 4 slots) onto one task that ran the window, the
+    slots) when the merge has no hot bucket and holds at most
+    ``HOT_EVENTS`` rows (valid batch events plus the incumbent rows it
+    scans). Below that size AQE coalesces the exchange onto fewer tasks
+    than slots — at perfbench's ``backlog_upsert`` shape (7.5 k-event
+    batches, 8 buckets, 4 slots) onto one task that ran the window, the
     observations and all 8 file writes. With the count, that workload's
     ``op_p50_ms`` fell 1680 → 1254 ms (10 of 10 pairs, together with the
-    dedup window's range pruning). Otherwise AQE sizes the exchange, and
-    parallelism comes from #buckets × salt: at 2 M-event batches an
-    explicit per-bucket placement lost to it (OPTIMIZATION_r06.md).
+    dedup window's range pruning). Above it AQE sizes the exchange by
+    bytes and wins, because the count hashes 8 buckets unevenly onto 4
+    tasks. Measured on a 4-vCPU VM (COW, 8 buckets, 7 order-alternated
+    pairs per shape): the count won at 60 k and 85 k merge rows (7/7,
+    6/7) and lost by 13–38 % at 105 k, 125 k and every shape from 180 k
+    to 1.5 M rows (at most 1/7). A 2 M-event batch has hot buckets and
+    keeps AQE's plan with #buckets × salt parallelism; an explicit
+    per-bucket placement lost to it there (OPTIMIZATION_r06.md).
 
     Built as SQL text: one py4j round-trip for the whole window block;
     the single-Exchange plans are pinned in tests/test_plans.py and
@@ -879,18 +885,6 @@ def _manifest_entry(stats, files: list[str], ck_id: str, old: dict | None = None
 def _manifest_digest(entries: dict) -> str:
     """Table digest over a full manifest (partition -> entry)."""
     return table_digest([(p, e["live_rows"], e["checksum"]) for p, e in entries.items()])
-
-
-def _local_bytes(uris: list[str]) -> int | None:
-    """On-disk bytes of the files a DataFrame reads (its ``inputFiles()``),
-    or None when one of them is not on the local file system."""
-    total = 0
-    for u in uris:
-        parsed = urlparse(u)
-        if parsed.scheme not in ("", "file"):
-            return None
-        total += os.path.getsize(unquote(parsed.path))
-    return total
 
 
 def _lsn_range(bucket_rows: list) -> tuple[int, int] | None:
@@ -1114,7 +1108,9 @@ class CdcEngine:
             events = events.filter(F.col("lsn") > boundary)
         recent = None
         if lsn_range is not None:
-            recent = self.checkpoint.recent_lsns_df(batch_id, *lsn_range)
+            recent = self.checkpoint.recent_lsns_df(
+                batch_id, max(lsn_range[0], boundary + 1), lsn_range[1]
+            )
         if recent is not None:
             events = events.join(recent, "lsn", "left_anti")
 
@@ -1168,17 +1164,16 @@ class CdcEngine:
                     salt_hot_keys(events, hot, n_salt=SKEW_SALT)
                 ).drop("_salt")
 
-            batch_bytes = _local_bytes(changes_raw.inputFiles())
             if cfg.write_mode == "mor":
                 return self._mor_tail(
                     events, evolved, payload_cols, num_buckets, plan,
-                    old_entries, rpt, lsn_pool, batch_bytes, lsn_range,
+                    old_entries, rpt, lsn_pool, lsn_range,
                 )
 
             # 4-6. execute: the COW merge runs once, inside the file write
             part_rows, files, append_parts, stats, lsn_fut = self._cow_execute(
                 events, plan, old_entries, evolved, payload_cols, num_buckets,
-                checksum_cols, rpt, lsn_pool, batch_bytes,
+                checksum_cols, rpt, lsn_pool,
             )
             # 7. account: ledger, manifest, then snapshot + checkpoint marker.
             # Appended partitions KEEP their old live rows (incumbent files
@@ -1220,7 +1215,6 @@ class CdcEngine:
         checksum_cols: list[str],
         rpt: BatchReport,
         lsn_pool: ThreadPoolExecutor,
-        batch_bytes: int | None,
     ):
         """Run the COW batch's jobs: the merge write, the two-stream
         survivor pass and the partition-stats read-back. Returns the
@@ -1231,7 +1225,7 @@ class CdcEngine:
         ts_parts = plan.parts(TWO_STREAM)
         to_write, obs, pobs = self._cow_merge(
             events, plan, old_entries, evolved, payload_cols, num_buckets,
-            checksum_cols, batch_id, batch_bytes,
+            checksum_cols, batch_id,
         )
         rpt.tick("plan")
         # the dedup-window LSN set is independent of the merge output, so
@@ -1286,7 +1280,6 @@ class CdcEngine:
         num_buckets: int,
         checksum_cols: list[str],
         batch_id: int,
-        batch_bytes: int | None,
     ) -> tuple[DataFrame, Observation, Observation | None]:
         """The COW merge pipeline, ready to write: incumbent ∪ events
         through ``build_merge_ranking`` — one wide shuffle on
@@ -1317,17 +1310,11 @@ class CdcEngine:
                     self._read_physical(old_entries, ts_parts, evolved), evolved
                 )
             )
-        scanned = [
-            f
-            for p in plan.parts(FUSED) + ts_parts
-            if p in old_entries
-            for f in old_entries[p]["files"]
-        ]
         evt = _event_rows(events, num_buckets, payload_cols, "1 AS _src")
         ranked = build_merge_ranking(
             incumbent.unionByName(evt), plan.hot_buckets, SKEW_SALT,
             incumbent=True, inc_any=bool(ts_parts),
-            tasks=self._merge_tasks(plan, scanned, batch_bytes),
+            tasks=self._merge_tasks(plan, old_entries, plan.parts(FUSED) + ts_parts),
         )
         obs = Observation(f"batch-{batch_id}")
         obs_exprs = list(_LEDGER_OBS)
@@ -1504,7 +1491,6 @@ class CdcEngine:
         old_entries: dict,
         rpt: BatchReport,
         lsn_pool: ThreadPoolExecutor,
-        batch_bytes: int | None,
         lsn_range: tuple[int, int] | None,
     ) -> BatchReport:
         """Merge-on-read write path (``EngineConfig.write_mode='mor'``).
@@ -1549,7 +1535,7 @@ class CdcEngine:
             rows = _narrow_incumbent(self._scan(phys, inc_files), evolved).unionByName(rows)
         ranked = build_merge_ranking(
             rows, plan.hot_buckets, SKEW_SALT, incumbent=True, unresolved=True,
-            tasks=self._merge_tasks(plan, inc_files, batch_bytes),
+            tasks=self._merge_tasks(plan, old_entries, plan.touched),
         )
         obs = Observation(f"mor-batch-{batch_id}")
         winners = ranked.observe(obs, *[F.expr(s) for s in _LEDGER_OBS]).filter(
@@ -1590,7 +1576,7 @@ class CdcEngine:
             p = int(r[PART_COL])
             old = old_entries.get(p, {})
             lal = r["last_applied_lsn"]
-            lals = (old.get("last_applied_lsn"), int(lal) if lal is not None else None)
+            lsns = (old.get("last_applied_lsn"), int(lal) if lal is not None else None)
             replaced[p] = {
                 "files": list(old.get("files") or []),
                 "delta_files": list(old.get("delta_files") or []) + files[p],
@@ -1599,7 +1585,7 @@ class CdcEngine:
                 # checksum/digest undefined while deltas are pending;
                 # compact() restores them (and the table digest)
                 "checksum": None,
-                "last_applied_lsn": max((v for v in lals if v is not None), default=None),
+                "last_applied_lsn": max((v for v in lsns if v is not None), default=None),
             }
         self._commit(rpt, replaced, evolved, None, lsn_fut, stats["mx"], lsn_range)
 
@@ -1891,30 +1877,21 @@ class CdcEngine:
         )
 
     def _merge_tasks(
-        self, plan: BatchPlan, scanned: list[str], batch_bytes: int | None
+        self, plan: BatchPlan, old_entries: dict, scanned: list[int]
     ) -> int | None:
         """Reduce-task count of the merge exchange, or None to leave it to
-        AQE (the rule is on ``build_merge_ranking``). AQE does not start a
-        new coalesced partition until the current one reaches
-        ``spark.sql.adaptive.coalescePartitions.minPartitionSize``, so a
-        merge whose input — the on-disk bytes of the incumbent ``scanned``
-        files plus the batch's input files (``batch_bytes``, None when not
-        local) — is below task slots × that floor gets fewer reduce tasks
-        than slots. A bucket still lands in one task, so each touched
-        partition still gets one file."""
-        if plan.hot_buckets or batch_bytes is None:
-            return None
-        sc = self.spark.sparkContext
-        slots = sc.defaultParallelism
-        floor = sc._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-            self.spark.conf.get("spark.sql.adaptive.coalescePartitions.minPartitionSize")
+        AQE (the rule and its measurement are on ``build_merge_ranking``):
+        min(touched buckets, task slots) when no bucket is hot and the
+        merge's rows — the batch's valid events plus the incumbent rows of
+        the ``scanned`` partitions, both known before it runs — are at
+        most ``HOT_EVENTS``. A bucket still lands in one task, so each
+        touched partition still gets one file."""
+        rows = sum(plan.valid.values()) + sum(
+            int(old_entries[p]["row_count"]) for p in scanned if p in old_entries
         )
-        size = batch_bytes + sum(
-            os.path.getsize(os.path.join(self.table.root, f)) for f in scanned
-        )
-        if size >= slots * floor:
+        if plan.hot_buckets or rows > HOT_EVENTS:
             return None
-        return min(len(plan.touched), slots)
+        return min(len(plan.touched), self.spark.sparkContext.defaultParallelism)
 
     def _read_physical(
         self, entries: dict, partitions: list[int], logical: StructType

@@ -92,9 +92,8 @@ class Checkpoint:
 
     def recent_lsns_df(self, batch_id: int, lo: int, hi: int) -> DataFrame | None:
         """Union of the seen-LSN sets of the applied batches inside the
-        window that could hold an LSN of a batch whose valid events span
-        ``[lo, hi]``; None when none could."""
-        lo = max(lo, self.boundary_lsn(batch_id) + 1)  # the rest is filtered
+        window that could hold an LSN of a batch whose valid events above
+        the boundary span ``[lo, hi]``; None when none could."""
         if lo > hi:
             return None
 

@@ -156,7 +156,7 @@ def test_verify_cli_exit_code_follows_report(spark, tmp_path, capsys):
 def test_compact_cli_needs_no_checkpoint(spark, tmp_path, capsys):
     """Constructing an engine creates no checkpoint directory, and ``cli
     compact`` folds a merge-on-read table's deltas without
-    ``--checkpoint``."""
+    ``--checkpoint``, which it no longer accepts."""
     import json
 
     from image_report_spark.cli import main
@@ -172,6 +172,8 @@ def test_compact_cli_needs_no_checkpoint(spark, tmp_path, capsys):
     assert not os.path.exists(tmp_path / "cp2")
     with pytest.raises(ValueError, match="no checkpoint root"):
         CdcEngine(spark, tbl).checkpoint
+    with pytest.raises(SystemExit):
+        parse_args(["compact", "--table", tbl, "--checkpoint", "cp"])
     capsys.readouterr()
     assert main(args + ["compact", "--table", tbl]) == 0
     out = json.loads(capsys.readouterr().out)

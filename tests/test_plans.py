@@ -130,10 +130,12 @@ def test_range_self_join_is_bucket_bounded(spark):
     assert "bkt" in keys_section and "user_id" in keys_section
 
 
-def _merge_write_plans(spark, root, **cfg) -> tuple[list[str], object]:
+def _merge_write_plans(spark, root, persist=False, **cfg) -> tuple[list[str], object]:
     """Apply the fused-route batches of tests/test_job_counts.py to a
     fresh table and return the formatted plan of every frame batch 1
-    writes (the merge write first) and batch 1's report."""
+    writes (the merge write first) and batch 1's report. ``persist``
+    hands batch 1 over as a persisted frame, which reads no input files,
+    as the streaming tail does."""
     from tests.test_job_counts import ROUTES, _batch_df
 
     _, b0, b1 = ROUTES["fused"]
@@ -147,7 +149,11 @@ def _merge_write_plans(spark, root, **cfg) -> tuple[list[str], object]:
         return write(df, *a, **kw)
 
     eng.table.write_partition_files = spy
-    rpt = eng.apply_batch(_batch_df(spark, f"{root}/b1.parquet", b1), 1)
+    batch = _batch_df(spark, f"{root}/b1.parquet", b1)
+    if persist:
+        batch = batch.persist()
+    rpt = eng.apply_batch(batch, 1)
+    batch.unpersist()
     return plans, rpt
 
 
@@ -164,12 +170,15 @@ def _normalized(plan: str, root: str) -> str:
 
 
 def test_small_merge_reduce_stage_gets_one_task_per_bucket(spark, tmp_path):
-    """Below task slots × AQE's minimum coalesced partition size, the merge
-    exchange has an explicit count — one task per touched bucket, up to
-    the slot count — which AQE leaves as is. COW and MOR alike."""
+    """A merge of at most ``HOT_EVENTS`` rows without a hot bucket gets an
+    explicit exchange count — one task per touched bucket, up to the slot
+    count — which AQE leaves as is. COW and MOR alike, and a persisted
+    batch, whose size is known from the pre-pass, like a file-backed one."""
     slots = spark.sparkContext.defaultParallelism
-    for mode in ("cow", "mor"):
-        plans, rpt = _merge_write_plans(spark, str(tmp_path / mode), write_mode=mode)
+    for mode, persist in (("cow", False), ("mor", False), ("cow", True)):
+        plans, rpt = _merge_write_plans(
+            spark, str(tmp_path / f"{mode}-{persist}"), persist, write_mode=mode
+        )
         (ex,) = _exchanges(plans[0])
         n = min(rpt.partitions_touched, slots)
         assert re.fullmatch(rf"hashpartitioning\(_p#\d+, {n}\), REPARTITION_BY_NUM, .*", ex), ex
@@ -178,27 +187,25 @@ def test_small_merge_reduce_stage_gets_one_task_per_bucket(spark, tmp_path):
 
 def test_merge_above_gate_or_hot_keeps_aqe_sizing(spark, tmp_path, monkeypatch):
     """Above the gate, or with a hot bucket, the merge write's plan equals
-    the plan built with no reduce-task count at all."""
+    the plan built with no reduce-task count at all — for a persisted
+    batch too."""
     import image_report_spark.engine as engine_mod
 
-    key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
     build = engine_mod.build_merge_ranking
 
     def countless(*a, tasks=None, **kw):
         return build(*a, **kw)
 
-    for case in ("above_gate", "hot"):
+    for case in ("above_gate", "above_gate_persisted", "hot"):
+        persist = case.endswith("persisted")
         with monkeypatch.context() as m:
-            if case == "hot":
-                m.setattr(engine_mod, "HOT_EVENTS", 0)
-            else:
-                spark.conf.set(key, "1b")
-            try:
-                got, _ = _merge_write_plans(spark, str(tmp_path / case / "a"))
-            finally:
-                spark.conf.unset(key)
+            # batch 1 holds 8 events, so at 8 no bucket is hot, yet the
+            # merge, which also scans the touched buckets' incumbent
+            # rows, holds more than 8 rows
+            m.setattr(engine_mod, "HOT_EVENTS", 0 if case == "hot" else 8)
+            got, _ = _merge_write_plans(spark, str(tmp_path / case / "a"), persist)
             m.setattr(engine_mod, "build_merge_ranking", countless)
-            want, _ = _merge_write_plans(spark, str(tmp_path / case / "b"))
+            want, _ = _merge_write_plans(spark, str(tmp_path / case / "b"), persist)
         (ex,) = _exchanges(got[0])
         assert "REPARTITION_BY_COL" in ex and ("_salt" in ex) == (case == "hot"), ex
         assert _normalized(got[0], str(tmp_path / case / "a")) == _normalized(
